@@ -23,9 +23,9 @@ import scala.jdk.CollectionConverters._
   * per partition, doubling stage read IO (VERDICT "What's wrong" #5).
   *
   * `chunkRows` reproduces the reference's chunked partitioned sink
-  * (fuzzy_spark2.py:302-332): repartition to
-  * clamp(ceil(rows/chunk), 256, 2048), tag `spark_partition_id()` as
-  * `__pid__`, write partitionBy("__pid__"), snappy.
+  * (fuzzy_spark2.py:302-332) with a per-core floor in place of its 256
+  * (S6): repartition to min(max(defaultParallelism, ceil(rows/chunk)),
+  * 2048), tag `spark_partition_id()` as `__pid__`, partitionBy, snappy.
   *
   * Snapshot semantics are Iceberg's, not just Iceberg-flavored: a
   * recompute ARCHIVES the outgoing snapshot (data + manifest) instead of
@@ -68,18 +68,29 @@ class CheckpointStore(
     * recomputed) — summary metadata only. */
   private var reused: Set[String] = Set.empty
 
-  private def readManifest(name: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val p = manifestPath(name)
+  private def readManifest(name: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+    readJson(manifestPath(name))
+
+  private def readJson(p: Path): Option[com.fasterxml.jackson.databind.JsonNode] =
     if (!fs.exists(p)) None
-    else
-      try {
-        val in = fs.open(p)
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        in.close()
-        Some(mapper.readTree(bytes))
-      } catch { case _: Throwable => None }
-  }
+    else try {
+      val in = fs.open(p)
+      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+      in.readFully(bytes); in.close()
+      Some(mapper.readTree(bytes))
+    } catch { case _: Throwable => None }
+
+  /** The data dir holds exactly the manifest's files at their recorded
+    * byte sizes. A manifest without the per-file size map is a legacy
+    * format that cannot be validated, so it never matches. */
+  private def dataMatches(name: String, node: com.fasterxml.jackson.databind.JsonNode): Boolean =
+    node.has("data_files") && dataFiles(name).map(f => f.getPath.getName -> f.getLen).toMap ==
+      node.get("data_files").fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+
+  /** Total committed bytes a manifest records; -1 for a legacy manifest. */
+  private def manifestBytes(node: com.fasterxml.jackson.databind.JsonNode): Long =
+    if (!node.has("data_files")) -1L
+    else node.get("data_files").properties().asScala.map(_.getValue.asLong()).sum
 
   /** Recursively list committed parquet data files of a stage. */
   private def dataFiles(name: String): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -100,16 +111,9 @@ class CheckpointStore(
         // validate the data dir against the manifest before trusting it: a
         // partially deleted OR in-place-truncated stage must recompute,
         // not resume (VERDICT r2 #7 — file COUNT alone missed same-count
-        // truncation). A manifest without the per-file size map is a
-        // legacy format we can't validate — treat as not committed
-        // (ADVICE r2: expected<0 used to skip validation entirely).
-        node.has("data_files") && {
-          val expected = node.get("data_files").fields().asScala
-            .map(e => e.getKey -> e.getValue.asLong()).toMap
-          val actual = dataFiles(name)
-            .map(f => f.getPath.getName -> f.getLen).toMap
-          actual == expected
-        }
+        // truncation); a legacy manifest is not committed (ADVICE r2:
+        // expected<0 used to skip validation entirely).
+        dataMatches(name, node)
       }
     }
 
@@ -119,14 +123,13 @@ class CheckpointStore(
 
   /** Commit-or-reuse a stage. `compute` runs only when no valid manifest
     * exists. `chunkRows` switches to the reference's chunked partitioned
-    * sink layout (count → clamp(ceil(rows/chunk), 256, 2048) partitions →
-    * `__pid__` partitionBy). */
+    * sink layout (count → min(max(defaultParallelism, ceil(rows/chunk)),
+    * chunkMaxPartitions) partitions → `__pid__` partitionBy). */
   def stage(
       name: String,
       repartitionTo: Option[Int] = None,
       chunkRows: Option[Long] = None,
-      chunkMaxPartitions: Int = 2048,
-      chunkMinPartitions: Int = 256)(compute: => DataFrame): DataFrame = {
+      chunkMaxPartitions: Int = 2048)(compute: => DataFrame): DataFrame = {
     if (isCommitted(name)) {
       committed = committed :+ name
       reused = reused + name
@@ -148,8 +151,8 @@ class CheckpointStore(
         // persist so compute isn't paid twice (fuzzy_spark2.py:302-332)
         val cached = df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val rows = cached.count()
-        val parts = math.max(chunkMinPartitions,
-          math.min((rows + chunk - 1) / chunk, chunkMaxPartitions.toLong)).toInt
+        val parts = math.min(chunkMaxPartitions.toLong, math.max(
+          spark.sparkContext.defaultParallelism.toLong, (rows + chunk - 1) / chunk)).toInt
         format.writeChunked(cached, dataPath(name), parts)
         cached.unpersist(blocking = false)
       case None =>
@@ -170,13 +173,7 @@ class CheckpointStore(
   private def archiveCurrent(name: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
     val prev = readManifest(name)
     val prevId = prev.filter(_.has("snapshot_id")).map(_.get("snapshot_id").asText())
-    val prevValid = prev.exists { node =>
-      node.has("data_files") && {
-        val expected = node.get("data_files").fields().asScala
-          .map(e => e.getKey -> e.getValue.asLong()).toMap
-        dataFiles(name).map(f => f.getPath.getName -> f.getLen).toMap == expected
-      }
-    }
+    val prevValid = prev.exists(dataMatches(name, _))
     if (prevValid && prevId.isDefined) {
       val archive = new Path(s"${snapshotsDir(name)}/${prevId.get}")
       fs.mkdirs(archive.getParent)
@@ -253,16 +250,12 @@ class CheckpointStore(
         .sorted
     val rows = names.flatMap { n =>
       readManifest(n).map { node =>
-        val bytes =
-          if (node.has("data_files"))
-            node.get("data_files").properties().asScala.map(_.getValue.asLong()).sum
-          else -1L
         (node.get("stage").asText(),
           node.get("snapshot_id").asText(),
           node.get("config_hash").asText(),
           node.get("rows").asLong(),
           if (node.has("files")) node.get("files").asLong() else -1L,
-          bytes,
+          manifestBytes(node),
           node.get("wall_sec").asDouble(),
           node.get("lineage").elements().asScala.map(_.asText()).toSeq)
       }
@@ -290,10 +283,7 @@ class CheckpointStore(
         val o = arr.addObject()
         o.put("stage", name)
         o.put("rows", m.get("rows").asLong())
-        o.put("bytes",
-          if (m.has("data_files"))
-            m.get("data_files").properties().asScala.map(_.getValue.asLong()).sum
-          else -1L)
+        o.put("bytes", manifestBytes(m))
         o.put("wall_sec",
           if (m.has("wall_sec")) m.get("wall_sec").asDouble() else -1.0)
         o.put("snapshot_id", m.get("snapshot_id").asText())
@@ -321,15 +311,13 @@ class CheckpointStore(
       if (node.has("committed_at_ms")) node.get("committed_at_ms").asLong() else -1L,
       node.get("config_hash").asText(),
       node.get("rows").asLong(),
-      if (node.has("data_files"))
-        node.get("data_files").properties().asScala.map(_.getValue.asLong()).sum
-      else -1L,
+      manifestBytes(node),
       current)
     val sd = new Path(snapshotsDir(name))
     val archived =
       if (!fs.exists(sd)) Seq.empty
       else fs.listStatus(sd).toSeq.filter(_.isDirectory).flatMap { d =>
-        readSnapshotManifest(new Path(d.getPath, "manifest.json"))
+        readJson(new Path(d.getPath, "manifest.json"))
           .map(row(_, current = false))
       }
     val all = archived ++ readManifest(name).map(row(_, current = true)).toSeq
@@ -448,23 +436,13 @@ class CheckpointStore(
     val sd = new Path(snapshotsDir(name))
     if (fs.exists(sd)) fs.listStatus(sd).filter(_.isDirectory).foreach { d =>
       val mp = new Path(d.getPath, "manifest.json")
-      readSnapshotManifest(mp) match {
+      readJson(mp) match {
         case Some(m) => sweep(new Path(d.getPath, "data"), listed(m))
         case None => fs.delete(d.getPath, true); deleted += d.getPath.toString
       }
     }
     deleted.toSeq
   }
-
-  private def readSnapshotManifest(
-      mp: Path): Option[com.fasterxml.jackson.databind.JsonNode] =
-    if (!fs.exists(mp)) None
-    else try {
-      val in = fs.open(mp)
-      val bytes = new Array[Byte](fs.getFileStatus(mp).getLen.toInt)
-      in.readFully(bytes); in.close()
-      Some(mapper.readTree(bytes))
-    } catch { case _: Throwable => None }
 
   /** Manifest of a committed stage, for tests / metrics reporting. */
   def manifest(name: String): Option[Map[String, Any]] =

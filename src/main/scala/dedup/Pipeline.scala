@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * table, so every payload column (url, warc_ts, html, text, lang, …) is
   * carried through untouched (input_hint; round-1 dropped all but
   * id/url/text — VERDICT "What's wrong" #6) and lands in the reference's
-  * chunked `__pid__`-partitioned sink layout (fuzzy_spark2.py:302-332).
+  * chunked `__pid__` sink (fuzzy_spark2.py:302-332), ≥ one partition per core (S6).
   *
   * `--by-lang` runs the whole pipeline independently per language
   * partition (reference master_lang_split.py:130-148) under
@@ -652,7 +652,7 @@ object Pipeline {
       })
 
     // kept: anti-join removal against the FULL page table — every payload
-    // column carries through; reference chunked sink layout (S6).
+    // column carries through; chunked sink, ≥ one partition per core (S6).
     // `--remove-runs` then cuts duplicated ≥suffixMinRun-char spans AMONG
     // the kept docs (Lee et al. substring semantics — doc-level dedup drops
     // whole near-dups, this trims the residual shared boilerplate);

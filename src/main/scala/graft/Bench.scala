@@ -120,6 +120,20 @@ object Bench {
     if (d > 0) 100.0 * (b1._2 - b0._2) / d else 0.0
   }
 
+  /** One measurement pass: per-query (name, sec, ok, steal%), the pass's
+    * steal% and the host canary (MB/s) before and after it. */
+  case class Attempt(
+      results: Seq[(String, Double, Boolean, Double)],
+      runSteal: Double, canaryPre: Double, canaryPost: Double) {
+    def minCanary: Double = math.min(canaryPre, canaryPost)
+    def windowOk(gateMbps: Double): Boolean = minCanary >= gateMbps && runSteal <= 2.0
+  }
+
+  /** The reported attempt: any clean window beats every degraded one (a
+    * steal-failed pass can still post a high canary), then highest canary. */
+  def bestAttempt(attempts: Seq[Attempt], gateMbps: Double): Attempt =
+    attempts.maxBy(a => (a.windowOk(gateMbps), a.minCanary))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -163,19 +177,12 @@ object Bench {
     // whole measurement pass RE-RUNS when the window was bad — canary
     // below ~90 GB/s on either side, or steal above 2% — up to
     // SPARK_GRAFT_BENCH_RETRIES extra attempts (default 2). The reported
-    // line is the attempt with the cleanest window (highest min canary),
-    // and carries bench_attempts + window_ok so a still-degraded final
-    // answer is self-describing rather than silently misleading.
+    // line is [[bestAttempt]]'s pick and carries bench_attempts + window_ok
+    // so a still-degraded answer is self-describing, not silently misleading.
     val canaryGateMbps =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_CANARY_MIN", "90000").toDouble
     val maxAttempts =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2").toInt + 1
-    case class Attempt(
-        results: Seq[(String, Double, Boolean, Double)],
-        runSteal: Double, canaryPre: Double, canaryPost: Double) {
-      def windowOk: Boolean =
-        math.min(canaryPre, canaryPost) >= canaryGateMbps && runSteal <= 2.0
-    }
     def measureOnce(): Attempt = {
       val canaryPre = dedup.HostCanary.quickMbps(cpus.toInt)
       val runStat0 = procStat
@@ -194,11 +201,11 @@ object Bench {
         dedup.HostCanary.quickMbps(cpus.toInt))
     }
     var attempts = List(measureOnce())
-    while (!attempts.head.windowOk && attempts.size < maxAttempts) {
+    while (!attempts.head.windowOk(canaryGateMbps) && attempts.size < maxAttempts) {
       System.err.println(f"[bench] degraded window (canary ${attempts.head.canaryPre}%.0f/${attempts.head.canaryPost}%.0f MB/s, steal ${attempts.head.runSteal}%.1f%%) — retrying")
       attempts ::= measureOnce()
     }
-    val best = attempts.maxBy(a => math.min(a.canaryPre, a.canaryPost))
+    val best = bestAttempt(attempts, canaryGateMbps)
     val Attempt(results, runSteal, canaryPre, canaryPost) = best
     val good = results.filter(_._3)
     val bad = results.filterNot(_._3)
@@ -213,7 +220,7 @@ object Bench {
     val fuzzySec = good.collectFirst { case ("q_fuzzy_assign", s, _, _) => s }.getOrElse(Double.NaN)
     val docsPerSec = if (fuzzySec > 0) nDocs / fuzzySec else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","docs":$nDocs,"fuzzy_docs_per_sec":${f"$docsPerSec%.1f"},"steal_pct":${f"$runSteal%.1f"},"canary_mbps_pre":${f"$canaryPre%.0f"},"canary_mbps_post":${f"$canaryPost%.0f"},"bench_attempts":${attempts.size},"window_ok":${best.windowOk},"query_steal_pct":$qsteal}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","docs":$nDocs,"fuzzy_docs_per_sec":${f"$docsPerSec%.1f"},"steal_pct":${f"$runSteal%.1f"},"canary_mbps_pre":${f"$canaryPre%.0f"},"canary_mbps_post":${f"$canaryPost%.0f"},"bench_attempts":${attempts.size},"window_ok":${best.windowOk(canaryGateMbps)},"query_steal_pct":$qsteal}"""
     println(line)
     // sbt prefixes stdout with "[info] " which breaks line-oriented JSON
     // parsers tailing the build output; stderr passes through unprefixed

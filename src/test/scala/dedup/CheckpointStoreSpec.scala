@@ -60,7 +60,7 @@ class CheckpointStoreSpec extends AnyFunSuite {
     assert(store.stage("s1") { (1 to 10).toDF("x") }.count() === 10)
     assert(writes === 1 && reads >= 1 && stats >= 1, "plain commit not through seam")
     store.stage("s2", chunkRows = Some(3),
-      chunkMinPartitions = 1, chunkMaxPartitions = 4) { (1 to 10).toDF("x") }
+      chunkMaxPartitions = 4) { (1 to 10).toDF("x") }
     assert(chunkedWrites === 1, "chunked sink not through seam")
     // resume path: a fresh store reuses s1 without compute, via format.read
     val readsBefore = reads
@@ -187,7 +187,7 @@ class CheckpointStoreSpec extends AnyFunSuite {
     val store = new CheckpointStore(spark, root, "cfg")
     // 100 rows, chunk 10 -> ceil = 10 partitions, clamped above by max=8
     val out = store.stage("s", chunkRows = Some(10L),
-      chunkMinPartitions = 4, chunkMaxPartitions = 8) { (1 to 100).toDF("x") }
+      chunkMaxPartitions = 8) { (1 to 100).toDF("x") }
     assert(out.count() === 100)
     assert(!out.columns.contains("__pid__"), "partition tag must not leak to readers")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -201,19 +201,34 @@ class CheckpointStoreSpec extends AnyFunSuite {
     // unclamped case: 100 rows, chunk 20 -> exactly ceil = 5 partitions
     val store3 = new CheckpointStore(spark, root, "cfg3")
     store3.stage("s3", chunkRows = Some(20L),
-      chunkMinPartitions = 2, chunkMaxPartitions = 64) { (1 to 100).toDF("x") }
+      chunkMaxPartitions = 64) { (1 to 100).toDF("x") }
     val dirs3 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/s3/data"))
       .filter(_.isDirectory).map(_.getPath.getName).filter(_.startsWith("__pid__="))
     assert(dirs3.length === 5)
     // 5 rows -> clamped up to min partitions
     val store2 = new CheckpointStore(spark, root, "cfg2")
     store2.stage("s2", chunkRows = Some(10L),
-      chunkMinPartitions = 4, chunkMaxPartitions = 8) { (1 to 5).toDF("x") }
+      chunkMaxPartitions = 8) { (1 to 5).toDF("x") }
     val dirs2 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/s2/data"))
       .filter(_.isDirectory).map(_.getPath.getName).filter(_.startsWith("__pid__="))
     // 5 rows round-robin into 4 partitions: empty partitions write no dir,
     // so the dir count is bounded by the clamp, not equal to it
     assert(dirs2.length <= 4 && dirs2.nonEmpty)
+  }
+
+  test("chunked sink: default floor is the session's cores, not 256 partitions") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("chunkfloor").toString
+    val store = new CheckpointStore(spark, root, "cfg")
+    // 100 rows, chunk 1000 -> ceil = 1, so the floor alone sizes the write
+    assert(store.stage("s", chunkRows = Some(1000L)) { (1 to 100).toDF("x") }
+      .count() === 100)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/s/data"))
+      .filter(_.isDirectory).map(_.getPath.getName).filter(_.startsWith("__pid__="))
+    val cores = spark.sparkContext.defaultParallelism
+    assert(dirs.nonEmpty && dirs.length <= cores,
+      s"expected at most $cores __pid__ dirs, got ${dirs.length}")
   }
 
   test("legacy manifest without data_files is not trusted: forces recompute (ADVICE r2)") {

@@ -304,6 +304,13 @@ class EndToEndSpec extends AnyFunSuite {
       }
     }
     assert(sawKept, "SUMMARY.json must include the kept stage")
+    // the kept sink is sized to the session's cores, not a fixed floor
+    val pidDirs = new java.io.File(s"$dir/out/kept/data").listFiles()
+      .count(f => f.isDirectory && f.getName.startsWith("__pid__="))
+    val chunk = Pipeline.parse(argv).chunkRows
+    val sinkBound = math.max(spark.sparkContext.defaultParallelism.toLong,
+      (keptUrls.size + chunk - 1) / chunk)
+    assert(pidDirs <= sinkBound, s"kept wrote $pidDirs __pid__ dirs, bound $sinkBound")
     val (kept2, _) = Pipeline.run(spark, Pipeline.parse(argv))
     assert(kept2.select("url").as[String].collect().toSet === keptUrls)
     // rerun summary: every stage resumed (the resume audit in one file)
