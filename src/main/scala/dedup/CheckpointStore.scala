@@ -127,7 +127,6 @@ class CheckpointStore(
     * chunkMaxPartitions) partitions → `__pid__` partitionBy). */
   def stage(
       name: String,
-      repartitionTo: Option[Int] = None,
       chunkRows: Option[Long] = None,
       chunkMaxPartitions: Int = 2048)(compute: => DataFrame): DataFrame = {
     if (isCommitted(name)) {
@@ -136,7 +135,7 @@ class CheckpointStore(
       return format.read(spark, dataPath(name))
     }
     val t0 = System.nanoTime()
-    val df0 = compute
+    val df = compute
     // Iceberg-style snapshot retention: a recompute does NOT destroy the
     // previous snapshot — if the outgoing data dir still matches its
     // manifest byte-for-byte (same validation isCommitted applies), it is
@@ -149,15 +148,13 @@ class CheckpointStore(
       case Some(chunk) =>
         // reference partitioned_save: a count() sizes the repartition —
         // persist so compute isn't paid twice (fuzzy_spark2.py:302-332)
-        val cached = df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val rows = cached.count()
         val parts = math.min(chunkMaxPartitions.toLong, math.max(
           spark.sparkContext.defaultParallelism.toLong, (rows + chunk - 1) / chunk)).toInt
         format.writeChunked(cached, dataPath(name), parts)
         cached.unpersist(blocking = false)
-      case None =>
-        val df = repartitionTo.map(df0.repartition(_)).getOrElse(df0)
-        format.write(df, dataPath(name))
+      case None => format.write(df, dataPath(name))
     }
     writeManifestFor(name, prev, t0)
     committed = committed :+ name

@@ -1,17 +1,30 @@
 package dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The flagship MinHash-LSH near-dup pipeline (reference fuzzy_spark2.py
-  * end-to-end trace, SURVEY.md §3.1), Spark-first:
+  * end-to-end trace, SURVEY.md §3.1), Spark-first, written once as a
+  * graph of named stages:
   *
-  *   docs → shingle sets (typed mapPartitions, min-length filter inside)
-  *        → MinHash lanes → LSH band keys → salted star edges
-  *        → exact-Jaccard verification (north_rule; reference skips it)
-  *        → large-star/small-star connected components
-  *        → assignment (component = min id; uniques = self)
-  *        → kept = representative filter via left-anti join.
+  *   shingles     docs → sorted distinct shingle-hash sets (typed
+  *                mapPartitions, min-length filter inside)
+  *   bands        MinHash lanes → LSH band keys
+  *   candidates   salted star edges per (band, bucket) — or, with
+  *                `exactJoin`, SSJoin prefix-filter candidates
+  *   verified     exact-Jaccard verification (north_rule; reference skips it)
+  *   [simhash_edges] [suffix_edges]  extra verified edge sources
+  *   components   large-star/small-star connected components
+  *   assignments  component = min id; uniques = self
+  *
+  * and [[kept]] = representative filter via left-anti join.
+  *
+  * Every stage goes through one `stage(name)(compute)` seam, so the graph
+  * does not decide how a stage materialises: the library default
+  * ([[persisted]]) caches each stage once, `dedup.Pipeline` passes its
+  * `CheckpointStore.stage` and gets the same chain as resumable parquet
+  * checkpoints under the same names.
   *
   * Everything stays in Dataset/DataFrame land — predicate pushdown, column
   * pruning and AQE all apply (the reference's `.rdd.flatMap` drop defeats
@@ -28,37 +41,107 @@ import org.apache.spark.sql.functions._
 object FuzzyDedup {
 
   case class Result(
-      shingles: org.apache.spark.sql.Dataset[DocShingles],
-      candidates: DataFrame, // (src, dst) LSH star edges
+      shingles: Dataset[DocShingles],
+      candidates: DataFrame, // (src, dst) candidate edges
       edges: DataFrame,      // verified (or pass-through) edges
       assignments: DataFrame // (id, component) for every doc that passed min-length
   )
 
-  /** Run candidate generation + verification + clustering. `extraEdges`
-    * lets the SimHash / suffix stages feed the same component resolution
-    * (SURVEY.md §7 slices 3-4). */
-  def run(docs: DataFrame, cfg: DedupConfig, extraEdges: Seq[DataFrame] = Nil): Result = {
-    // shingle sets are read by banding and twice by verification — persist
-    // once (the reference's persist(DISK_ONLY) at fuzzy_spark2.py:576)
-    val shingles = Lsh.shingleSets(docs, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // groupEdgesBatched honors cfg.bandsPerPass (banding memory envelope);
-    // one-shot banding when 0
-    val candidates = Lsh.groupEdgesBatched(shingles, cfg)
-    val verified =
-      if (cfg.verify) VerifyPairs.verifyJaccard(candidates, shingles, cfg.threshold)
-        .select(col("src"), col("dst"))
-      else candidates
-    val allEdges = extraEdges.foldLeft(verified) { (acc, e) =>
-      acc.unionByName(e.select(col("src"), col("dst")))
+  /** How one named stage materialises: `stage(name)(compute)` returns the
+    * output every later reader of the stage shares. */
+  type Stage = String => (=> DataFrame) => DataFrame
+
+  /** The library's materialisation: persist and count, so a stage is
+    * computed exactly once however many readers it has (the star-edge
+    * grouping reads the bands twice, verification the shingles twice). */
+  val persisted: Stage = _ => compute => {
+    val df = compute.persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    df
+  }
+
+  /** Run the stage graph over `docs` (`cfg.idCol`, `cfg.textCol`).
+    *
+    * The edge sources are the CLI's: `exactJoin` replaces banding with
+    * SSJoin candidates (the `bands` stage is then never computed),
+    * `simhash` and `suffix` add their verified edges to the components.
+    * `cfg.bandsPerPass` splits the star-edge shuffle into band-range passes
+    * over the one `bands` stage.
+    *
+    * Once it has the assignments, run unpersists every stage output it was
+    * handed: the returned frames stay valid as plans, and a run leaks no
+    * cache. Outputs that are not cached (checkpoint reads) are unaffected. */
+  def run(
+      docs: DataFrame,
+      cfg: DedupConfig,
+      exactJoin: Boolean = false,
+      simhash: Boolean = false,
+      suffix: Boolean = false,
+      stage: Stage = persisted): Result = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val outputs = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def named(name: String)(compute: => DataFrame): DataFrame = {
+      val df = stage(name)(compute)
+      outputs += df
+      df
     }
-    val components = ConnectedComponents.runAdaptive(allEdges)
-    // runAdaptive is eager (localCheckpoint + count materialize the whole
-    // edge pipeline), so the shingle cache has served its last read here —
-    // release it instead of leaking one cache per run (VERDICT #8)
-    shingles.unpersist(blocking = false)
-    val ids = docs.select(col(cfg.idCol).cast("long").as("id"))
-    val assignments = ConnectedComponents.assignAll(ids, components)
+
+    val shingles = named("shingles")(Lsh.shingleSets(docs, cfg).toDF()).as[DocShingles]
+    // lazy: exactJoin never references bands, so the banding stage is
+    // neither computed nor materialised in that mode
+    lazy val bands = named("bands")(Lsh.bandKeys(shingles, cfg).toDF()).as[BandKey]
+    val candidates = named("candidates") {
+      val (nb, _) = cfg.bandsRows
+      val bp = cfg.bandsPerPass
+      def starEdges(b: Dataset[BandKey]) =
+        Lsh.groupEdges(b, cfg.saltBuckets, cfg.allPairsCap, cfg.chainEdges)
+      if (exactJoin)
+        // SSJoin prefix-filtered candidates over the same shingle sets — a
+        // provable superset of every ≥-threshold pair (no banding miss
+        // rate); the verify stage trims it to exactly the true pairs
+        SSJoin.candidates(
+          shingles.select(col("id"), col("shingles").as("toks")), cfg.threshold)
+          .select(greatest(col("id_a"), col("id_b")).as("src"),
+            least(col("id_a"), col("id_b")).as("dst"))
+      else if (bp <= 0 || bp >= nb) starEdges(bands)
+      else
+        // batched banding (reference buckets_per_shuffle loop over the
+        // signature checkpoint, lsh_multi.py:108-146): each pass reads only
+        // its band range of the one bands stage — the predicate pushes to
+        // a parquet checkpoint's scan — so in-flight shuffle is
+        // n·bandsPerPass rows. Edges are generated per (band, bucket, salt)
+        // group exactly as in one shot, so after the distinct the edge SET
+        // is identical (LshSpec).
+        (0 until nb by bp).map { s =>
+          starEdges(bands.filter(col("band") >= s && col("band") < math.min(s + bp, nb)))
+        }.reduce(_ union _).distinct()
+    }
+    val verified = named("verified") {
+      if (cfg.verify)
+        VerifyPairs.verifyJaccard(candidates, shingles, cfg.threshold)
+          .select(col("src"), col("dst"))
+      else candidates
+    }
+    val simEdges =
+      if (!simhash) None
+      else Some(named("simhash_edges") {
+        SimHash.verifiedEdges(shingles, cfg).select(col("src"), col("dst"))
+      })
+    val suffixEdges =
+      if (!suffix) None
+      else Some(named("suffix_edges") {
+        SuffixDedup.verifiedEdges(docs, cfg).select(col("src"), col("dst"))
+      })
+    val components = named("components") {
+      ConnectedComponents.runAdaptive(
+        (Seq(verified) ++ simEdges ++ suffixEdges).reduce(_ unionByName _))
+    }
+    val assignments = named("assignments") {
+      ConnectedComponents.assignAll(
+        docs.select(col(cfg.idCol).cast("long").as("id")), components)
+    }
+    outputs.foreach(_.unpersist(blocking = false))
     Result(shingles, candidates, verified, assignments)
   }
 

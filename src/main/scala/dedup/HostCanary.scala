@@ -83,6 +83,26 @@ object HostCanary {
     bytes / 1e6 / (ns / 1e9)
   }
 
+  /** (busy, steal) jiffies from /proc/stat; (0, 0) where it is unreadable.
+    * Hypervisor steal is the dominant confound on a shared host: sustained
+    * multi-core load triggers 10-22% steal bursts while single-core load
+    * runs at ≤1.5% (BENCH/BASELINE.md round 3), so every bench run records
+    * its steal share and is self-attributing. */
+  def procStat: (Long, Long) =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val l = try src.getLines().next() finally src.close()
+      val f = l.trim.split("\\s+").drop(1).map(_.toLong)
+      // user nice system idle iowait irq softirq steal
+      (f(0) + f(1) + f(2) + f(5) + f(6), f(7))
+    } catch { case _: Throwable => (0L, 0L) }
+
+  /** Steal share (%) of the CPU time between two [[procStat]] readings. */
+  def stealPct(b0: (Long, Long), b1: (Long, Long)): Double = {
+    val d = (b1._1 - b0._1) + (b1._2 - b0._2)
+    if (d > 0) 100.0 * (b1._2 - b0._2) / d else 0.0
+  }
+
   def main(args: Array[String]): Unit = {
     val counts =
       if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 2, 4, 8, 16, 32)

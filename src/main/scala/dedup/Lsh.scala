@@ -127,62 +127,20 @@ object Lsh {
     * xxh64(band-slice bytes, seed=band) replaces the reference's
     * raw-bytes / md5-string keys (fuzzy_spark2.py:235,
     * fuzzy single gpu/lsh.py:54) — 8 shuffled bytes instead of 4·r+. */
-  def bandKeys(shingles: Dataset[DocShingles], cfg: DedupConfig): Dataset[BandKey] =
-    bandKeysRange(shingles, cfg, 0, cfg.bandsRows._1)
-
-  /** Band keys for bands [bandStart, bandEnd) only — the per-pass slice of
-    * the batched-banding mode (`bandsPerPass`). MinHash lanes are mutually
-    * independent, so each pass computes ONLY its own lane slice (the
-    * permutation arrays are sliced to the pass's lanes): total lane work
-    * across passes equals the one-shot pass, while shuffle width per pass
-    * drops from n·numBands rows to n·(bandEnd−bandStart). */
-  def bandKeysRange(
-      shingles: Dataset[DocShingles],
-      cfg: DedupConfig,
-      bandStart: Int,
-      bandEnd: Int): Dataset[BandKey] = {
+  def bandKeys(shingles: Dataset[DocShingles], cfg: DedupConfig): Dataset[BandKey] = {
     val spark = shingles.sparkSession
     import spark.implicits._
     val (b, r) = cfg.bandsRows
-    require(0 <= bandStart && bandStart < bandEnd && bandEnd <= b,
-      s"band range [$bandStart,$bandEnd) out of [0,$b)")
     val (pa, pb) = Hashes.permutations(b * r, cfg.seed)
-    val pa2 = pa.slice(bandStart * r, bandEnd * r)
-    val pb2 = pb.slice(bandStart * r, bandEnd * r)
     shingles.mapPartitions { it =>
       val scratch = new Array[Byte](r * 4) // reused across all band hashes
       it.flatMap { ds =>
-        val sig = signature(ds.shingles, pa2, pb2)
-        (bandStart until bandEnd).iterator.map { band =>
-          val off = band - bandStart
-          BandKey(ds.id, band,
-            Hashes.xxh64Ints(sig, off * r, (off + 1) * r, band.toLong, scratch))
+        val sig = signature(ds.shingles, pa, pb)
+        (0 until b).iterator.map { band =>
+          BandKey(ds.id, band, Hashes.xxh64Ints(sig, band * r, (band + 1) * r, band.toLong, scratch))
         }
       }
     }
-  }
-
-  /** Candidate edges with the banding shuffle bounded to `bandsPerPass`
-    * bands per pass (reference parity: `buckets_per_shuffle`,
-    * fuzzy multi gpu/lsh_multi.py:108-146, which re-reads the signature
-    * checkpoint per batch and appends each batch's buckets). At 10¹² docs
-    * a one-shot 25-band shuffle is numBands× the input in flight at once;
-    * batching caps in-flight shuffle data at n·bandsPerPass rows. Edges
-    * are generated per (band, bucket, salt) group exactly as in the
-    * one-shot path, so after the terminal distinct the edge SET is
-    * identical (asserted in LshSpec), not merely closure-equal. */
-  def groupEdgesBatched(
-      shingles: Dataset[DocShingles],
-      cfg: DedupConfig): DataFrame = {
-    val (b, _) = cfg.bandsRows
-    val bp = cfg.bandsPerPass
-    if (bp <= 0 || bp >= b)
-      groupEdges(bandKeys(shingles, cfg), cfg.saltBuckets, cfg.allPairsCap, cfg.chainEdges)
-    else
-      (0 until b by bp).map { s =>
-        groupEdges(bandKeysRange(shingles, cfg, s, math.min(s + bp, b)),
-          cfg.saltBuckets, cfg.allPairsCap, cfg.chainEdges)
-      }.reduce(_ union _).distinct()
   }
 
   // ------------------------------------------- salted bucket → star edges

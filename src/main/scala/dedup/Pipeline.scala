@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
   *   ids → shingles → bands → candidates → verified → simhash-edges →
   *   suffix-edges → components → assignments → kept
   *
+  * The near-dup chain from shingles to assignments is [[FuzzyDedup.run]]'s
+  * stage graph, run with `CheckpointStore.stage` as its materialisation;
+  * this object owns only what is CLI-specific: source prep, the `ids`
+  * stage and its collision audit, the semantic and containment removals,
+  * and `kept` with its post-shaping.
+  *
   * Every stage commits parquet + manifest via CheckpointStore; a rerun with
   * the same config AND the same input (source fingerprint is part of the
   * checkpoint key) resumes at the first missing stage. Doc ids are
@@ -531,72 +537,10 @@ object Pipeline {
           "them silently; re-key or pass --no-collision-check to accept")
     }
 
-    val shingles = store.stage("shingles") {
-      Lsh.shingleSets(docs, cfg).toDF()
-    }
-    import spark.implicits._
-    val shingleDs = shingles.as[DocShingles]
-
-    // lazy: --exact-join never references bands, so the banding stage is
-    // neither computed nor checkpointed in that mode
-    lazy val bands = store.stage("bands") {
-      Lsh.bandKeys(shingleDs, cfg).toDF()
-    }.as[BandKey]
-
-    val candidates = store.stage("candidates") {
-      val (nb, _) = cfg.bandsRows
-      val bp = cfg.bandsPerPass
-      if (args.exactJoin)
-        // --exact-join: SSJoin prefix-filtered candidates over the SAME
-        // checkpointed shingle sets — a provable superset of every
-        // ≥-threshold pair (no banding miss rate); the shared verify
-        // stage below trims it to exactly the true pairs. MinHash/banding
-        // is skipped entirely (`bands` above is lazy).
-        SSJoin.candidates(
-          shingles.select(col("id"), col("shingles").as("toks")), cfg.threshold)
-          .select(greatest(col("id_a"), col("id_b")).as("src"),
-            least(col("id_a"), col("id_b")).as("dst"))
-      else if (bp <= 0 || bp >= nb)
-        Lsh.groupEdges(bands, cfg.saltBuckets, cfg.allPairsCap, cfg.chainEdges)
-      else {
-        // batched banding over the CHECKPOINTED bands stage: each pass
-        // re-reads only its band slice (predicate pushes to the parquet
-        // scan) — the reference's buckets_per_shuffle loop over the
-        // signature checkpoint (lsh_multi.py:108-146)
-        import spark.implicits._
-        (0 until nb by bp).map { s =>
-          Lsh.groupEdges(
-            bands.filter(col("band") >= s && col("band") < math.min(s + bp, nb)),
-            cfg.saltBuckets, cfg.allPairsCap, cfg.chainEdges)
-        }.reduce(_ union _).distinct()
-      }
-    }
-
-    val verified = store.stage("verified") {
-      if (cfg.verify)
-        VerifyPairs.verifyJaccard(candidates, shingleDs, cfg.threshold)
-          .select(col("src"), col("dst"))
-      else candidates
-    }
-
-    val simEdges =
-      if (args.simhash) Some(store.stage("simhash_edges") {
-        SimHash.verifiedEdges(shingleDs, cfg).select(col("src"), col("dst"))
-      }) else None
-
-    val saEdges =
-      if (args.suffix) Some(store.stage("suffix_edges") {
-        SuffixDedup.verifiedEdges(docs, cfg).select(col("src"), col("dst"))
-      }) else None
-
-    val components = store.stage("components") {
-      val all = (Seq(verified) ++ simEdges ++ saEdges).reduce(_ unionByName _)
-      ConnectedComponents.runAdaptive(all)
-    }
-
-    val assignments = store.stage("assignments") {
-      ConnectedComponents.assignAll(docs.select(col("id")), components)
-    }
+    // the near-dup stage graph, each stage a checkpoint under its own name
+    val graph = FuzzyDedup.run(docs, cfg, exactJoin = args.exactJoin,
+      simhash = args.simhash, suffix = args.suffix, stage = name => store.stage(name))
+    val assignments = graph.assignments
 
     // `--soft-weights`: side artifact — retain-and-downweight alternative
     // to removal. Every doc's 1/|cluster| training weight (integer ppm,
@@ -645,7 +589,7 @@ object Pipeline {
     val containRemoved =
       if (args.containT <= 0) None
       else Some(store.stage("contain_drops") {
-        val toks = shingles.select(col("id"), col("shingles").as("toks"))
+        val toks = graph.shingles.select(col("id"), col("shingles").as("toks"))
         toks.select(col("id")).join(
           SSJoin.dropContained(toks, args.containT, args.containDfCap),
           Seq("id"), "left_anti")

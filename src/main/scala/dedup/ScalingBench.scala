@@ -1,6 +1,7 @@
 package dedup
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 
 /** Two-parallelism scaling measurement (BASELINE.md protocol): the same
   * job on the same parquet input at local[N] and local[4N], shuffle
@@ -75,20 +76,6 @@ object ScalingBench {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).sum
   }
-
-  /** (busy, steal) jiffies from /proc/stat — hypervisor steal is the
-    * dominant confound on this host: sustained multi-core load triggers
-    * 10-22% steal bursts while single-core load runs at ≤1.5% (measured,
-    * BENCH/BASELINE.md round 3). Recording the per-run steal share makes
-    * each measurement self-attributing. */
-  private def procStat: (Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      val l = try src.getLines().next() finally src.close()
-      val f = l.trim.split("\\s+").drop(1).map(_.toLong)
-      // user nice system idle iowait irq softirq steal
-      (f(0) + f(1) + f(2) + f(5) + f(6), f(7))
-    } catch { case _: Throwable => (0L, 0L) }
 
   /** total JVM CPU nanoseconds (all threads). The work-inflation ratio
     * cpuSec(4N)/cpuSec(N) attributes sub-linear wall scaling: ≈1.0 means
@@ -167,30 +154,22 @@ object ScalingBench {
       // rows/(mod·K) still clears the compile thresholds
       val warmupMod = sys.env.getOrElse("SPARK_GRAFT_WARMUP_MOD", "50").toLong
       FuzzyDedup.assignments(
-        docs.where(org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.col("id"),
-          org.apache.spark.sql.functions.lit(warmupMod)) === 0), cfg).count()
+        docs.where(pmod(col("id"), lit(warmupMod)) === 0), cfg).count()
       val agg = new TaskAgg
       spark.sparkContext.addSparkListener(agg)
       val gc0 = gcMillis
       val cpu0 = cpuNanos
-      val (busy0, steal0) = procStat
+      val stat0 = HostCanary.procStat
       val t0 = System.nanoTime()
       val res = FuzzyDedup.run(docs, cfg)
       val assigns = res.assignments
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = assigns.count()
-      val removed = assigns
-        .where(org.apache.spark.sql.functions.col("id") =!=
-          org.apache.spark.sql.functions.col("component")).count()
+      val removed = assigns.where(col("id") =!= col("component")).count()
       val sec = (System.nanoTime() - t0) / 1e9
       // drain queued listener events before reading the counters
       org.apache.spark.sql.dedupbridge.drainListenerBus(spark.sparkContext, 30000L)
-      val (busy1, steal1) = procStat
-      val stealPct =
-        if (busy1 + steal1 > busy0 + steal0)
-          100.0 * (steal1 - steal0) / ((busy1 - busy0) + (steal1 - steal0))
-        else 0.0
+      val stealPct = HostCanary.stealPct(stat0, HostCanary.procStat)
       RunStats(sec, n, removed, (gcMillis - gc0) / 1e3, (cpuNanos - cpu0) / 1e9,
         agg.runMs.get / 1e3, agg.cpuNs.get / 1e9, agg.gcMs.get / 1e3,
         agg.fetchWaitMs.get / 1e3, agg.tasks.get, agg.stageReport, stealPct)
@@ -204,23 +183,23 @@ object ScalingBench {
     val nDocs = if (args.length > 0) args(0).toLong else 40000L
     val coresA = if (args.length > 1) args(1).toInt else 8
     val coresB = if (args.length > 2) args(2).toInt else 32
+    // the CLI's defaults
+    val cfg = DedupConfig()
+    // materialize the corpus once, untimed, at full parallelism. Ids are the
+    // CLI's xxhash64(url): star-hub election depends on the id values, so
+    // only the CLI's ids give the CLI's `removed` on the same pages.
+    val input = sys.env.getOrElse("SPARK_GRAFT_CORPUS_ROOT", "/dev/shm") + s"/scaling_pages_$nDocs"
+    val prep = session(coresB, "scaling-prep")
+    if (!new java.io.File(s"$input/_SUCCESS").exists())
+      Synth.corpus(prep, nDocs, cfg.seed).select(xxhash64(col("url")).as("id"), col("text"))
+        .write.mode("overwrite").parquet(input)
+    prep.stop()
+    fresh()
+
     // single-level mode (coresA == coresB): one measurement per JVM — the
     // honest analogue of two separate spark-submit jobs; a wrapper combines
     if (coresA == coresB) {
-      val input = sys.env.getOrElse("SPARK_GRAFT_CORPUS_ROOT", "/dev/shm") + s"/scaling_corpus_$nDocs"
-      val prep = session(coresB, "scaling-prep")
-      if (!new java.io.File(s"$input/_SUCCESS").exists()) {
-        import prep.implicits._
-        Synth.corpus(prep, nDocs, DedupConfig().seed)
-          .map(d => (Hashes.xxh64Str(d.url), d.text))
-          .toDF("id", "text")
-          .write.mode("overwrite").parquet(input)
-      }
-      prep.stop()
-      fresh()
-      val cfg0 = DedupConfig(numPerm = 250, ngram = 5, minLength = 5,
-        threshold = 0.7, saltBuckets = 16, verify = true)
-      val r = runOnce(coresA, input, cfg0)
+      val r = runOnce(coresA, input, cfg)
       if (sys.env.contains("SPARK_GRAFT_STAGE_REPORT"))
         System.err.println(s"[stages cores=$coresA]\n${r.stageReport}")
       println(f"""{"docs":$nDocs,"removed":${r.removed},"cores":$coresA,"sec":${r.sec}%.2f,""" +
@@ -231,21 +210,6 @@ object ScalingBench {
         f""""stealPct":${r.stealPct}%.1f,"docsPerSec":${nDocs / r.sec}%.1f}""")
       return
     }
-    val cfg = DedupConfig(numPerm = 250, ngram = 5, minLength = 5,
-      threshold = 0.7, saltBuckets = 16, verify = true)
-
-    // materialize the corpus once, untimed, at full parallelism
-    val input = sys.env.getOrElse("SPARK_GRAFT_CORPUS_ROOT", "/dev/shm") + s"/scaling_corpus_$nDocs"
-    val prep = session(coresB, "scaling-prep")
-    if (!new java.io.File(s"$input/_SUCCESS").exists()) {
-      import prep.implicits._
-      Synth.corpus(prep, nDocs, cfg.seed)
-        .map(d => (Hashes.xxh64Str(d.url), d.text))
-        .toDF("id", "text")
-        .write.mode("overwrite").parquet(input)
-    }
-    prep.stop()
-    fresh()
 
     // the sandbox host shows bimodal IO/CPU behavior across minutes-apart
     // runs; interleave A/B twice and take the per-level minimum — the

@@ -87,10 +87,10 @@ case class DedupConfig(
     chainEdges: Boolean = false,
     /** banding memory envelope: process at most this many LSH bands per
       * shuffle pass (0 = all bands in one shuffle). Reference parity:
-      * `buckets_per_shuffle`, fuzzy multi gpu/lsh_multi.py:108-146. Each
-      * pass computes only its own signature-lane slice, so total lane work
-      * is unchanged; in-flight shuffle data drops from n·numBands rows to
-      * n·bandsPerPass. */
+      * `buckets_per_shuffle`, fuzzy multi gpu/lsh_multi.py:108-146. The
+      * bands are computed once (the `bands` stage) and each pass filters
+      * its band range from them; in-flight shuffle data is still
+      * n·bandsPerPass rows instead of n·numBands. */
     bandsPerPass: Int = 0) {
 
   def bandsRows: (Int, Int) = bands.getOrElse(Lsh.optimalParam(threshold, numPerm))

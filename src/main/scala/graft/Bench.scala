@@ -1,5 +1,6 @@
 package graft
 
+import dedup.HostCanary
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR, one JSON
@@ -102,24 +103,6 @@ object Bench {
     "q_decontaminate",
     "q_decontaminate_frac") // fractional overlap gate (zero-shuffle probe)
 
-  /** (busy, steal) jiffies from /proc/stat — same reader as ScalingBench:
-    * hypervisor steal and bandwidth noise swing sf0.1 totals up to ±1.8×
-    * on this host (VERDICT r3 "what's wrong" #3), so every bench line is
-    * self-attributing: cross-round comparisons should trust low-steal runs
-    * and discount the rest. */
-  private def procStat: (Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      val l = try src.getLines().next() finally src.close()
-      val f = l.trim.split("\\s+").drop(1).map(_.toLong)
-      (f(0) + f(1) + f(2) + f(5) + f(6), f(7))
-    } catch { case _: Throwable => (0L, 0L) }
-
-  private def stealPct(b0: (Long, Long), b1: (Long, Long)): Double = {
-    val d = (b1._1 - b0._1) + (b1._2 - b0._2)
-    if (d > 0) 100.0 * (b1._2 - b0._2) / d else 0.0
-  }
-
   /** One measurement pass: per-query (name, sec, ok, steal%), the pass's
     * steal% and the host canary (MB/s) before and after it. */
   case class Attempt(
@@ -184,21 +167,21 @@ object Bench {
     val maxAttempts =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2").toInt + 1
     def measureOnce(): Attempt = {
-      val canaryPre = dedup.HostCanary.quickMbps(cpus.toInt)
-      val runStat0 = procStat
+      val canaryPre = HostCanary.quickMbps(cpus.toInt)
+      val runStat0 = HostCanary.procStat
       val results = names.map { name =>
         val fn = qmap(name)
-        val s0 = procStat
+        val s0 = HostCanary.procStat
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
           }
-        (name, (System.nanoTime() - t0) / 1e9, ok, stealPct(s0, procStat))
+        (name, (System.nanoTime() - t0) / 1e9, ok, HostCanary.stealPct(s0, HostCanary.procStat))
       }
-      Attempt(results, stealPct(runStat0, procStat), canaryPre,
-        dedup.HostCanary.quickMbps(cpus.toInt))
+      Attempt(results, HostCanary.stealPct(runStat0, HostCanary.procStat), canaryPre,
+        HostCanary.quickMbps(cpus.toInt))
     }
     var attempts = List(measureOnce())
     while (!attempts.head.windowOk(canaryGateMbps) && attempts.size < maxAttempts) {

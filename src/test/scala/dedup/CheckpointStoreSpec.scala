@@ -167,7 +167,7 @@ class CheckpointStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("trunc").toString
     val store = new CheckpointStore(spark, root, "cfg")
     var computed = 0
-    store.stage("s", repartitionTo = Some(4)) { computed += 1; (1 to 100).toDF("x") }
+    store.stage("s") { computed += 1; (1 to 100).toDF("x").repartition(4) }
     assert(computed === 1)
     // delete one committed part file, keep the manifest
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -337,7 +337,7 @@ class CheckpointStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("cmp").toString
     val s1 = new CheckpointStore(spark, root, "cfg")
-    s1.stage("s", repartitionTo = Some(16)) { (1 to 1000).toDF("x") }
+    s1.stage("s") { (1 to 1000).toDF("x").repartition(16) }
     val preId = s1.snapshots("s").collect().head.getString(0)
     val preFiles = s1.manifest("s").get("files").asInstanceOf[Long]
     assert(preFiles === 16L)

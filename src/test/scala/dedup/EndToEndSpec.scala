@@ -143,6 +143,40 @@ class EndToEndSpec extends AnyFunSuite {
     assert(again === assignMap)
   }
 
+  test("library run releases every stage it persisted, in the CLI's stage order") {
+    val held = scala.collection.mutable.ArrayBuffer[(String, org.apache.spark.sql.DataFrame)]()
+    val recording: FuzzyDedup.Stage = name => compute => {
+      val df = FuzzyDedup.persisted(name)(compute)
+      held += name -> df
+      df
+    }
+    FuzzyDedup.run(corpus.select("id", "text"), cfg, simhash = true, suffix = true,
+      stage = recording)
+    assert(held.map(_._1).toSeq === Seq("shingles", "bands", "candidates", "verified",
+      "simhash_edges", "suffix_edges", "components", "assignments"))
+    held.foreach { case (name, df) =>
+      assert(df.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+        s"stage $name is still cached after run returned")
+    }
+  }
+
+  test("CLI assignments == FuzzyDedup.run over the CLI's ids, bit for bit") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("onegraph").toString
+    val args = Pipeline.parse(Array("--synth", "800", "--output", root,
+      "--num-perm", "64", "--salt", "4"))
+    val (_, cliAssign) = Pipeline.run(spark, args)
+    val docs = Pipeline.preparedPages(spark, args)
+      .select(xxhash64(col("url")).as("id"), col("text"))
+    val libAssign = FuzzyDedup.run(docs, args.cfg).assignments
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cli = pairs(cliAssign)
+    assert(cli.size === 800)
+    assert(cli.exists { case (id, comp) => id != comp }, "corpus must plant duplicates")
+    assert(pairs(libAssign) === cli)
+  }
+
   test("kept = one doc per component; removal anti-join consistent") {
     val kept = FuzzyDedup.kept(corpus, cfg)
     val keptIds = kept.select("id").collect().map(_.getLong(0)).toSet

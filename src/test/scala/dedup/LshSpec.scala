@@ -59,24 +59,17 @@ class LshSpec extends AnyFunSuite {
     assert(byDoc(1L).size === 10)
   }
 
-  test("bandsPerPass batched banding: identical edge SET to one-shot; lanes match per band") {
+  test("bandsPerPass batched banding: identical edge SET to one-shot") {
     import spark.implicits._
     val base = DedupConfig(ngram = 3, minLength = 3, numPerm = 50,
       bands = Some((10, 5)), saltBuckets = 4)
     val docs = Synth.corpus(spark, 400, 7L).map(d => (Hashes.xxh64Str(d.url), d.text))
       .toDF("id", "text")
-    val shingles = Lsh.shingleSets(docs, base)
-    // per-band keys from a range pass equal the full pass (lane slicing)
-    val full = Lsh.bandKeys(shingles, base).collect().map(b => (b.id, b.band, b.bucket)).toSet
-    val ranged = (0 until 10 by 3).flatMap { s =>
-      Lsh.bandKeysRange(shingles, base, s, math.min(s + 3, 10)).collect()
-    }.map(b => (b.id, b.band, b.bucket)).toSet
-    assert(ranged === full)
     // batched candidate edges == one-shot candidate edges, exactly
-    val oneShot = Lsh.groupEdgesBatched(shingles, base).collect()
+    def candidates(cfg: DedupConfig) = FuzzyDedup.run(docs, cfg).candidates.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batched = Lsh.groupEdgesBatched(shingles, base.copy(bandsPerPass = 3)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val oneShot = candidates(base)
+    val batched = candidates(base.copy(bandsPerPass = 3))
     assert(batched === oneShot)
     assert(oneShot.nonEmpty, "corpus must produce candidates")
   }

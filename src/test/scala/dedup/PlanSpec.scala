@@ -54,6 +54,36 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("HashAggregate"), plan)
   }
 
+  test("library stage graph: candidates read the bands stage, MinHash runs once") {
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, LogicalPlan, MapPartitions}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types.ObjectType
+    import spark.implicits._
+    val docs = Synth.corpus(spark, 300, 3L).map(d => (Hashes.xxh64Str(d.url), d.text))
+      .toDF("id", "text")
+    // the plan each stage is handed, with the cache substituted as it was then
+    val plans = scala.collection.mutable.Map[String, LogicalPlan]()
+    val recording: FuzzyDedup.Stage = name => compute => {
+      val df = compute
+      plans(name) = df.queryExecution.withCachedData
+      FuzzyDedup.persisted(name)(df)
+    }
+    FuzzyDedup.run(docs, DedupConfig(numPerm = 64, saltBuckets = 4), stage = recording)
+    def minHash(p: LogicalPlan) = p.collect {
+      case m: MapPartitions if (m.child match {
+        case d: DeserializeToObject =>
+          d.deserializer.dataType == ObjectType(classOf[DocShingles])
+        case _ => false
+      }) => m
+    }
+    assert(minHash(plans("bands")).size === 1, s"no MinHash in the bands stage:\n${plans("bands")}")
+    val cand = plans("candidates")
+    assert(minHash(cand).isEmpty, s"candidates recompute MinHash:\n$cand")
+    val cached = cand.collect { case r: InMemoryRelation => r.output.map(_.name) }
+    assert(cached.nonEmpty && cached.forall(_ === Seq("id", "band", "bucket")),
+      s"candidates do not read the bands stage:\n$cand")
+  }
+
   test("verification join is an equi-join on id (sort-merge or hash), never nested-loop") {
     import spark.implicits._
     val sh = Seq(DocShingles(1L, Array(1, 2)), DocShingles(2L, Array(1, 2))).toDS()

@@ -1,7 +1,8 @@
 #!/bin/bash
 # N vs 4N EXECUTORS on a local standalone Spark cluster — generalized:
 #   tools/run_cluster_scaling2.sh <docs> <reps> <exec_cores> <coresA> <coresB> <outlog>
-# e.g. "1000000 2 1 1 4 out.jsonl" = 1 executor×1c vs 4 executors×1c.
+# e.g. "1000000 2 1 1 4 out.jsonl" = 1 executor×1c vs 4 executors×1c,
+#      "1000000 2 4 4 16 out.jsonl" = 1 executor×4c vs 4 executors×4c.
 # Executor count = total_cores / exec_cores; each executor is its own JVM
 # (own heap, shuffle server) — the real multi-executor topology.
 # SPARK_GRAFT_SHUFFLE_PARTITIONS pins the partition count so both levels

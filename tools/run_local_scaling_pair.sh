@@ -1,8 +1,8 @@
 #!/bin/bash
-# Generalized local-mode N vs M scaling pair (BASELINE.md protocol):
-# interleaved A/B/A/B per JVM invocation (dedup.ScalingBench), per-run
-# /proc/stat steal share recorded — same protocol as run_local_scaling_1v4.sh
-# with the pair as arguments.
+# Local-mode N vs M scaling pair (BASELINE.md protocol): interleaved
+# A/B/A/B in one pre-touched JVM per invocation (dedup.ScalingBench),
+# per-run /proc/stat steal share recorded so every measurement is
+# self-attributing. The 1→4 gate pair is `<docs> 1 4 <outfile>`.
 #   tools/run_local_scaling_pair.sh <docs> <coresA> <coresB> <outfile> [repeats]
 set -u
 DOCS=$1; A=$2; B=$3; OUT=$4; REPS=${5:-1}
