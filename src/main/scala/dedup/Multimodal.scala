@@ -891,9 +891,8 @@ object Multimodal {
 
   /** Decode + feature-extract with REAL decoders wherever the format is
     * implementable without media libraries (BMP's plain byte layout,
-    * PNG via the JDK's Inflater, GIF via LZW, baseline JPEG via
-    * [[Jpeg.decode]], WAV integer PCM, FLAC via [[Flac.decode]]);
-    * everything else falls back
+    * PNG via the JDK's Inflater, GIF via LZW, TIFF, WAV integer PCM and
+    * IMA ADPCM); everything else falls back
     * to [[decodeStub]]. The 16-float output contract is uniform, so the
     * Spark-side plumbing (schema, batching, partitioning) is identical
     * whichever path a blob takes. */
@@ -908,13 +907,12 @@ object Multimodal {
     }
 
   /** STUB decode + feature-extract for the formats that genuinely need a
-    * codec (MP3/MP4/WebM streams, arithmetic-coded JPEG — no media libs
-    * in this container): a deterministic 16-dim byte-histogram
+    * codec (JPEG, FLAC, MP3/MP4/WebM streams — no media libraries
+    * here): a deterministic 16-dim byte-histogram
     * "embedding". Batch shape, schema and partitioning are the real
     * contract; only the math inside is fake, and since round 4 it is the
     * FALLBACK of [[decodeFeatures]], not the whole story — BMP, PNG, GIF
-    * and JPEG pixels (baseline AND progressive, [[Jpeg.decode]]) and
-    * WAV-PCM/FLAC samples decode for real. */
+    * and TIFF pixels and WAV samples decode for real. */
   def decodeStub(bytes: Array[Byte]): Array[Float] = {
     val hist = new Array[Float](16)
     if (bytes == null || bytes.isEmpty) return hist
@@ -1414,10 +1412,9 @@ object Multimodal {
   }
 
   /** Decode ANY supported image container to (w, h, rgb-top-down): the
-    * codec-free BMP layout plus the three compressed formats whose
+    * codec-free BMP layout plus the compressed formats whose
     * compression is implementable without media libraries (PNG via the
-    * JDK's Inflater, GIF via LZW, baseline AND progressive JPEG via
-    * [[Jpeg.decode]] — canonical Huffman + 8×8 DCT, ITU-T T.81). */
+    * JDK's Inflater, GIF via LZW, TIFF via LZW/Deflate/PackBits). */
   /** PackBits run-length decoding (TIFF 6.0 §9, the Apple RLE scheme):
     * control byte n in 0..127 → copy n+1 literals; n in -127..-1 → repeat
     * next byte 1-n times; -128 → no-op. None when output overruns
@@ -1825,7 +1822,7 @@ object Multimodal {
 
   def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] =
     decodeBmp(bytes).orElse(decodePng(bytes)).orElse(decodeGif(bytes))
-      .orElse(decodeTiff(bytes)).orElse(Jpeg.decode(bytes))
+      .orElse(decodeTiff(bytes))
 
   // -------------------------------------------- perceptual image hashing
   /** dHash: the standard difference-hash perceptual image fingerprint —
@@ -2032,17 +2029,16 @@ object Multimodal {
   }
 
   /** Decode ANY supported audio container to (rate, channels, normalized
-    * interleaved samples): WAV integer PCM (plain byte layout) or FLAC
-    * ([[Flac.decode]] — Rice codes + integer predictors, lossless). The
-    * audio twin of [[decodeImage]]. */
+    * interleaved samples): WAV integer PCM (plain byte layout) or WAV
+    * IMA ADPCM. The audio twin of [[decodeImage]]. */
   def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-    decodeWavPcm(bytes).orElse(decodeWavImaAdpcm(bytes)).orElse(Flac.decode(bytes))
+    decodeWavPcm(bytes).orElse(decodeWavImaAdpcm(bytes))
 
   /** Binary audio column → (id, sample_rate, n_samples, afp) fingerprints,
     * one typed mapPartitions pass (decode once per blob). Undecodable
     * blobs and sub-65-sample clips yield null rate/count/hash — kept,
     * never a task failure (same null-safety contract as [[mediaMeta]]).
-    * Decodes WAV PCM and FLAC ([[decodeAudio]]); the hash and everything
+    * Decodes WAV PCM and IMA ADPCM ([[decodeAudio]]); the hash and everything
     * downstream are format-agnostic. */
   def audioFingerprint(df: DataFrame, idCol: String, binCol: String): DataFrame = {
     val spark = df.sparkSession

@@ -506,7 +506,10 @@ object Pipeline {
       (if (args.mixBudget > 0)
         s"+mx${args.mixWeights.toSeq.sorted.mkString(";")}b${args.mixBudget}"
       else "") +
-      (if (args.existing.nonEmpty) "+in" else "") +
+      // existing-corpus fingerprint: the ids stage is filtered against
+      // it, so a changed corpus must invalidate, not resume
+      (if (args.existing.nonEmpty)
+        s"+in${CheckpointStore.inputFingerprint(spark, args.existing)}" else "") +
       (if (args.existingFuzzy) "+inf" else "") +
       (if (args.exactJoin) "+xj" else "") +
       (if (args.containT > 0) s"+ct${args.containT}c${args.containDfCap}" else "") +

@@ -24,8 +24,7 @@ object ScalingBench {
   /** shuffle partitions per core: >1 smooths stragglers on the big
     * shuffles (AQE coalesces the small ones back) — with exactly
     * cores partitions one slow task idles a whole core slot. */
-  private val partsPerCore =
-    sys.env.getOrElse("SPARK_GRAFT_PARTS_PER_CORE", "2").toInt
+  private val partsPerCore = 2
 
   private def session(cores: Int, name: String): SparkSession = {
     // SPARK_GRAFT_MASTER overrides local[cores] — used for the standalone-
@@ -50,10 +49,9 @@ object ScalingBench {
       // flattening the measured scaling curve (measured: 2M docs,
       // 1×4c = 553 s ≈ 4×4c = 555 s). 16 MB gives ~100 splits — ≥3×cores
       // at every level measured here. At 100 TB the same default yields
-      // ~800k splits and this knob is irrelevant; it matters exactly when
+      // ~800k splits and this setting is irrelevant; it matters exactly when
       // corpus_bytes / 128 MB < 3 × total_cores.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", (16L << 20).toString))
+      .config("spark.sql.files.maxPartitionBytes", (16L << 20).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -161,67 +161,27 @@ object StreamingDedup {
     val spark = pages.sparkSession
     import spark.implicits._
     val (nb, r) = cfg.bandsRows
-    val (pa, pb) = Hashes.permutations(nb * r, cfg.seed)
-    val ngram = cfg.ngram
-    val minLen = cfg.minLength
-    val threshold = cfg.threshold
     val lanes = nb * r
-    val bBits = stateBits
-
-    val probes = pages
-      .select(col(cfg.idCol).cast("long").as("id"),
-        col(tsCol).cast("timestamp").as("ts"), col(cfg.textCol).as("text"))
-      .as[(Long, java.sql.Timestamp, String)]
-      .mapPartitions { it =>
-        val scratch = new Array[Byte](r * 4)
-        it.flatMap { case (id, ts, text) =>
-          val sh =
-            if (text == null) Array.emptyIntArray
-            else TextNorm.shingleHashes(text, ngram, minLen)
-          if (sh.isEmpty || ts == null) Iterator.empty
-          else {
-            val sig = Lsh.signature(sh, pa, pb)
-            // band keys hash the FULL lanes (bucket recall is unchanged
-            // by packing); only the payload that travels and sits in
-            // state is b-bit packed
-            val packed = packLanes(sig, bBits)
-            (0 until nb).iterator.map { band =>
-              Probe(Hashes.xxh64Ints(sig, band * r, (band + 1) * r, band.toLong, scratch),
-                id, ts, packed)
-            }
-          }
-        }
-      }
-      .withWatermark("ts", watermark)
+    val threshold = cfg.threshold
 
     val matcher =
       (bucket: Long, rows: Iterator[Probe], state: GroupState[BucketState]) => {
         if (state.hasTimedOut) { state.remove(); Iterator.empty[Match] }
         else {
-          // deterministic within-batch order: event time, then doc id
           val docs = rows.toArray.sortBy(p => (p.ts.getTime, p.id))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Match]
-          var st = state.getOption.orNull
-          var maxTs = 0L
-          docs.foreach { p =>
-            if (p.ts.getTime > maxTs) maxTs = p.ts.getTime
-            if (st == null) st = BucketState(p.id, p.ts.getTime, p.sig)
-            else if (st.repId != p.id) {
-              val m = matchingLanes(p.sig, st.sig, lanes, bBits)
-              val est = estimateJ(m, lanes, bBits)
-              if (est >= threshold) out += Match(p.id, p.ts, st.repId, est)
-            }
-          }
+          val (st, out) = matchFuzzy(state.getOption.orNull, docs, lanes, stateBits, threshold)
           if (st != null) {
             state.update(st)
             // expire the bucket once the watermark passes last-touch + ttl
+            val maxTs = docs.foldLeft(0L)((m, p) => math.max(m, p.ts.getTime))
             state.setTimeoutTimestamp(maxTs + ttlMs)
           }
           out.iterator
         }
       }
 
-    probes
+    fuzzyProbes(pages, cfg, tsCol, stateBits)
+      .withWatermark("ts", watermark)
       .groupByKey(_.bucket)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(matcher)
       .toDF()
@@ -244,12 +204,28 @@ object StreamingDedup {
     val spark = pages.sparkSession
     import spark.implicits._
     val (nb, r) = cfg.bandsRows
+    val lanes = nb * r
+    val threshold = cfg.threshold
+    fuzzyProbes(pages, cfg, tsCol, stateBits)
+      .groupByKey(_.bucket)
+      .flatMapGroups { (_: Long, rows: Iterator[Probe]) =>
+        val docs = rows.toArray.sortBy(p => (p.ts.getTime, p.id))
+        matchFuzzy(null, docs, lanes, stateBits, threshold)._2.iterator
+      }
+      .toDF()
+      .dropDuplicates("id", "dupOf")
+  }
+
+  /** The fuzzy family's probes, shared by both twins: one per (doc,
+    * band), keyed by the band's hash over the doc's full MinHash lanes. */
+  private def fuzzyProbes(pages: DataFrame, cfg: DedupConfig, tsCol: String,
+      stateBits: Int): Dataset[Probe] = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    val (nb, r) = cfg.bandsRows
     val (pa, pb) = Hashes.permutations(nb * r, cfg.seed)
     val ngram = cfg.ngram
     val minLen = cfg.minLength
-    val threshold = cfg.threshold
-    val lanes = nb * r
-    val bBits = stateBits
     pages
       .select(col(cfg.idCol).cast("long").as("id"),
         col(tsCol).cast("timestamp").as("ts"), col(cfg.textCol).as("text"))
@@ -263,7 +239,10 @@ object StreamingDedup {
           if (sh.isEmpty || ts == null) Iterator.empty
           else {
             val sig = Lsh.signature(sh, pa, pb)
-            val packed = packLanes(sig, bBits)
+            // band keys hash the FULL lanes (bucket recall is unchanged
+            // by packing); only the payload that travels and sits in
+            // state is b-bit packed
+            val packed = packLanes(sig, stateBits)
             (0 until nb).iterator.map { band =>
               Probe(Hashes.xxh64Ints(sig, band * r, (band + 1) * r, band.toLong, scratch),
                 id, ts, packed)
@@ -271,22 +250,25 @@ object StreamingDedup {
           }
         }
       }
-      .groupByKey(_.bucket)
-      .flatMapGroups { (_: Long, rows: Iterator[Probe]) =>
-        val docs = rows.toArray.sortBy(p => (p.ts.getTime, p.id))
-        if (docs.isEmpty) Iterator.empty
-        else {
-          val rep = docs.head
-          docs.iterator.drop(1).flatMap { p =>
-            val m = matchingLanes(p.sig, rep.sig, lanes, bBits)
-            val est = estimateJ(m, lanes, bBits)
-            if (est >= threshold && p.id != rep.id) Some(Match(p.id, p.ts, rep.id, est))
-            else None
-          }
-        }
+  }
+
+  /** First-seen-rep matching over one bucket's probes in (ts, id) order,
+    * shared by both twins: `rep` is the bucket's rep so far (null if
+    * none — the first probe then becomes it); every later probe of
+    * another doc matches it at estimated Jaccard ≥ threshold. Returns the
+    * rep after these probes and the matches. */
+  private def matchFuzzy(rep: BucketState, docs: Array[Probe], lanes: Int,
+      bBits: Int, threshold: Double): (BucketState, Seq[Match]) = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Match]
+    var st = rep
+    docs.foreach { p =>
+      if (st == null) st = BucketState(p.id, p.ts.getTime, p.sig)
+      else if (st.repId != p.id) {
+        val est = estimateJ(matchingLanes(p.sig, st.sig, lanes, bBits), lanes, bBits)
+        if (est >= threshold) out += Match(p.id, p.ts, st.repId, est)
       }
-      .toDF()
-      .dropDuplicates("id", "dupOf")
+    }
+    (st, out.toSeq)
   }
 
   // ---------------------------------------------------------- semantic
@@ -344,47 +326,24 @@ object StreamingDedup {
       ttlMs: Long = 10L * 60L * 1000L): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val planes = Ann.hyperplanes(seed, nbits, dim)
-    val probes = vectors
-      .select(col("id").cast("long").as("id"),
-        col(tsCol).cast("timestamp").as("ts"), col("vec"))
-      .as[(Long, java.sql.Timestamp, Array[Float])]
-      .flatMap { case (id, ts, vec) =>
-        if (vec == null || ts == null) Iterator.empty
-        else {
-          val home = Ann.bucketOf(vec, planes, dim)
-          Ann.probeSet(home, nbits, probeRadius).iterator
-            .map(b => VecProbe(b, home, id, ts, vec))
-        }
-      }
-      .withWatermark("ts", watermark)
 
     val matcher =
       (bucket: Long, rows: Iterator[VecProbe], state: GroupState[VecState]) => {
         if (state.hasTimedOut) { state.remove(); Iterator.empty[SemMatch] }
         else {
           val docs = rows.toArray.sortBy(p => (p.ts.getTime, p.id))
-          val out = scala.collection.mutable.ArrayBuffer.empty[SemMatch]
-          var st = state.getOption.orNull
-          var maxTs = 0L
-          docs.foreach { p =>
-            if (p.ts.getTime > maxTs) maxTs = p.ts.getTime
-            if (st == null) {
-              if (p.home == bucket) st = VecState(p.id, p.ts.getTime, p.vec)
-            } else if (st.repId != p.id) {
-              val c = cosineOf(p.vec, st.vec)
-              if (c >= threshold) out += SemMatch(p.id, p.ts, st.repId, c)
-            }
-          }
+          val (st, out) = matchSemantic(bucket, state.getOption.orNull, docs, threshold)
           if (st != null) {
             state.update(st)
+            val maxTs = docs.foldLeft(0L)((m, p) => math.max(m, p.ts.getTime))
             state.setTimeoutTimestamp(maxTs + ttlMs)
           } // else: no home member seen yet — nothing to hold
           out.iterator
         }
       }
 
-    probes
+    semanticProbes(vectors, dim, nbits, seed, probeRadius, tsCol)
+      .withWatermark("ts", watermark)
       .groupByKey(_.bucket)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(matcher)
       .toDF()
@@ -404,6 +363,22 @@ object StreamingDedup {
       tsCol: String = "ts"): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
+    semanticProbes(vectors, dim, nbits, seed, probeRadius, tsCol)
+      .groupByKey(_.bucket)
+      .flatMapGroups { (bucket: Long, rows: Iterator[VecProbe]) =>
+        val docs = rows.toArray.sortBy(p => (p.ts.getTime, p.id))
+        matchSemantic(bucket, null, docs, threshold)._2.iterator
+      }
+      .toDF()
+      .dropDuplicates("id", "dupOf")
+  }
+
+  /** The semantic family's probes, shared by both twins: one per bucket
+    * within `probeRadius` bits of the doc's home sign-LSH bucket. */
+  private def semanticProbes(vectors: DataFrame, dim: Int, nbits: Int, seed: Long,
+      probeRadius: Int, tsCol: String): Dataset[VecProbe] = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
     val planes = Ann.hyperplanes(seed, nbits, dim)
     vectors
       .select(col("id").cast("long").as("id"),
@@ -417,22 +392,25 @@ object StreamingDedup {
             .map(b => VecProbe(b, home, id, ts, vec))
         }
       }
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket: Long, rows: Iterator[VecProbe]) =>
-        val docs = rows.toArray.sortBy(p => (p.ts.getTime, p.id))
-        val out = scala.collection.mutable.ArrayBuffer.empty[SemMatch]
-        var st: VecState = null
-        docs.foreach { p =>
-          if (st == null) {
-            if (p.home == bucket) st = VecState(p.id, p.ts.getTime, p.vec)
-          } else if (st.repId != p.id) {
-            val c = cosineOf(p.vec, st.vec)
-            if (c >= threshold) out += SemMatch(p.id, p.ts, st.repId, c)
-          }
-        }
-        out.iterator
+  }
+
+  /** Home-gated first-seen-rep matching over one bucket's probes in (ts,
+    * id) order, shared by both twins: `rep` is the bucket's rep so far
+    * (null if none — the first HOME probe then becomes it); every later
+    * probe of another doc matches it at exact cosine ≥ threshold. Returns
+    * the rep after these probes and the matches. */
+  private def matchSemantic(bucket: Long, rep: VecState, docs: Array[VecProbe],
+      threshold: Double): (VecState, Seq[SemMatch]) = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[SemMatch]
+    var st = rep
+    docs.foreach { p =>
+      if (st == null) {
+        if (p.home == bucket) st = VecState(p.id, p.ts.getTime, p.vec)
+      } else if (st.repId != p.id) {
+        val c = cosineOf(p.vec, st.vec)
+        if (c >= threshold) out += SemMatch(p.id, p.ts, st.repId, c)
       }
-      .toDF()
-      .dropDuplicates("id", "dupOf")
+    }
+    (st, out.toSeq)
   }
 }

@@ -47,10 +47,6 @@ object Bench {
     "q_lang_id",
     "q_fingerprint",
     "q_token_bpe",
-    "q_binary_meta",
-    "q_media_meta",
-    "q_audio_meta",
-    "q_video_meta",
     "q_char_lm",
     "q_repetition",
     "q_norm_dedup",
@@ -67,8 +63,6 @@ object Bench {
     "q_anchor_text", // anchor-text rollup per destination host
     "q_ppl_buckets", // CCNet-style corpus split by LM-score tercile
     "q_domain_quality", // per-host quality rollup (curation signal)
-    "q_image_dhash", // perceptual image fingerprints (BMP decode + dHash)
-    "q_audio_fp", // perceptual audio fingerprints (WAV decode + energy hash)
     "q_link_graph",
     "q_pagerank",
     "q_html_text",
@@ -142,8 +136,7 @@ object Bench {
     // measured 2-7× inflation at this toy scale (a production job runs
     // each plan for hours; steady state is the honest number). Same
     // protocol as ScalingBench's untimed warmup slice.
-    val names = headline.filter(qmap.contains)
-      .filter(n => only.isEmpty || only(n))
+    val names = headline.filter(n => only.isEmpty || only(n))
     names.foreach { name =>
       try qmap(name)(spark, sfDir).count()
       catch { case _: Throwable => () }

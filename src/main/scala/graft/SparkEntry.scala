@@ -586,233 +586,6 @@ object SparkEntry {
         .select(col("doc_id"), col("lang"), col("lang_rank"), col("bucket"))
     }),
 
-    // Perceptual image dedup (Multimodal.encodeBmp → decodeBmp → dHash):
-    // per-doc 18×16 BMPs are synthesized from doc_id gradients (doc_id%37
-    // plants exact-duplicate image groups), round-tripped through the REAL
-    // encoder/decoder, dHashed, and grouped by hash. DuckDB recomputes the
-    // 64-bit hash from the PIXEL ARITHMETIC alone (no BMP parsing), so the
-    // row gates the whole byte path: encode, decode (bottom-up flip,
-    // BGR→RGB, row padding), integer luma, block means, bit packing.
-    "q_image_dhash" -> ((s, dir) => {
-      import s.implicits._
-      val imgs = documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 37
-            val w = 18; val h = 16
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = ((d * 31 + x * 7 + y * 13) % 256).toByte
-                rgb(p + 1) = ((d * 17 + x * 11 + y * 5) % 256).toByte
-                rgb(p + 2) = ((d * 23 + x * 3 + y * 19) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Multimodal.encodeBmp(w, h, rgb))
-          }
-        }.toDF("doc_id", "img")
-      // groupBy+join, not min().over(Window.partitionBy(fp)): a viral
-      // image duplicated 10^6 times is ONE window task (no partial agg,
-      // no AQE skew split); the groupBy partial-aggregates map-side and
-      // the join-back is skew-splittable. Same output, bounded tasks.
-      val fp = Multimodal.imageDHash(imgs, "doc_id", "img")
-      fp.join(fp.groupBy(col("dhash")).agg(min(col("id")).as("component")),
-          Seq("dhash"))
-        .withColumn("dhash_bits", lpad(bin(col("dhash")), 64, "0"))
-        .select(col("id").as("doc_id"), col("dhash_bits"), col("component"))
-    }),
-
-    // Perceptual audio dedup (Multimodal.encodeWavPcm16 → decodeWavPcm →
-    // audioEnergyHash): per-doc 200-sample 16-bit PCM WAVs are synthesized
-    // from doc_id waveforms (doc_id%29 plants exact-duplicate clip groups),
-    // round-tripped through the REAL encoder/decoder, energy-hashed, and
-    // grouped by fingerprint. DuckDB recomputes the 64-bit hash from the
-    // SAMPLE ARITHMETIC alone (no WAV parsing), so the row gates the whole
-    // byte path: encode, decode (little-endian 16-bit, RIFF chunk walk),
-    // |amplitude| recovery, frame assignment k=⌊t·65/n⌋, floor means,
-    // bit packing.
-    "q_audio_fp" -> ((s, dir) => {
-      import s.implicits._
-      val clips = documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 29
-            // period depends on d: distinct waveforms get distinct energy
-            // profiles (a phase shift alone can collide in the hash)
-            val samples = Array.tabulate(200) { t =>
-              ((d * 37 + t * (7 + d)) % 197 - 98).toInt
-            }
-            (id, Multimodal.encodeWavPcm16(8000, samples))
-          }
-        }.toDF("doc_id", "wav")
-      // hot-fingerprint-safe grouping (see q_image_dhash note)
-      val fp = Multimodal.audioFingerprint(clips, "doc_id", "wav")
-      fp.join(fp.groupBy(col("afp")).agg(min(col("id")).as("component")),
-          Seq("afp"))
-        .withColumn("fp_bits", lpad(bin(col("afp")), 64, "0"))
-        .select(col("id").as("doc_id"), col("n_samples"), col("fp_bits"),
-          col("component"))
-    }),
-
-    // REAL PNG codec gate (Multimodal.encodePng → decodePng): per-doc
-    // pixels from an integer formula are PNG-encoded (the default
-    // rowFilter cycles the five spec filters, so every image exercises
-    // every unfilter branch + the JDK Inflater) and decoded back; the
-    // output is a position-weighted integer checksum over the decoded
-    // RGB raster. DuckDB recomputes the checksum from the PIXEL FORMULA
-    // alone — any byte the codec got wrong (filter math, zlib framing,
-    // scanline layout) shifts the weighted sum. Zero shuffle: one
-    // mapPartitions pass, embarrassingly parallel at any scale.
-    "q_png_decode" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 37
-            val w = 18; val h = 16
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = ((d * 31 + x * 7 + y * 13) % 256).toByte
-                rgb(p + 1) = ((d * 17 + x * 11 + y * 5) % 256).toByte
-                rgb(p + 2) = ((d * 23 + x * 3 + y * 19) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            val png = Multimodal.encodePng(w, h, rgb)
-            Multimodal.decodeImage(png) match {
-              case Some((dw, dh, px)) =>
-                var sum = 0L
-                var i = 0
-                while (i < dw * dh) {
-                  sum += ((px(i * 3) & 0xFF) * 3L + (px(i * 3 + 1) & 0xFF) * 5L +
-                    (px(i * 3 + 2) & 0xFF) * 7L) * (i + 1)
-                  i += 1
-                }
-                (id, dw, dh, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "w", "h", "pix_sum")
-    }),
-
-    // REAL GIF codec gate (Multimodal.encodeGif → decodeGif): palette
-    // indices and the 256-entry color table both come from integer
-    // formulas; the engine LZW-compresses and decompresses (variable
-    // code widths, clear codes, sub-block framing) and checksums the
-    // decoded raster with the same position-weighted sum. DuckDB
-    // recomputes from the formulas — a single wrong index anywhere in
-    // the LZW stream shifts the sum. Zero shuffle.
-    "q_gif_decode" -> ((s, dir) => {
-      import s.implicits._
-      val pal = Array.tabulate(256 * 3) { i =>
-        val c = i / 3
-        (i % 3 match {
-          case 0 => (c * 29 + 5) % 256
-          case 1 => (c * 13 + 1) % 256
-          case _ => (c * 7 + 3) % 256
-        }).toByte
-      }
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 37
-            val w = 20; val h = 14
-            val idx = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                idx(y * w + x) = ((d * 11 + x * 3 + y * 5) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            val gif = Multimodal.encodeGif(w, h, idx, pal)
-            Multimodal.decodeImage(gif) match {
-              case Some((dw, dh, px)) =>
-                var sum = 0L
-                var i = 0
-                while (i < dw * dh) {
-                  sum += ((px(i * 3) & 0xFF) * 3L + (px(i * 3 + 1) & 0xFF) * 5L +
-                    (px(i * 3 + 2) & 0xFF) * 7L) * (i + 1)
-                  i += 1
-                }
-                (id, dw, dh, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "w", "h", "pix_sum")
-    }),
-
-    // REAL FLAC codec gate (Flac.encode → Flac.decodeSamples): per-doc
-    // PCM from an integer formula is FLAC-encoded (per-frame fixed-
-    // predictor order search, Rice residuals, CRC-8/16 framing) and
-    // decoded back; FLAC is LOSSLESS, so the position-weighted sample
-    // checksum must equal what DuckDB computes from the waveform formula
-    // alone — one wrong Rice bit, predictor tap, or CRC byte and the row
-    // dies. blockSize=128 forces multi-frame streams with a ragged tail.
-    // Zero shuffle: one mapPartitions pass.
-    "q_flac_decode" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = (id % 29).toInt
-            val pcm = Array.tabulate(300)(t => (d * 41 + t * (11 + d)) % 3001 - 1500)
-            val flac = Flac.encode(8000, 1, pcm, blockSize = 128)
-            Flac.decodeSamples(flac) match {
-              case Some((rate, _, _, out)) =>
-                var sum = 0L
-                var t = 0
-                while (t < out.length) { sum += out(t).toLong * (t + 1); t += 1 }
-                (id, rate, out.length, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "sample_rate", "n_samples", "sample_sum")
-    }),
-
-    // G.711 telephony-codec gate (Multimodal.encodeWavG711 → decodeAudio):
-    // even docs carry μ-law WAVs, odd docs A-law, 64 bytes from doc_id
-    // arithmetic. The expansion formulas are pure integer bit math
-    // (complement / XOR 0x55, segment shift, bias), so DuckDB replays
-    // every sample independently and the position-weighted sum over the
-    // expanded 16-bit values is exact — no float tolerance. The engine
-    // side runs the real dispatch (RIFF sniff → WAV walk → format-tag
-    // routing); MultimodalSpec separately proves both expanders agree
-    // with the JDK's own telephony codecs on all 256 bytes. Zero shuffle.
-    "q_g711_decode" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val enc = Array.tabulate(64)(i => ((id * 37 + i * 13 + 5) % 256).toByte)
-            val wav = Multimodal.encodeWavG711(8000, enc, alaw = id % 2 == 1)
-            Multimodal.decodeAudio(wav) match {
-              case Some((rate, _, samples)) =>
-                var sum = 0L
-                var i = 0
-                while (i < samples.length) {
-                  sum += math.round(samples(i) * 32768f).toLong * (i + 1)
-                  i += 1
-                }
-                (id, rate, samples.length, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "sample_rate", "n_samples", "sample_sum")
-    }),
-
     // Data-mixture sampling (Sampling.mixtureRatesPpm — the Pile/Dolma
     // mixing knob): per-source token counts → integer-ppm keep rates
     // splitting a token budget by planted weights, sampled with the
@@ -880,9 +653,8 @@ object SparkEntry {
     }),
 
     // Binary near-dup pairs via chunk overlap (Cdc.chunkHashes sets →
-    // the SSJoin prefix-filtered exact join): the CDC complement to the
-    // perceptual image/audio hashes — arbitrary blobs whose chunk sets
-    // share ≥50% Jaccard. Planted 32-class blobs give real intermediate
+    // the SSJoin prefix-filtered exact join): arbitrary blobs whose chunk
+    // sets share ≥50% Jaccard. Planted 32-class blobs give real intermediate
     // similarities; DuckDB replays chunking via the recursive CTE and
     // brute-forces every pair on literal chunk content.
     "q_cdc_pairs" -> ((s, dir) => {
@@ -899,236 +671,6 @@ object SparkEntry {
         .select(col("id_a"), col("id_b"), col("sim_decile"))
     }),
 
-    // REAL baseline-TIFF decode gate (Multimodal.encodeTiff →
-    // decodeImage → decodeTiff): planted pixel formula, alternating byte
-    // order by id parity and compression by id%3 (PackBits / real LZW /
-    // none) — the oracle replays the formula alone, so a wire-variant-
-    // dependent mis-decode (endian swap, bad RLE, LZW width slip) breaks
-    // the hash. Zero shuffle.
-    "q_tiff_decode" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 37
-            val w = 19; val h = 11
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = ((d * 29 + x * 5 + y * 17) % 256).toByte
-                rgb(p + 1) = ((d * 13 + x * 9 + y * 7) % 256).toByte
-                rgb(p + 2) = ((d * 19 + x * 3 + y * 11) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            val tif = Multimodal.encodeTiff(w, h, rgb,
-              bigEndian = id % 2 == 1, packBits = id % 3 == 0, lzw = id % 3 == 1)
-            Multimodal.decodeImage(tif) match {
-              case Some((dw, dh, px)) =>
-                var sum = 0L
-                var i = 0
-                while (i < dw * dh) {
-                  sum += ((px(i * 3) & 0xFF) * 3L + (px(i * 3 + 1) & 0xFF) * 5L +
-                    (px(i * 3 + 2) & 0xFF) * 7L) * (i + 1)
-                  i += 1
-                }
-                (id, dw, dh, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "w", "h", "pix_sum")
-    }),
-
-    // REAL IMA-ADPCM decode gate (Multimodal.encodeWavImaAdpcm →
-    // decodeAudio): two constant-amplitude blocks — the codec's lossless
-    // corner (zero deltas quantize to nibble 0 at the minimum step, and
-    // each block header re-anchors the predictor exactly), so DuckDB can
-    // replay the decoded samples in closed form while the adaptive-step
-    // math is suite-gated (roundtrip SNR + hand-computed goldens).
-    "q_adpcm_decode" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val v1 = ((id * 53) % 2048).toInt - 1024
-            val v2 = ((id * 29) % 2048).toInt - 1024
-            val samples = Array.fill(33)(v1.toShort) ++ Array.fill(33)(v2.toShort)
-            val wav = Multimodal.encodeWavImaAdpcm(8000, samples, blockSamples = 33)
-            Multimodal.decodeAudio(wav) match {
-              case Some((rate, _, dec)) =>
-                var sum = 0L
-                var i = 0
-                while (i < dec.length) {
-                  sum += math.round(dec(i) * 32768f).toLong * (i + 1)
-                  i += 1
-                }
-                (id, rate, dec.length, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "sample_rate", "n_samples", "sample_sum")
-    }),
-
-    // REAL MJPEG-AVI video gate (Avi.encodeMjpeg → Avi.decodeFrames):
-    // 3-frame videos whose frames are constant-8×8-block JPEGs (the
-    // lossless corner again), decoded through the RIFF movi walk + the
-    // real JPEG decoder; the checksum weights each pixel by position AND
-    // frame index, so a dropped/reordered/mis-decoded frame shifts the
-    // sum. DuckDB recomputes from the per-frame block formula alone.
-    // Zero shuffle: one mapPartitions pass.
-    "q_mjpeg_decode" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 37
-            val w = 24; val h = 16
-            val frames = (0 until 3).map { f =>
-              val luma = Array.tabulate(w * h) { i =>
-                val x = i % w; val y = i / w
-                ((d * 31 + f * 59 + (x / 8) * 17 + (y / 8) * 47) % 256).toByte
-              }
-              Jpeg.encodeGray(w, h, luma, Jpeg.FlatQuant)
-            }
-            val avi = Avi.encodeMjpeg(w, h, 10, frames)
-            val decoded = Avi.decodeFrames(avi)
-            var sum = 0L
-            decoded.zipWithIndex.foreach { case ((dw, dh, px), f) =>
-              var i = 0
-              while (i < dw * dh) {
-                sum += ((px(i * 3) & 0xFF) * 3L + (px(i * 3 + 1) & 0xFF) * 5L +
-                  (px(i * 3 + 2) & 0xFF) * 7L) * (i + 1) * (f + 1)
-                i += 1
-              }
-            }
-            (id, decoded.length, sum)
-          }
-        }.toDF("doc_id", "n_frames", "pix_sum")
-    }),
-
-    // Perceptual VIDEO dedup fingerprint (Avi.videoFingerprint): per-frame
-    // dHash folded by per-bit majority vote — integer-exact, so DuckDB
-    // replays the whole thing: block-constant 18×16 frames make every
-    // 2×2 dHash cell equal its block value (cells never straddle the 8px
-    // blocks), the per-frame bits are cell comparisons, and the majority
-    // is a ≥2-of-3 vote per bit. Exact copies share vfp (component gate).
-    "q_video_fp" -> ((s, dir) => {
-      import s.implicits._
-      val vids = documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 37
-            val w = 18; val h = 16
-            val frames = (0 until 3).map { f =>
-              val luma = Array.tabulate(w * h) { i =>
-                val x = i % w; val y = i / w
-                ((d * 31 + f * 59 + (x / 8) * 97 + (y / 8) * 53) % 256).toByte
-              }
-              Jpeg.encodeGray(w, h, luma, Jpeg.FlatQuant)
-            }
-            (id, Avi.encodeMjpeg(w, h, 5, frames))
-          }
-        }.toDF("doc_id", "vid")
-      // hot-fingerprint-safe grouping (see q_image_dhash note)
-      val fp = Avi.videoFingerprint(vids, "doc_id", "vid")
-      fp.join(fp.groupBy(col("vfp")).agg(min(col("id")).as("component")),
-          Seq("vfp"))
-        .withColumn("vfp_bits", lpad(bin(col("vfp")), 64, "0"))
-        .select(col("id").as("doc_id"), col("n_frames"), col("vfp_bits"),
-          col("component"))
-    }),
-
-    // REAL JPEG codec gate (Jpeg.encodeGray → Multimodal.decodeImage):
-    // a lossy format oracle-gated through its LOSSLESS corner — images of
-    // constant 8×8 blocks are DC-only after the DCT, and with a flat
-    // quantization table the whole pipeline (level shift, FDCT, quantize,
-    // canonical Huffman with DC prediction, restart markers, byte
-    // stuffing, IDCT) round-trips BIT-EXACTLY. restartInterval=2 puts
-    // real DRI/RSTn handling inside the gate. DuckDB recomputes the
-    // weighted checksum from the block-value formula alone — one wrong
-    // Huffman bit, DC diff, or dequant shifts the sum. Zero shuffle.
-    "q_jpeg_decode" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 37
-            val w = 24; val h = 16 // 3×2 MCUs
-            val luma = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                luma(y * w + x) = ((d * 31 + (x / 8) * 17 + (y / 8) * 47) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            val jpg = Jpeg.encodeGray(w, h, luma, Jpeg.FlatQuant, restartInterval = 2)
-            Multimodal.decodeImage(jpg) match {
-              case Some((dw, dh, px)) =>
-                var sum = 0L
-                var i = 0
-                while (i < dw * dh) {
-                  sum += ((px(i * 3) & 0xFF) * 3L + (px(i * 3 + 1) & 0xFF) * 5L +
-                    (px(i * 3 + 2) & 0xFF) * 7L) * (i + 1)
-                  i += 1
-                }
-                (id, dw, dh, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "w", "h", "pix_sum")
-    }),
-
-    // PROGRESSIVE JPEG gate (Jpeg.encodeGrayProgressive → decodeImage):
-    // same lossless-corner argument as q_jpeg_decode, but the wire is a
-    // six-scan SOF2 stream — DC first at Al=1, DC refinement, AC first
-    // per spectral band, AC refinement down to Al=0, with RSTn markers in
-    // every scan (restartInterval=2). Constant 8×8 blocks make every AC
-    // scan pure EOB traffic and the DC successive approximation exact, so
-    // the decoded raster must equal the formula bit-for-bit; one wrong
-    // refinement bit, EOB run, band boundary or restart reset shifts the
-    // weighted checksum DuckDB recomputes from the block formula alone.
-    "q_jpeg_prog" -> ((s, dir) => {
-      import s.implicits._
-      documents(s, dir).select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val d = id % 41
-            val w = 32; val h = 16 // 4×2 blocks, interval 2 → RSTn in-scan
-            val luma = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                luma(y * w + x) = ((d * 29 + (x / 8) * 19 + (y / 8) * 53) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            val jpg = Jpeg.encodeGrayProgressive(w, h, luma, Jpeg.FlatQuant,
-              restartInterval = 2)
-            Multimodal.decodeImage(jpg) match {
-              case Some((dw, dh, px)) =>
-                var sum = 0L
-                var i = 0
-                while (i < dw * dh) {
-                  sum += ((px(i * 3) & 0xFF) * 3L + (px(i * 3 + 1) & 0xFF) * 5L +
-                    (px(i * 3 + 2) & 0xFF) * 7L) * (i + 1)
-                  i += 1
-                }
-                (id, dw, dh, sum)
-              case None => (id, -1, -1, -1L)
-            }
-          }
-        }.toDF("doc_id", "w", "h", "pix_sum")
-    }),
-
     // Per-host quality rollup (UrlOps.hostQuality): Gopher gate then one
     // host-keyed partial agg — the domain-level curation signal. URLs are
     // synthesized from doc_id (the documents table has no url column, same
@@ -1142,15 +684,6 @@ object SparkEntry {
           documents(s, dir).withColumn("url", url), "url", "text")
         .select(col("host"), col("docs"), col("pass_docs"),
           col("tokens"), col("pass_per_mille"))
-    }),
-    // ------------------------------------------- multimodal binary column
-    // (documents has no binary column; utf-8-encoding text stands in for
-    // the html payload — the typed binary plumbing is what's exercised)
-    "q_binary_meta" -> ((s, dir) => {
-      val bin = documents(s, dir)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("bin"))
-      Multimodal.describeBinary(bin, "doc_id", "bin")
-        .select(col("id").as("doc_id"), col("n_bytes"), col("magic"))
     }),
 
     // HTML extraction roundtrip: wrap each doc's text in markup (with a
@@ -1399,91 +932,6 @@ object SparkEntry {
       val batch = d.where(col("doc_id") % 5 === 0).unionByName(planted)
       IncrementalDedup.newDocs(existing, batch, "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-    }),
-
-    // Image-header metadata roundtrip: per doc, construct a PNG header
-    // whose dimensions derive arithmetically from (doc_id, n_chars), then
-    // recover them with the REAL byte-level parser (Multimodal.imageDims)
-    // through the distributed mediaMeta pass. DuckDB recomputes the
-    // expected dimensions by the same arithmetic WITHOUT any byte parsing,
-    // so a parser endianness/offset bug fails the hash. (The constructor/
-    // parser pair itself is pinned against independent hand-built golden
-    // bytes in MultimodalSpec — spec layout correctness lives there.)
-    "q_media_meta" -> ((s, dir) => {
-      import s.implicits._
-      val d = documents(s, dir).select(col("doc_id"), col("n_chars"))
-        .as[(Long, Long)]
-      // three header formats by id arithmetic: PNG, TIFF little-endian,
-      // TIFF big-endian — the oracle replays magic+dims from doc_id
-      // alone, so a bit-packing bug in ANY of the three constructors or
-      // parsers fails the hash
-      val bin = d.mapPartitions(_.map { case (id, nc) =>
-        val w = (id % 1000L + 1L).toInt
-        val h = (nc % 800L + 1L).toInt
-        val blob = id % 4L match {
-          case 1L => Multimodal.tiffHeader(w, h)
-          case 2L => Multimodal.tiffHeader(w, h, bigEndian = true)
-          case _ => Multimodal.pngHeader(w, h)
-        }
-        (id, blob)
-      }).toDF("doc_id", "bin")
-      Multimodal.mediaMeta(bin, "doc_id", "bin")
-        .select(col("id").as("doc_id"), col("magic"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"))
-    }),
-
-    // Audio metadata (FLAC STREAMINFO parse): synthesize a FLAC header
-    // whose rate/channels/duration are pure doc_id arithmetic; every 11th
-    // doc gets a non-audio blob so the null path is non-vacuous. DuckDB
-    // derives the expectation from the id arithmetic alone — a bit-packing
-    // bug in either flacHeader or flacMeta fails the hash (and the suite
-    // pins each side against independent byte goldens).
-    "q_audio_meta" -> ((s, dir) => {
-      import s.implicits._
-      val d = documents(s, dir).select(col("doc_id")).as[Long]
-      val bin = d.mapPartitions(_.map { id =>
-        val blob =
-          if (id % 11L == 0L) "not audio at all".getBytes
-          else {
-            val rate = (8000L + (id % 5L) * 8000L).toInt
-            Multimodal.flacHeader(rate, (id % 2L).toInt + 1, 16,
-              rate.toLong * ((id % 10L) + 1L))
-          }
-        (id, blob)
-      }).toDF("doc_id", "bin")
-      Multimodal.mediaMeta(bin, "doc_id", "bin")
-        .select(col("id").as("doc_id"), col("magic"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"),
-          col("duration_ms"))
-    }),
-
-    // Video-container metadata (Multimodal.mp4Meta/webmMeta): REAL ISO-BMFF
-    // box-walk and EBML element-walk — headers synthesized from pure doc_id
-    // arithmetic (every 9th doc is non-video, the rest alternate mp4/webm),
-    // so DuckDB derives magic/width/height/duration from the id alone,
-    // independent of both the parsers and their fixture duals.
-    "q_video_meta" -> ((s, dir) => {
-      import s.implicits._
-      val d = documents(s, dir).select(col("doc_id")).as[Long]
-      val bin = d.mapPartitions(_.map { id =>
-        val blob =
-          if (id % 9L == 0L) "not a video container".getBytes
-          else {
-            val dur = ((id % 10L) + 1L) * 500L
-            val w = 320 + (id % 4L).toInt * 160
-            val h = 240 + (id % 4L).toInt * 120
-            if (id % 2L == 0L) Multimodal.mp4Header(dur, w, h)
-            else Multimodal.webmHeader(dur, w, h)
-          }
-        (id, blob)
-      }).toDF("doc_id", "bin")
-      Multimodal.mediaMeta(bin, "doc_id", "bin")
-        .select(col("id").as("doc_id"), col("magic"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("duration_ms"))
     }),
 
     // Per-domain frequency cap (Sampling.domainCap): synthesize a URL whose
@@ -2238,41 +1686,6 @@ object SparkEntry {
       """SELECT doc_id,
         |len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))::BIGINT AS n_bpe
         |FROM documents""".stripMargin,
-    // texts are ascii ([a-z0-9 ]) so utf-8 byte length == char length; no
-    // magic prefix matches -> constant 'bin'
-    "q_binary_meta" ->
-      """SELECT doc_id, length(text)::BIGINT AS n_bytes, 'bin' AS magic
-        |FROM documents""".stripMargin,
-
-    "q_media_meta" ->
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 4 IN (1, 2) THEN 'tiff' ELSE 'png' END AS magic,
-        |       (doc_id % 1000) + 1 AS width,
-        |       (n_chars % 800) + 1 AS height
-        |FROM documents""".stripMargin,
-
-    "q_audio_meta" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 11 = 0 THEN 'bin' ELSE 'flac' END AS magic,
-        |  CASE WHEN doc_id % 11 = 0 THEN NULL
-        |       ELSE 8000 + (doc_id % 5) * 8000 END AS sample_rate,
-        |  CASE WHEN doc_id % 11 = 0 THEN NULL
-        |       ELSE (doc_id % 2) + 1 END AS channels,
-        |  CASE WHEN doc_id % 11 = 0 THEN NULL
-        |       ELSE ((doc_id % 10) + 1) * 1000 END AS duration_ms
-        |FROM documents""".stripMargin,
-
-    "q_video_meta" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 9 = 0 THEN 'bin'
-        |       WHEN doc_id % 2 = 0 THEN 'mp4' ELSE 'webm' END AS magic,
-        |  CASE WHEN doc_id % 9 = 0 THEN NULL
-        |       ELSE 320 + (doc_id % 4) * 160 END AS width,
-        |  CASE WHEN doc_id % 9 = 0 THEN NULL
-        |       ELSE 240 + (doc_id % 4) * 120 END AS height,
-        |  CASE WHEN doc_id % 9 = 0 THEN NULL
-        |       ELSE ((doc_id % 10) + 1) * 500 END AS duration_ms
-        |FROM documents""".stripMargin,
 
     "q_repetition" ->
       """WITH aug AS (
@@ -2374,64 +1787,6 @@ object SparkEntry {
         |       ELSE 'tail' END AS bucket
         |FROM ranked""".stripMargin,
 
-    "q_image_dhash" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, y.y AS y, x.x AS x,
-        |    ((d.doc_id % 37)*31 + x.x*7 + y.y*13) % 256 AS r,
-        |    ((d.doc_id % 37)*17 + x.x*11 + y.y*5) % 256 AS g,
-        |    ((d.doc_id % 37)*23 + x.x*3 + y.y*19) % 256 AS b
-        |  FROM documents d, generate_series(0,17) x(x), generate_series(0,15) y(y)
-        |), lum AS (
-        |  SELECT doc_id, y//2 AS i, x//2 AS j,
-        |    (299*r + 587*g + 114*b) // 1000 AS luma
-        |  FROM px
-        |), cells AS (
-        |  SELECT doc_id, i, j, sum(luma) // 4 AS cell FROM lum GROUP BY 1,2,3
-        |), bits AS (
-        |  SELECT a.doc_id, (a.i*8 + a.j) AS k,
-        |    CASE WHEN a.cell > b.cell THEN 1 ELSE 0 END AS bit
-        |  FROM cells a JOIN cells b ON a.doc_id=b.doc_id AND a.i=b.i AND b.j=a.j+1
-        |  WHERE a.j < 8
-        |), hashes AS (
-        |  SELECT doc_id, string_agg(bit::VARCHAR, '' ORDER BY k DESC) AS dhash_bits
-        |  FROM bits GROUP BY doc_id
-        |)
-        |SELECT doc_id, dhash_bits,
-        |  min(doc_id) OVER (PARTITION BY dhash_bits) AS component
-        |FROM hashes""".stripMargin,
-
-    "q_audio_fp" ->
-      """WITH smp AS (
-        |  SELECT d.doc_id, t.t AS t,
-        |    abs(((d.doc_id % 29)*37 + t.t*(7 + d.doc_id % 29)) % 197 - 98) AS a
-        |  FROM documents d, generate_series(0,199) t(t)
-        |), fr AS (
-        |  SELECT doc_id, (t*65)//200 AS k, sum(a)//count(*) AS e
-        |  FROM smp GROUP BY 1, 2
-        |), bits AS (
-        |  SELECT a.doc_id, a.k AS k, CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-        |  FROM fr a JOIN fr b ON a.doc_id = b.doc_id AND b.k = a.k + 1
-        |  WHERE a.k < 64
-        |), hashes AS (
-        |  SELECT doc_id, string_agg(bit::VARCHAR, '' ORDER BY k DESC) AS fp_bits
-        |  FROM bits GROUP BY doc_id
-        |)
-        |SELECT doc_id, 200::BIGINT AS n_samples, fp_bits,
-        |  min(doc_id) OVER (PARTITION BY fp_bits) AS component
-        |FROM hashes""".stripMargin,
-
-    "q_png_decode" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, y.y AS y, x.x AS x,
-        |    ((d.doc_id % 37)*31 + x.x*7 + y.y*13) % 256 AS r,
-        |    ((d.doc_id % 37)*17 + x.x*11 + y.y*5) % 256 AS g,
-        |    ((d.doc_id % 37)*23 + x.x*3 + y.y*19) % 256 AS b
-        |  FROM documents d, generate_series(0,17) x(x), generate_series(0,15) y(y)
-        |)
-        |SELECT doc_id, 18 AS w, 16 AS h,
-        |  sum((r*3 + g*5 + b*7) * (y*18 + x + 1))::BIGINT AS pix_sum
-        |FROM px GROUP BY doc_id""".stripMargin,
-
     "q_mixture" ->
       """WITH d AS (
         |  SELECT doc_id, coalesce(nullif(lang, ''), '__null__') AS source,
@@ -2506,128 +1861,6 @@ object SparkEntry {
         |       sum(CASE WHEN rk > 1 THEN 1 ELSE 0 END)::BIGINT AS dup_chunks,
         |       sum(CASE WHEN rk > 1 THEN len ELSE 0 END)::BIGINT AS dup_bytes
         |FROM ranked GROUP BY doc_id""".stripMargin),
-
-    "q_tiff_decode" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, y.y AS y, x.x AS x,
-        |    ((d.doc_id % 37)*29 + x.x*5 + y.y*17) % 256 AS r,
-        |    ((d.doc_id % 37)*13 + x.x*9 + y.y*7) % 256 AS g,
-        |    ((d.doc_id % 37)*19 + x.x*3 + y.y*11) % 256 AS b
-        |  FROM documents d, generate_series(0,18) x(x), generate_series(0,10) y(y)
-        |)
-        |SELECT doc_id, 19 AS w, 11 AS h,
-        |  sum((r*3 + g*5 + b*7) * (y*19 + x + 1))::BIGINT AS pix_sum
-        |FROM px GROUP BY doc_id""".stripMargin,
-
-    "q_adpcm_decode" ->
-      """SELECT doc_id, 8000 AS sample_rate, 66 AS n_samples,
-        |  (((doc_id*53) % 2048) - 1024) * 561
-        |    + (((doc_id*29) % 2048) - 1024) * 1650 AS sample_sum
-        |FROM documents""".stripMargin,
-
-    "q_gif_decode" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, y.y AS y, x.x AS x,
-        |    ((d.doc_id % 37)*11 + x.x*3 + y.y*5) % 256 AS c
-        |  FROM documents d, generate_series(0,19) x(x), generate_series(0,13) y(y)
-        |)
-        |SELECT doc_id, 20 AS w, 14 AS h,
-        |  sum((((c*29+5) % 256)*3 + ((c*13+1) % 256)*5 + ((c*7+3) % 256)*7)
-        |      * (y*20 + x + 1))::BIGINT AS pix_sum
-        |FROM px GROUP BY doc_id""".stripMargin,
-
-    "q_flac_decode" ->
-      """WITH s AS (
-        |  SELECT d.doc_id, t.t AS t,
-        |    ((d.doc_id % 29)*41 + t.t*(11 + d.doc_id % 29)) % 3001 - 1500 AS v
-        |  FROM documents d, generate_series(0,299) t(t)
-        |)
-        |SELECT doc_id, 8000 AS sample_rate, 300 AS n_samples,
-        |  sum(v * (t + 1))::BIGINT AS sample_sum
-        |FROM s GROUP BY doc_id""".stripMargin,
-
-    "q_g711_decode" ->
-      """WITH enc AS (
-        |  SELECT d.doc_id, i.i AS i,
-        |    ((d.doc_id*37 + i.i*13 + 5) % 256)::INT AS b
-        |  FROM documents d, generate_series(0,63) i(i)
-        |),
-        |ex AS (
-        |  SELECT doc_id, i,
-        |    CASE WHEN doc_id % 2 = 0 THEN
-        |      -- mu-law: complement, then ((mant*8+132) << exp) - bias
-        |      CASE WHEN (255 - b) >= 128
-        |           THEN 132 - (((255 - b) % 16) * 8 + 132) * (1 << (((255 - b) // 16) % 8))
-        |           ELSE (((255 - b) % 16) * 8 + 132) * (1 << (((255 - b) // 16) % 8)) - 132
-        |      END
-        |    ELSE
-        |      -- A-law: XOR 0x55; segments 0/1 linear, then doubling;
-        |      -- sign bit SET means positive
-        |      CASE WHEN xor(b, 85) >= 128 THEN 1 ELSE -1 END *
-        |      CASE WHEN (xor(b, 85) // 16) % 8 = 0 THEN (xor(b, 85) % 16) * 16 + 8
-        |           WHEN (xor(b, 85) // 16) % 8 = 1 THEN (xor(b, 85) % 16) * 16 + 264
-        |           ELSE ((xor(b, 85) % 16) * 16 + 264) * (1 << ((xor(b, 85) // 16) % 8 - 1))
-        |      END
-        |    END AS v
-        |  FROM enc
-        |)
-        |SELECT doc_id, 8000 AS sample_rate, 64 AS n_samples,
-        |  sum(v * (i + 1))::BIGINT AS sample_sum
-        |FROM ex GROUP BY doc_id""".stripMargin,
-
-    "q_mjpeg_decode" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, f.f AS f, y.y AS y, x.x AS x,
-        |    ((d.doc_id % 37)*31 + f.f*59 + (x.x // 8)*17 + (y.y // 8)*47) % 256 AS v
-        |  FROM documents d, generate_series(0,2) f(f),
-        |       generate_series(0,23) x(x), generate_series(0,15) y(y)
-        |)
-        |SELECT doc_id, 3 AS n_frames,
-        |  sum(v*15 * (y*24 + x + 1) * (f + 1))::BIGINT AS pix_sum
-        |FROM px GROUP BY doc_id""".stripMargin,
-
-    "q_video_fp" ->
-      """WITH cells AS (
-        |  SELECT d.doc_id, f.f AS f, i.i AS i, j.j AS j,
-        |    ((d.doc_id % 37)*31 + f.f*59 + ((j.j*2) // 8)*97 + ((i.i*2) // 8)*53) % 256 AS cell
-        |  FROM documents d, generate_series(0,2) f(f),
-        |       generate_series(0,8) j(j), generate_series(0,7) i(i)
-        |), fbits AS (
-        |  SELECT a.doc_id, a.f, (a.i*8 + a.j) AS k,
-        |    CASE WHEN a.cell > b.cell THEN 1 ELSE 0 END AS bit
-        |  FROM cells a JOIN cells b
-        |    ON a.doc_id=b.doc_id AND a.f=b.f AND a.i=b.i AND b.j=a.j+1
-        |  WHERE a.j < 8
-        |), vbits AS (
-        |  SELECT doc_id, k, CASE WHEN sum(bit) >= 2 THEN 1 ELSE 0 END AS bit
-        |  FROM fbits GROUP BY doc_id, k
-        |), hashes AS (
-        |  SELECT doc_id, string_agg(bit::VARCHAR, '' ORDER BY k DESC) AS vfp_bits
-        |  FROM vbits GROUP BY doc_id
-        |)
-        |SELECT doc_id, 3::BIGINT AS n_frames, vfp_bits,
-        |  min(doc_id) OVER (PARTITION BY vfp_bits) AS component
-        |FROM hashes""".stripMargin,
-
-    "q_jpeg_decode" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, y.y AS y, x.x AS x,
-        |    ((d.doc_id % 37)*31 + (x.x // 8)*17 + (y.y // 8)*47) % 256 AS v
-        |  FROM documents d, generate_series(0,23) x(x), generate_series(0,15) y(y)
-        |)
-        |SELECT doc_id, 24 AS w, 16 AS h,
-        |  sum(v*15 * (y*24 + x + 1))::BIGINT AS pix_sum
-        |FROM px GROUP BY doc_id""".stripMargin,
-
-    "q_jpeg_prog" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, y.y AS y, x.x AS x,
-        |    ((d.doc_id % 41)*29 + (x.x // 8)*19 + (y.y // 8)*53) % 256 AS v
-        |  FROM documents d, generate_series(0,31) x(x), generate_series(0,15) y(y)
-        |)
-        |SELECT doc_id, 32 AS w, 16 AS h,
-        |  sum(v*15 * (y*32 + x + 1))::BIGINT AS pix_sum
-        |FROM px GROUP BY doc_id""".stripMargin,
 
     "q_domain_quality" ->
       """WITH f AS (

@@ -488,6 +488,41 @@ class EndToEndSpec extends AnyFunSuite {
     assert(joined.contains(Pii.EmailToken) && joined.contains(Pii.PhoneToken))
   }
 
+  test("--existing: a rewritten existing corpus invalidates the ids stage on rerun") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("incr_key").toString
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def page(url: String, text: String) = Page(url, ts, null, text, "en")
+    def writeExisting(text: String): Unit =
+      Seq(page("http://old/1", text))
+        .toDS().toDF().write.mode("overwrite").parquet(s"$dir/existing.parquet")
+    writeExisting("already ingested body of text")
+    Seq(page("http://new/1", "a fresh page about something else entirely"),
+      page("http://new/2", "already ingested body of text"))
+      .toDS().toDF().write.mode("overwrite").parquet(s"$dir/batch.parquet")
+    val argv = Array(
+      "--input", s"$dir/batch.parquet", "--output", s"$dir/out",
+      "--existing", s"$dir/existing.parquet", "--num-perm", "64", "--salt", "4")
+    def keptUrls(): Set[String] =
+      Pipeline.run(spark, Pipeline.parse(argv))._1.select("url").as[String].collect().toSet
+    assert(keptUrls() === Set("http://new/1"))
+    // corpus B no longer holds the repeated text: the rerun into the same
+    // output must recompute ids, so http://new/2 is new again
+    writeExisting("a different page that nobody repeats")
+    assert(keptUrls() === Set("http://new/1", "http://new/2"))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val stages = om.readTree(new java.io.File(s"$dir/out/SUMMARY.json")).get("stages").elements()
+    var sawIds = false
+    while (stages.hasNext) {
+      val st = stages.next()
+      if (st.get("stage").asText() == "ids") {
+        sawIds = true
+        assert(!st.get("resumed").asBoolean(), "ids resumed against a changed existing corpus")
+      }
+    }
+    assert(sawIds, "SUMMARY.json must include the ids stage")
+  }
+
   test("kitchen sink: every post-dedup shaping stage composes in one run and " +
       "resumes byte-identically (--simhash --suffix --dedup-lines --redact-pii " +
       "--sample-target --mix --shard-tokens --cdc-report)") {

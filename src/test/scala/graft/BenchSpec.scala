@@ -23,4 +23,11 @@ class BenchSpec extends AnyFunSuite {
     val b = attempt(steal = 1.0, pre = 110000, post = 105000)
     assert(Bench.bestAttempt(Seq(a, b), gate) === b)
   }
+
+  test("every headline name is a bench query, listed once") {
+    val missing = Bench.headline.filterNot(SparkEntry.benchQueries.contains)
+    assert(missing.isEmpty, s"headline names without a query: $missing")
+    val dups = Bench.headline.diff(Bench.headline.distinct)
+    assert(dups.isEmpty, s"headline names listed twice: $dups")
+  }
 }

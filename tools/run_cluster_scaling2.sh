@@ -9,8 +9,9 @@
 # run the IDENTICAL physical plan; only the executor count differs.
 set -u
 DOCS=$1; REPS=$2; EXEC_CORES=$3; CORES_A=$4; CORES_B=$5; OUT=$6
-SPARK=/opt/spark
-JAR=/root/repo/target/scala-2.13/dedupspark_2.13-0.1.0.jar
+: "${SPARK_HOME:?set SPARK_HOME to the Spark distribution}"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+JAR="$ROOT/target/scala-2.13/dedupspark_2.13-0.1.0.jar"
 MASTER=spark://localhost:7077
 
 export SPARK_LOCAL_DIRS=/dev/shm/spark-local
@@ -19,15 +20,15 @@ export SPARK_LOG_DIR=/tmp/spark-cluster-logs
 export SPARK_WORKER_DIR=/tmp/spark-cluster-work
 
 cleanup() {
-  "$SPARK/sbin/stop-worker.sh" >/dev/null 2>&1
-  "$SPARK/sbin/stop-master.sh" >/dev/null 2>&1
+  "$SPARK_HOME/sbin/stop-worker.sh" >/dev/null 2>&1
+  "$SPARK_HOME/sbin/stop-master.sh" >/dev/null 2>&1
 }
 trap cleanup EXIT
 cleanup
-"$SPARK/sbin/start-master.sh" >/dev/null 2>&1
+"$SPARK_HOME/sbin/start-master.sh" >/dev/null 2>&1
 sleep 3
 SPARK_WORKER_CORES=$((CORES_B > CORES_A ? CORES_B : CORES_A)) \
-  SPARK_WORKER_MEMORY=96g "$SPARK/sbin/start-worker.sh" "$MASTER" >/dev/null 2>&1
+  SPARK_WORKER_MEMORY=96g "$SPARK_HOME/sbin/start-worker.sh" "$MASTER" >/dev/null 2>&1
 sleep 3
 
 # Executor JVMs size their GC/JIT/netty thread pools for ALL visible CPUs
@@ -45,7 +46,7 @@ run() { # total_cores
   echo "== executors $((CORES / EXEC_CORES))x${EXEC_CORES}c $(date +%H:%M:%S) ==" >> "$OUT"
   SPARK_GRAFT_MASTER=$MASTER \
   SPARK_GRAFT_SHUFFLE_PARTITIONS=${SPARK_GRAFT_SHUFFLE_PARTITIONS:-16} \
-  "$SPARK/bin/spark-submit" \
+  "$SPARK_HOME/bin/spark-submit" \
     --master "$MASTER" \
     --class dedup.ScalingBench \
     --driver-memory 8g \

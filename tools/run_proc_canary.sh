@@ -8,16 +8,16 @@
 set -u
 N=${1:-4}
 OUT=${2:-/tmp/proc_canary.jsonl}
-JAR=/root/repo/target/scala-2.13/dedupspark_2.13-0.1.0.jar
-CP="$JAR:/opt/spark/jars/*"
-JAVA=/usr/lib/jvm/java-17-openjdk-amd64/bin/java
+: "${SPARK_HOME:?set SPARK_HOME to the Spark distribution}"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/dedupspark_2.13-0.1.0.jar:$SPARK_HOME/jars/*"
 
 run_one() { # label nprocs
   local LABEL=$1 NP=$2
   echo "== $LABEL $(date +%H:%M:%S) ==" >> "$OUT"
   local PIDS=()
   for i in $(seq 1 "$NP"); do
-    CANARY_MS=${CANARY_MS:-8000} "$JAVA" -cp "$CP" dedup.HostCanary 1 \
+    CANARY_MS=${CANARY_MS:-8000} java -cp "$CP" dedup.HostCanary 1 \
       2>/dev/null | sed "s/^/{\"proc\":$i,\"of\":$NP} /" >> "$OUT" &
     PIDS+=($!)
   done
