@@ -124,11 +124,27 @@ class CheckpointStore(
   /** Commit-or-reuse a stage. `compute` runs only when no valid manifest
     * exists. `chunkRows` switches to the reference's chunked partitioned
     * sink layout (count → min(max(defaultParallelism, ceil(rows/chunk)),
-    * chunkMaxPartitions) partitions → `__pid__` partitionBy). */
+    * chunkMaxPartitions) partitions → `__pid__` partitionBy).
+    *
+    * Spark jobs started inside carry `name` as their `spark.job.description`
+    * (event log and listeners can then attribute them to the stage); the
+    * caller's description is restored afterwards and its job group is left
+    * alone. */
   def stage(
       name: String,
       chunkRows: Option[Long] = None,
       chunkMaxPartitions: Int = 2048)(compute: => DataFrame): DataFrame = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(CheckpointStore.JobDescription)
+    sc.setLocalProperty(CheckpointStore.JobDescription, name)
+    try commitOrReuse(name, chunkRows, chunkMaxPartitions)(compute)
+    finally sc.setLocalProperty(CheckpointStore.JobDescription, outer)
+  }
+
+  private def commitOrReuse(
+      name: String,
+      chunkRows: Option[Long],
+      chunkMaxPartitions: Int)(compute: => DataFrame): DataFrame = {
     if (isCommitted(name)) {
       committed = committed :+ name
       reused = reused + name
@@ -456,6 +472,9 @@ class CheckpointStore(
 }
 
 object CheckpointStore {
+  /** SparkContext local property naming the jobs a stage starts. */
+  private val JobDescription = "spark.job.description"
+
   /** Cheap source-identity fingerprint: xxh64 over the sorted
     * (path, length, mtime) listing — folded into the checkpoint key so a
     * changed --input invalidates stale stage outputs (round-1 ADVICE). */

@@ -3,6 +3,7 @@ package dedup
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Incremental dedup of a new crawl snapshot against an existing corpus —
@@ -33,17 +34,55 @@ import org.apache.spark.util.sketch.BloomFilter
   * Intra-batch duplicates are deliberately retained (run ExactDedup /
   * FuzzyDedup within the batch separately — composition over a fused
   * operator keeps both testable).
+  *
+  * Materialisation: the fuzzy probe reads each of its inputs several
+  * times (the Bloom build counts and then scans the batch band keys, the
+  * candidate join reads them again; the corpus shingles feed both the
+  * index bands and the verify side; the batch shingles both the band keys
+  * and the verify side). [[buildFuzzyIndex]], [[crossPairs]] and
+  * [[newDocsFuzzy]] take a [[Share]] that decides how those
+  * multiply-read frames materialise. The default,
+  * [[lazily]], keeps them plans, as a library call that owns no cache
+  * should. A caller that wants each side computed once passes a
+  * [[Shared]]: it persists every shared frame and is their one owner,
+  * so the caller releases it once the probe's output is materialised
+  * (`dedup.Pipeline` releases it when the `ids` stage has committed).
   */
 object IncrementalDedup {
 
-  /** One-scan Bloom index over md5(textCol). `expectedItems < 0` triggers
-    * a count first (one extra scan; pass the known corpus size to skip). */
+  /** How the probe materialises a frame that several of its readers
+    * share: `share(df)` returns the frame those readers use. */
+  type Share = DataFrame => DataFrame
+
+  /** Every shared frame stays a plan: each reader recomputes it. */
+  val lazily: Share = identity
+
+  /** Persists each frame it is handed and holds it until [[release]],
+    * which unpersists them all; release is idempotent. */
+  final class Shared extends Share {
+    private val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def apply(df: DataFrame): DataFrame = {
+      val d = df.persist(StorageLevel.MEMORY_AND_DISK)
+      held += d
+      d
+    }
+    def release(): Unit = {
+      held.foreach(_.unpersist(blocking = false))
+      held.clear()
+    }
+  }
+
+  /** One-scan Bloom index over md5(textCol). `expectedItems < 0` counts
+    * the non-null texts first (md5 is null exactly when its input is, so
+    * the count needs no hashing; pass the known corpus size to skip it). */
   def buildBloom(existing: DataFrame, textCol: String,
       expectedItems: Long = -1L, fpp: Double = 0.01): BloomFilter = {
     import existing.sparkSession.implicits._
     val keys = existing.select(md5(col(textCol)).as("h"))
       .where(col("h").isNotNull).as[String]
-    val n = if (expectedItems > 0) expectedItems else keys.count()
+    val n =
+      if (expectedItems > 0) expectedItems
+      else existing.where(col(textCol).isNotNull).count()
     keys.rdd.treeAggregate(BloomFilter.create(math.max(n, 1L), fpp))(
       (f, s) => { f.putString(s); f },
       (a, b) => { a.mergeInPlace(b); a })
@@ -70,9 +109,14 @@ object IncrementalDedup {
     * side is scanned at index-build time and never re-shingled again. */
   case class FuzzyIndex(bands: DataFrame, shingles: DataFrame)
 
-  def buildFuzzyIndex(existing: DataFrame, cfg: DedupConfig): FuzzyIndex = {
-    val sh = Lsh.shingleSets(existing, cfg)
-    FuzzyIndex(Lsh.bandKeys(sh, cfg).toDF(), sh.toDF())
+  /** The index over `existing`; its shingle sets feed both the band keys
+    * and the verify side, so `share` decides whether they are computed
+    * once or once per reader. */
+  def buildFuzzyIndex(existing: DataFrame, cfg: DedupConfig,
+      share: Share = lazily): FuzzyIndex = {
+    import existing.sparkSession.implicits._
+    val sh = share(Lsh.shingleSets(existing, cfg).toDF())
+    FuzzyIndex(Lsh.bandKeys(sh.as[DocShingles], cfg).toDF(), sh)
   }
 
   /** Persist the index: the expensive side of incremental fuzzy dedup is
@@ -110,16 +154,22 @@ object IncrementalDedup {
     * window task — Sampling.capPerKey): a batch doc in a hot bucket is
     * still verified against cap candidates in EVERY band it shares, so
     * recall degrades gracefully while candidate volume stays
-    * ≤ cap × bands × |batch|. Default 0 = exact (oracle semantics). */
+    * ≤ cap × bands × |batch|. Default 0 = exact (oracle semantics).
+    *
+    * `share` materialises the probe's multiply-read frames (see the
+    * object's scaladoc) and the set of dropped batch ids, so every reader
+    * of the result re-reads `batch` and that set instead of re-running
+    * the probe. `batch` itself is the caller's to share. */
   def newDocsFuzzy(
       existing: DataFrame,
       batch: DataFrame,
       cfg: DedupConfig,
       index: Option[FuzzyIndex] = None,
       bucketCap: Int = 0,
-      pruneFpp: Double = 0.0): DataFrame = {
-    val dupIds = crossPairs(existing, batch, cfg, index, bucketCap, pruneFpp)
-      .select(col("bid")).distinct()
+      pruneFpp: Double = 0.0,
+      share: Share = lazily): DataFrame = {
+    val dupIds = share(crossPairs(existing, batch, cfg, index, bucketCap, pruneFpp, share)
+      .select(col("bid")).distinct())
     batch.join(dupIds, batch(cfg.idCol).cast("long") === dupIds("bid"), "left_anti")
   }
 
@@ -211,17 +261,24 @@ object IncrementalDedup {
     * in buckets the batch never touches die before the join's Exchange —
     * the difference between shuffling 10^12 index rows per batch and
     * shuffling ~|collisions| + fpp·|index|. Exact: false positives are
-    * eliminated by the (band, bucket) equi-join itself. */
+    * eliminated by the (band, bucket) equi-join itself.
+    *
+    * `share` decides how the batch shingles (read by the band keys and
+    * the verify side), the batch band keys (read by the filter's count
+    * and build and by the candidate join) and a built index's corpus
+    * shingles materialise. */
   def crossPairs(
       existing: DataFrame,
       batch: DataFrame,
       cfg: DedupConfig,
       index: Option[FuzzyIndex] = None,
       bucketCap: Int = 0,
-      pruneFpp: Double = 0.0): DataFrame = {
-    val idx = index.getOrElse(buildFuzzyIndex(existing, cfg))
-    val bSh = Lsh.shingleSets(batch, cfg)
-    val bBands = Lsh.bandKeys(bSh, cfg).toDF()
+      pruneFpp: Double = 0.0,
+      share: Share = lazily): DataFrame = {
+    import batch.sparkSession.implicits._
+    val idx = index.getOrElse(buildFuzzyIndex(existing, cfg, share))
+    val bSh = share(Lsh.shingleSets(batch, cfg).toDF()).as[DocShingles]
+    val bBands = share(Lsh.bandKeys(bSh, cfg).toDF())
     val bandKey = xxhash64(col("band"), col("bucket"))
     val pruned =
       if (pruneFpp <= 0) idx.bands

@@ -156,7 +156,9 @@ object Lsh {
     *            one (band, bucket, min) record per group;
     *   phase 2: the per-group minima reshuffle on (band, bucket) and the
     *            same streaming trick links each group min to the bucket
-    *            min — bridging the salt groups.
+    *            min — bridging the salt groups. The member edges ride the
+    *            same shuffle keyed by the edge, so phase 1's output is
+    *            read once.
     *
     * Two narrow shuffles, zero joins, zero caches — the naive
     * groupBy+join formulation spends most of its wall time sort-merge-
@@ -236,8 +238,6 @@ object Lsh {
         }
       }
       .toDF("kind", "band", "bucket", "a", "b")
-    val edges1 = p1.where(col("kind") === 0).select(col("a").as("src"), col("b").as("dst"))
-    val mins = p1.where(col("kind") === 1).select(col("band"), col("bucket"), col("a").as("lmin"))
     // phase 2: link salt-group representatives (the min; in chain mode also
     // the second member) to the bucket minimum; in chain mode additionally
     // to the PREVIOUS representative — a failed-verify bucket hub must not
@@ -246,31 +246,41 @@ object Lsh {
     // r2 chained only phase 1 (all bridges hub-anchored → hub hazard across
     // groups), and min-only reps let a hub that wins a salt group orphan
     // that group's similar members (no verified bridge out).
+    //
+    // p1 is consumed by this one exchange, so the phase-1 sort and
+    // streaming pass run once: representative records (kind 1) are keyed
+    // by (band, bucket) and sorted into runs, member edges (kind 0) are
+    // keyed by the edge itself — a hot bucket's edges stay spread over
+    // every task — and pass straight through (they sort first, on constant
+    // keys).
     val chainB = chain
-    val edges2 = mins
-      .repartition(col("band"), col("bucket"))
-      .sortWithinPartitions(col("band"), col("bucket"), col("lmin"))
-      .select(col("band"), col("bucket"), col("lmin"))
-      .as[(Int, Long, Long)]
+    val isRep = col("kind") === 1
+    val edges = p1
+      .repartition(when(isRep, xxhash64(col("band"), col("bucket")))
+        .otherwise(xxhash64(col("a"), col("b"))))
+      .sortWithinPartitions(col("kind"), when(isRep, col("band")),
+        when(isRep, col("bucket")), when(isRep, col("a")))
+      .as[(Int, Int, Long, Long, Long)]
       .mapPartitions { it =>
         var band = Int.MinValue; var bucket = 0L; var runMin = 0L
         var prev = 0L
         var first = true
-        it.flatMap { case (b, bk, lmin) =>
-          if (first || b != band || bk != bucket) {
-            first = false; band = b; bucket = bk; runMin = lmin; prev = lmin
-            None
+        it.flatMap { case (kind, b, bk, a, t) =>
+          if (kind == 0) Iterator.single((a, t)) // member edge a → t
+          else if (first || b != band || bk != bucket) { // a: a group rep
+            first = false; band = b; bucket = bk; runMin = a; prev = a
+            Iterator.empty
           } else {
             val out =
-              if (chainB && prev != runMin) Iterator((lmin, runMin), (lmin, prev))
-              else Iterator.single((lmin, runMin))
-            prev = lmin
+              if (chainB && prev != runMin) Iterator((a, runMin), (a, prev))
+              else Iterator.single((a, runMin))
+            prev = a
             out
           }
         }
       }
       .toDF("src", "dst")
-    edges1.union(edges2)
+    edges
       .select(greatest($"src", $"dst").as("src"), least($"src", $"dst").as("dst"))
       .distinct()
   }

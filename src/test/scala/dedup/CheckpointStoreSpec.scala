@@ -393,4 +393,46 @@ class CheckpointStoreSpec extends AnyFunSuite {
     val m = store.manifest("b").get
     assert(m("lineage") === List("a"))
   }
+
+  test("stage: its Spark jobs carry the stage name as description; the caller's " +
+      "job group survives and its description is restored") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("ckpt_desc").toString
+    val store = new CheckpointStore(spark, root, "cfg")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.job.description"),
+          e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("caller", "caller's group")
+    sc.setJobDescription("outer")
+    try {
+      store.stage("x") { (1 to 50).toDF("v").repartition(3) }
+      assert(sc.getLocalProperty("spark.job.description") === "outer")
+      val inStage = { org.apache.spark.sql.dedupbridge.drainListenerBus(sc, 10000L); jobs.size }
+      store.stage("chunked", chunkRows = Some(10L)) { (1 to 50).toDF("v") }
+      val afterStages = { org.apache.spark.sql.dedupbridge.drainListenerBus(sc, 10000L); jobs.size }
+      Seq(1, 2).toDF("v").count() // a caller job after the stages
+      org.apache.spark.sql.dedupbridge.drainListenerBus(sc, 10000L)
+      import scala.jdk.CollectionConverters._
+      val all = jobs.asScala.toSeq
+      assert(inStage > 0, "the stage started no job")
+      assert(all.take(inStage).forall(_ == ("x", "caller")), all.take(inStage))
+      assert(all.slice(inStage, afterStages).map(_._2).forall(_ == "caller"), all)
+      assert(all.slice(inStage, afterStages).map(_._1).toSet.subsetOf(Set("x", "chunked")) &&
+        all.slice(inStage, afterStages).exists(_._1 == "chunked"), all)
+      assert(all.drop(afterStages).nonEmpty &&
+        all.drop(afterStages).forall(_ == ("outer", "caller")), all.drop(afterStages))
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+    }
+    // with no description set before, none is left behind
+    store.stage("y") { Seq(1).toDF("v") }
+    assert(sc.getLocalProperty("spark.job.description") === null)
+  }
 }

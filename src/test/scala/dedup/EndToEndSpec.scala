@@ -554,4 +554,177 @@ class EndToEndSpec extends AnyFunSuite {
     assert(kept2.select("url").collect().map(_.getString(0)).sorted.toSeq ===
       kept.select("url").collect().map(_.getString(0)).sorted.toSeq)
   }
+
+  // ------------------------------------------- --existing probe: once per run
+
+  /** A small `--existing --existing-fuzzy` fixture: an 8-class existing
+    * corpus; a batch with a byte-identical copy of class 0, near-dups of
+    * classes 1 and 2, a near-dup pair inside the batch, new pages, and one
+    * url crawled twice — once with an existing text (the exact probe drops
+    * that copy), once with a new text (it survives). */
+  private def incrementalFixture(name: String): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def text(cls: Int, mut: Int = -1): String = {
+      val toks = Array.tabulate(40)(t => s"c${cls}t$t")
+      if (mut >= 0) toks(mut) = s"mut$mut"
+      toks.mkString(" ")
+    }
+    def html(to: String) = s"""<a href="https://$to/x">x</a>""".getBytes("UTF-8")
+    (0 until 8).map(c => Page(s"https://e.example/$c", ts, null, text(c), "en"))
+      .toDS().toDF().write.mode("overwrite").parquet(s"$dir/existing")
+    Seq(
+      Page("https://b.example/0", ts, html("e.example"), text(0), "en"),
+      Page("https://b.example/1", ts, null, text(1, 3), "de"),
+      Page("https://b.example/2", ts, null, text(2, 38), null),
+      Page("https://b.example/20", ts, html("c.example"), text(20), "en"),
+      Page("https://b.example/20b", ts, null, text(20, 39), "en"),
+      Page("https://b.example/21", ts, null, text(21), "de"),
+      Page("https://b.example/22", ts, html("b.example"), text(22), null),
+      Page("https://b.example/twice", ts, null, text(3), "en"),
+      Page("https://b.example/twice", ts, null, text(23), "en"))
+      .toDS().toDF().write.mode("overwrite").parquet(s"$dir/batch")
+    dir
+  }
+
+  private def incrementalArgs(dir: String, extra: String*): Pipeline.Args =
+    Pipeline.parse(Array("--input", s"$dir/batch", "--output", s"$dir/out",
+      "--existing", s"$dir/existing", "--existing-fuzzy",
+      "--num-perm", "64", "--salt", "4") ++ extra)
+
+  /** One `--existing --existing-fuzzy` run with every executed physical
+    * plan recorded; the cache is cleared first, so what it holds after
+    * the run is what the run left behind. */
+  private lazy val probeRun = {
+    import org.apache.spark.sql.execution.SparkPlan
+    val dir = incrementalFixture("probe_once")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.catalog.clearCache()
+    spark.listenerManager.register(listener)
+    val (kept, _) = try Pipeline.run(spark, incrementalArgs(dir))
+      finally {
+        org.apache.spark.sql.dedupbridge.drainListenerBus(spark.sparkContext, 60000L)
+        spark.listenerManager.unregister(listener)
+      }
+    val cacheEmpty = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+    import scala.jdk.CollectionConverters._
+    (dir, plans.asScala.toSeq, cacheEmpty, kept.select("url").collect().map(_.getString(0)).toSet)
+  }
+
+  /** Children of a physical plan node, entering AQE's final plan, query
+    * stages, reused exchanges and the plans of cached relations. */
+  private def planKids(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution._
+    p match {
+      case a: adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: adaptive.QueryStageExec => Seq(q.plan)
+      case r: exchange.ReusedExchangeExec => Seq(r.child)
+      case m: columnar.InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case o => o.children
+    }
+  }
+
+  /** Every node reachable from `p`, each node instance once. */
+  private def planNodes(roots: Seq[org.apache.spark.sql.execution.SparkPlan])
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[org.apache.spark.sql.execution.SparkPlan, java.lang.Boolean]())
+    val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.execution.SparkPlan]()
+    def go(p: org.apache.spark.sql.execution.SparkPlan): Unit =
+      if (seen.add(p)) { out += p; planKids(p).foreach(go) }
+    roots.foreach(go)
+    out.toSeq
+  }
+
+  /** Root paths of the files scanned under `p`. */
+  private def scannedPaths(p: org.apache.spark.sql.execution.SparkPlan): Set[String] =
+    planNodes(Seq(p)).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toUri.getPath.stripSuffix("/"))
+    }.flatten.toSet
+
+  /** Typed map-partitions nodes producing `cls` objects (shingle sets:
+    * DocShingles; MinHash band keys: BandKey). */
+  private def producing(nodes: Seq[org.apache.spark.sql.execution.SparkPlan], cls: Class[_]) =
+    nodes.collect {
+      case m: org.apache.spark.sql.execution.MapPartitionsExec
+          if m.outputObjAttr.dataType == org.apache.spark.sql.types.ObjectType(cls) => m
+    }
+
+  test("--existing: the kept write neither scans the existing corpus nor runs MinHash") {
+    val (dir, plans, _, _) = probeRun
+    val writes = plans.filter(p => planNodes(Seq(p)).exists {
+      case w: org.apache.spark.sql.execution.command.DataWritingCommandExec =>
+        w.cmd.toString.contains("/out/kept/data")
+      case _ => false
+    })
+    assert(writes.nonEmpty, "no kept write was recorded")
+    writes.foreach { w =>
+      val nodes = planNodes(Seq(w))
+      val existing = new java.io.File(s"$dir/existing").getCanonicalPath
+      assert(!scannedPaths(w).exists(_.startsWith(existing)),
+        s"the kept write scans the existing corpus:\n$w")
+      assert(producing(nodes, classOf[DocShingles]).isEmpty &&
+        producing(nodes, classOf[BandKey]).isEmpty, s"the kept write runs MinHash:\n$w")
+    }
+  }
+
+  test("--existing: batch band keys, corpus shingles and corpus band keys are each " +
+      "computed in exactly one executed plan") {
+    val (dir, plans, _, _) = probeRun
+    val nodes = planNodes(plans)
+    val batch = new java.io.File(s"$dir/batch").getCanonicalPath
+    val existing = new java.io.File(s"$dir/existing").getCanonicalPath
+    def side(ms: Seq[org.apache.spark.sql.execution.MapPartitionsExec], root: String) =
+      ms.filter(m => scannedPaths(m).exists(_.startsWith(root)))
+    val batchBands = side(producing(nodes, classOf[BandKey]), batch)
+    val corpusBands = producing(nodes, classOf[BandKey])
+      .filter(m => scannedPaths(m).forall(_.startsWith(existing)))
+    val corpusShingles = producing(nodes, classOf[DocShingles])
+      .filter(m => scannedPaths(m).forall(_.startsWith(existing)))
+    assert(batchBands.size === 1, s"batch band keys computed ${batchBands.size} times")
+    assert(corpusShingles.size === 1, s"corpus shingled ${corpusShingles.size} times")
+    assert(corpusBands.size === 1, s"corpus band keys computed ${corpusBands.size} times")
+  }
+
+  test("--existing: after Pipeline.run the session's cache manager holds nothing") {
+    val (_, _, cacheEmpty, keptUrls) = probeRun
+    assert(cacheEmpty, "Pipeline.run left cached frames behind")
+    // the probe dropped the copy of class 0, the near-dups of 1 and 2 and
+    // the old copy of the twice-crawled url; the batch pair 20/20b keeps one
+    val pair = Set("https://b.example/20", "https://b.example/20b")
+    assert(keptUrls -- pair === Set("https://b.example/21", "https://b.example/22",
+      "https://b.example/twice"))
+    assert((keptUrls & pair).size === 1)
+  }
+
+  test("--existing with --by-lang and --link-rank: kept == the probed pages " +
+      "minus the removed ids, payload intact") {
+    import org.apache.spark.sql.functions._
+    val dir = incrementalFixture("probe_bylang")
+    val args = incrementalArgs(dir, "--by-lang", "--link-rank", "1")
+    val (kept, assigns) = Pipeline.run(spark, args)
+    val removal = assigns.where(col("id") =!= col("component")).select(col("id"))
+    val expected = Pipeline.preparedPages(spark, args)
+      .withColumn("id", xxhash64(col("url")))
+      .join(removal, Seq("id"), "left_anti")
+    val cols = Seq("id", "url", "warc_ts", "html", "text", "lang").map(col)
+    val got = kept.select(cols: _*)
+    val want = expected.select(cols: _*)
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"kept differs:\n${got.collect().mkString("\n")}\nvs\n${want.collect().mkString("\n")}")
+    assert(got.where(col("url") === "https://b.example/twice").count() === 1L)
+    assert(spark.read.parquet(s"$dir/out/host_ranks").count() > 0L)
+  }
 }

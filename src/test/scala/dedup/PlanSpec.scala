@@ -84,6 +84,29 @@ class PlanSpec extends AnyFunSuite {
       s"candidates do not read the bands stage:\n$cand")
   }
 
+  test("salted star edges: phase 1's streaming pass appears once in the candidates plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapPartitions}
+    import org.apache.spark.sql.types.ObjectType
+    import spark.implicits._
+    val docs = Synth.corpus(spark, 300, 3L).map(d => (Hashes.xxh64Str(d.url), d.text))
+      .toDF("id", "text")
+    val plans = scala.collection.mutable.Map[String, LogicalPlan]()
+    val recording: FuzzyDedup.Stage = name => compute => {
+      val df = compute
+      plans(name) = df.queryExecution.withCachedData
+      FuzzyDedup.persisted(name)(df)
+    }
+    FuzzyDedup.run(docs, DedupConfig(numPerm = 64, saltBuckets = 4), stage = recording)
+    // phase 1 streams each sorted (band, bucket, salt) run into
+    // (kind, band, bucket, member, target) tuples
+    val cand = plans("candidates")
+    val phase1 = cand.collect {
+      case m: MapPartitions
+          if m.outputObjAttr.dataType == ObjectType(classOf[(Int, Int, Long, Long, Long)]) => m
+    }
+    assert(phase1.size === 1, s"phase 1 runs ${phase1.size} times:\n$cand")
+  }
+
   test("verification join is an equi-join on id (sort-merge or hash), never nested-loop") {
     import spark.implicits._
     val sh = Seq(DocShingles(1L, Array(1, 2)), DocShingles(2L, Array(1, 2))).toDS()
