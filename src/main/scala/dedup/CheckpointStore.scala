@@ -61,12 +61,30 @@ class CheckpointStore(
   private def dataPath(name: String) = s"$root/$name/data"
   private def snapshotsDir(name: String) = s"$root/$name/_snapshots"
 
-  /** Stage names committed (or reused) so far, in order — the lineage. */
-  private var committed: List[String] = Nil
+  /** Stage names committed (or reused) so far on this thread's path, in
+    * order: the lineage a stage records. A forked thread starts from its
+    * fork point's lineage, and joining it appends what it committed
+    * ([[fork]]), so no lineage depends on thread timing. */
+  private val path = new InheritableThreadLocal[Vector[String]] {
+    override def initialValue(): Vector[String] = Vector.empty
+  }
 
-  /** Stages that RESUMED from a valid prior snapshot this run (vs
-    * recomputed) — summary metadata only. */
-  private var reused: Set[String] = Set.empty
+  /** Every stage committed (or reused) through this store, in commit
+    * order, and the ones that RESUMED from a valid prior snapshot (vs
+    * recomputed) — summary metadata only. Guarded by `this`. */
+  private val committed = scala.collection.mutable.LinkedHashSet[String]()
+  private val reused = scala.collection.mutable.Set[String]()
+
+  /** Wall time of the stages nested in the stage running on this thread
+    * (a stage forced inside another's compute): subtracted from the outer
+    * stage's wall, so each manifest records self time. */
+  private val nestedNanos = new ThreadLocal[Long] {
+    override def initialValue(): Long = 0L
+  }
+
+  /** Stage start times are offsets from here, so the intervals of stages
+    * that ran at the same time overlap in the manifests. */
+  private val createdNanos = System.nanoTime()
 
   private def readManifest(name: String): Option[com.fasterxml.jackson.databind.JsonNode] =
     readJson(manifestPath(name))
@@ -141,40 +159,80 @@ class CheckpointStore(
     finally sc.setLocalProperty(CheckpointStore.JobDescription, outer)
   }
 
+  /** Runs `body` on its own thread ([[Fork]]). Stages it commits
+    * record the lineage of this fork point; joining the fork appends them
+    * to the joining thread's lineage. Safe because [[stage]] may be
+    * entered from several threads at once. */
+  def fork[A](body: => A): Fork[A] = {
+    val branch = new java.util.concurrent.atomic.AtomicReference(Vector.empty[String])
+    Fork({ try body finally branch.set(path.get) },
+      joined = () => path.set((path.get ++ branch.get).distinct))
+  }
+
+  /** This store as the stage seam of [[FuzzyDedup.run]], which then runs
+    * its independent stages on their own threads. */
+  def stages: FuzzyDedup.Forking = new FuzzyDedup.Forking {
+    def apply(name: String): (=> DataFrame) => DataFrame = compute => stage(name)(compute)
+    def fork[A](body: => A): Fork[A] = CheckpointStore.this.fork(body)
+  }
+
   private def commitOrReuse(
       name: String,
       chunkRows: Option[Long],
       chunkMaxPartitions: Int)(compute: => DataFrame): DataFrame = {
     if (isCommitted(name)) {
-      committed = committed :+ name
-      reused = reused + name
+      record(name, resumed = true)
       return format.read(spark, dataPath(name))
     }
     val t0 = System.nanoTime()
-    val df = compute
-    // Iceberg-style snapshot retention: a recompute does NOT destroy the
-    // previous snapshot — if the outgoing data dir still matches its
-    // manifest byte-for-byte (same validation isCommitted applies), it is
-    // archived under _snapshots/<id>/ and stays time-travel-readable via
-    // [[readSnapshot]] until [[expireSnapshots]]; anything unvalidatable
-    // (partial write, corrupt file, legacy manifest) is deleted — a
-    // half-dead dir must never masquerade as a historical snapshot.
-    val prev = archiveCurrent(name)
-    chunkRows match {
-      case Some(chunk) =>
-        // reference partitioned_save: a count() sizes the repartition —
-        // persist so compute isn't paid twice (fuzzy_spark2.py:302-332)
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rows = cached.count()
-        val parts = math.min(chunkMaxPartitions.toLong, math.max(
-          spark.sparkContext.defaultParallelism.toLong, (rows + chunk - 1) / chunk)).toInt
-        format.writeChunked(cached, dataPath(name), parts)
-        cached.unpersist(blocking = false)
-      case None => format.write(df, dataPath(name))
+    val ((schema, prev), selfNanos) = selfTimed {
+      val df = compute
+      // Iceberg-style snapshot retention: a recompute does NOT destroy the
+      // previous snapshot — if the outgoing data dir still matches its
+      // manifest byte-for-byte (same validation isCommitted applies), it is
+      // archived under _snapshots/<id>/ and stays time-travel-readable via
+      // [[readSnapshot]] until [[expireSnapshots]]; anything unvalidatable
+      // (partial write, corrupt file, legacy manifest) is deleted — a
+      // half-dead dir must never masquerade as a historical snapshot.
+      val prev = archiveCurrent(name)
+      chunkRows match {
+        case Some(chunk) =>
+          // reference partitioned_save: a count() sizes the repartition —
+          // persist so compute isn't paid twice (fuzzy_spark2.py:302-332)
+          val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val rows = cached.count()
+          val parts = math.min(chunkMaxPartitions.toLong, math.max(
+            spark.sparkContext.defaultParallelism.toLong, (rows + chunk - 1) / chunk)).toInt
+          format.writeChunked(cached, dataPath(name), parts)
+          cached.unpersist(blocking = false)
+        case None => format.write(df, dataPath(name))
+      }
+      (df.schema, prev)
     }
-    writeManifestFor(name, prev, t0)
-    committed = committed :+ name
-    format.read(spark, dataPath(name))
+    writeManifestFor(name, prev, t0, selfNanos)
+    record(name, resumed = false)
+    // read back with the schema just written: nothing to infer, no job
+    format.read(spark, dataPath(name), schema)
+  }
+
+  /** `body`'s value and self time: its wall minus the walls of the stages
+    * nested in it on this thread. */
+  private def selfTimed[A](body: => A): (A, Long) = {
+    val outer = nestedNanos.get
+    nestedNanos.set(0L)
+    val t0 = System.nanoTime()
+    try {
+      val a = body
+      (a, System.nanoTime() - t0 - nestedNanos.get)
+    } finally nestedNanos.set(outer + (System.nanoTime() - t0))
+  }
+
+  private def record(name: String, resumed: Boolean): Unit = {
+    path.set(path.get :+ name)
+    synchronized {
+      committed += name
+      if (resumed) reused += name
+    }
   }
 
   /** Archive the CURRENT snapshot of `name` into `_snapshots/<id>/` if it
@@ -209,10 +267,10 @@ class CheckpointStore(
     * dir of `name`, chaining parent/sequence from the outgoing manifest
     * `prev`. The manifest write IS the commit marker (written last). */
   private def writeManifestFor(name: String,
-      prev: Option[com.fasterxml.jackson.databind.JsonNode], t0: Long): Unit = {
+      prev: Option[com.fasterxml.jackson.databind.JsonNode], t0: Long, wallNanos: Long): Unit = {
     // per-partition lineage/metrics from footers — no second data scan
     val partCounts = footerCounts(name).sortBy(_._1)
-    val wallSec = (System.nanoTime() - t0) / 1e9
+    val wallSec = wallNanos / 1e9
     val manifest = mapper.createObjectNode()
     manifest.put("stage", name)
     // unique per COMMIT (nanotime in the hash), not per config+rowcount —
@@ -232,8 +290,9 @@ class CheckpointStore(
     val sizes = manifest.putObject("data_files")
     dataFiles(name).foreach(f => sizes.put(f.getPath.getName, f.getLen))
     manifest.put("wall_sec", math.round(wallSec * 1000.0) / 1000.0)
+    manifest.put("start_ms", (t0 - createdNanos) / 1000000L)
     val lineage = manifest.putArray("lineage")
-    committed.foreach(lineage.add)
+    path.get.foreach(lineage.add)
     val parts = manifest.putArray("partitions")
     partCounts.foreach { case (pid, rows) =>
       val p = mapper.createObjectNode()
@@ -277,12 +336,15 @@ class CheckpointStore(
       "bytes", "wall_sec", "lineage")
   }
 
-  /** Write `<root>/SUMMARY.json`: this RUN's lineage in execution order —
-    * per stage (rows, bytes, wall_sec, snapshot id, sequence, and whether
-    * it RESUMED from a prior snapshot or recomputed) plus any caller
-    * totals (docs/kept/removed) — the "what did this run do" artifact,
-    * assembled from the committed manifests with no data scan. Rerunning
-    * a fully-checkpointed job writes the same stages with every
+  /** Write `<root>/SUMMARY.json`: this RUN's lineage in graph order (the
+    * calling thread's lineage, then any stage no join brought into it) —
+    * per stage (rows, bytes, wall_sec, start_ms, snapshot id, sequence,
+    * and whether it RESUMED from a prior snapshot or recomputed) plus any
+    * caller totals (docs/kept/removed) — the "what did this run do"
+    * artifact, assembled from the committed manifests with no data scan.
+    * `wall_sec` is self time and `start_ms` its offset from the store's
+    * creation, so stages that overlapped show overlapping intervals.
+    * Rerunning a fully-checkpointed job writes the same stages with every
     * `resumed` flag true and near-zero walls, which is itself the resume
     * audit. */
   def writeRunSummary(extra: Map[String, Long] = Map.empty): Unit = {
@@ -291,7 +353,8 @@ class CheckpointStore(
     rootNode.put("written_at_ms", System.currentTimeMillis())
     extra.toSeq.sortBy(_._1).foreach { case (k, v) => rootNode.put(k, v) }
     val arr = rootNode.putArray("stages")
-    committed.foreach { name =>
+    val (all, resumed) = synchronized((committed.toVector, reused.toSet))
+    (path.get ++ all).distinct.foreach { name =>
       readManifest(name).foreach { m =>
         val o = arr.addObject()
         o.put("stage", name)
@@ -299,10 +362,11 @@ class CheckpointStore(
         o.put("bytes", manifestBytes(m))
         o.put("wall_sec",
           if (m.has("wall_sec")) m.get("wall_sec").asDouble() else -1.0)
+        o.put("start_ms", if (m.has("start_ms")) m.get("start_ms").asLong() else -1L)
         o.put("snapshot_id", m.get("snapshot_id").asText())
         o.put("sequence_number",
           if (m.has("sequence_number")) m.get("sequence_number").asLong() else -1L)
-        o.put("resumed", reused(name))
+        o.put("resumed", resumed(name))
       }
     }
     val out = fs.create(new Path(s"$root/SUMMARY.json"), true)
@@ -416,7 +480,7 @@ class CheckpointStore(
     format.write(format.read(spark, dataPath(name)).repartition(parts), tmp.toString)
     archiveCurrent(name)
     fs.rename(tmp, new Path(dataPath(name)))
-    writeManifestFor(name, prev, t0)
+    writeManifestFor(name, prev, t0, System.nanoTime() - t0)
     dataFiles(name).size
   }
 
@@ -466,6 +530,7 @@ class CheckpointStore(
         "rows" -> node.get("rows").asLong(),
         "files" -> (if (node.has("files")) node.get("files").asLong() else -1L),
         "wall_sec" -> node.get("wall_sec").asDouble(),
+        "start_ms" -> (if (node.has("start_ms")) node.get("start_ms").asLong() else -1L),
         "lineage" -> node.get("lineage").elements().asScala.map(_.asText()).toList,
         "partitions" -> node.get("partitions").size())
     }

@@ -23,8 +23,19 @@ import org.apache.spark.storage.StorageLevel
   * Every stage goes through one `stage(name)(compute)` seam, so the graph
   * does not decide how a stage materialises: the library default
   * ([[persisted]]) caches each stage once, `dedup.Pipeline` passes its
-  * `CheckpointStore.stage` and gets the same chain as resumable parquet
+  * `CheckpointStore.stages` and gets the same chain as resumable parquet
   * checkpoints under the same names.
+  *
+  * The graph is a dependency graph, not a fixed sequence. `suffix_edges`
+  * reads only the docs, so it starts together with `shingles`;
+  * `simhash_edges` reads only the shingles, so it starts as soon as they
+  * are committed. Both run alongside `bands → candidates → verified`, and
+  * `components` joins them (SimHash first) before it starts. They run on
+  * their own threads only when the stage is [[Forking]], i.e. safe
+  * to enter from several threads; with any other stage each is computed
+  * where it is joined, so the stages run one at a time in the order
+  * `shingles, bands, candidates, verified, simhash_edges, suffix_edges,
+  * components, assignments`.
   *
   * Everything stays in Dataset/DataFrame land — predicate pushdown, column
   * pruning and AQE all apply (the reference's `.rdd.flatMap` drop defeats
@@ -51,6 +62,13 @@ object FuzzyDedup {
     * output every later reader of the stage shares. */
   type Stage = String => (=> DataFrame) => DataFrame
 
+  /** A [[Stage]] that may be entered from several threads at once;
+    * [[run]] starts its independent stages through `fork`. */
+  trait Forking extends Stage {
+    /** Runs `body` on its own thread ([[Fork]]). */
+    def fork[A](body: => A): Fork[A]
+  }
+
   /** The library's materialisation: persist and count, so a stage is
     * computed exactly once however many readers it has (the star-edge
     * grouping reads the bands twice, verification the shingles twice). */
@@ -68,7 +86,9 @@ object FuzzyDedup {
     * `cfg.bandsPerPass` splits the star-edge shuffle into band-range passes
     * over the one `bands` stage.
     *
-    * Once it has the assignments, run unpersists every stage output it was
+    * A failure in a forked stage is thrown from run as it was thrown, and
+    * run neither returns nor throws while a forked stage still runs.
+    * Before it returns or throws, run unpersists every stage output it was
     * handed: the returned frames stay valid as plans, and a run leaks no
     * cache. Outputs that are not cached (checkpoint reads) are unaffected. */
   def run(
@@ -83,66 +103,86 @@ object FuzzyDedup {
     val outputs = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def named(name: String)(compute: => DataFrame): DataFrame = {
       val df = stage(name)(compute)
-      outputs += df
+      outputs.synchronized(outputs += df)
       df
     }
+    // an independent stage and its join: forked when `stage` allows it,
+    // otherwise computed where it is joined
+    val forks = scala.collection.mutable.ArrayBuffer[Fork[DataFrame]]()
+    def independent(name: String)(compute: => DataFrame): () => DataFrame = stage match {
+      case f: Forking =>
+        val fork = f.fork(named(name)(compute))
+        forks += fork
+        () => fork.join()
+      case _ =>
+        lazy val df = named(name)(compute)
+        () => df
+    }
 
-    val shingles = named("shingles")(Lsh.shingleSets(docs, cfg).toDF()).as[DocShingles]
-    // lazy: exactJoin never references bands, so the banding stage is
-    // neither computed nor materialised in that mode
-    lazy val bands = named("bands")(Lsh.bandKeys(shingles, cfg).toDF()).as[BandKey]
-    val candidates = named("candidates") {
-      val (nb, _) = cfg.bandsRows
-      val bp = cfg.bandsPerPass
-      def starEdges(b: Dataset[BandKey]) =
-        Lsh.groupEdges(b, cfg.saltBuckets, cfg.allPairsCap, cfg.chainEdges)
-      if (exactJoin)
-        // SSJoin prefix-filtered candidates over the same shingle sets — a
-        // provable superset of every ≥-threshold pair (no banding miss
-        // rate); the verify stage trims it to exactly the true pairs
-        SSJoin.candidates(
-          shingles.select(col("id"), col("shingles").as("toks")), cfg.threshold)
-          .select(greatest(col("id_a"), col("id_b")).as("src"),
-            least(col("id_a"), col("id_b")).as("dst"))
-      else if (bp <= 0 || bp >= nb) starEdges(bands)
-      else
-        // batched banding (reference buckets_per_shuffle loop over the
-        // signature checkpoint, lsh_multi.py:108-146): each pass reads only
-        // its band range of the one bands stage — the predicate pushes to
-        // a parquet checkpoint's scan — so in-flight shuffle is
-        // n·bandsPerPass rows. Edges are generated per (band, bucket, salt)
-        // group exactly as in one shot, so after the distinct the edge SET
-        // is identical (LshSpec).
-        (0 until nb by bp).map { s =>
-          starEdges(bands.filter(col("band") >= s && col("band") < math.min(s + bp, nb)))
-        }.reduce(_ union _).distinct()
+    try {
+      val suffixEdges =
+        if (!suffix) None
+        else Some(independent("suffix_edges") {
+          SuffixDedup.verifiedEdges(docs, cfg).select(col("src"), col("dst"))
+        })
+      val shingles = named("shingles")(Lsh.shingleSets(docs, cfg).toDF()).as[DocShingles]
+      val simEdges =
+        if (!simhash) None
+        else Some(independent("simhash_edges") {
+          SimHash.verifiedEdges(shingles, cfg).select(col("src"), col("dst"))
+        })
+      // exactJoin never reads the bands, so that mode does not band at all
+      val bands =
+        if (exactJoin) None
+        else Some(named("bands")(Lsh.bandKeys(shingles, cfg).toDF()).as[BandKey])
+      val candidates = named("candidates") {
+        val (nb, _) = cfg.bandsRows
+        val bp = cfg.bandsPerPass
+        def starEdges(b: Dataset[BandKey]) =
+          Lsh.groupEdges(b, cfg.saltBuckets, cfg.allPairsCap, cfg.chainEdges)
+        bands match {
+          case None =>
+            // SSJoin prefix-filtered candidates over the same shingle sets — a
+            // provable superset of every ≥-threshold pair (no banding miss
+            // rate); the verify stage trims it to exactly the true pairs
+            SSJoin.candidates(
+              shingles.select(col("id"), col("shingles").as("toks")), cfg.threshold)
+              .select(greatest(col("id_a"), col("id_b")).as("src"),
+                least(col("id_a"), col("id_b")).as("dst"))
+          case Some(b) if bp <= 0 || bp >= nb => starEdges(b)
+          case Some(b) =>
+            // batched banding (reference buckets_per_shuffle loop over the
+            // signature checkpoint, lsh_multi.py:108-146): each pass reads only
+            // its band range of the one bands stage — the predicate pushes to
+            // a parquet checkpoint's scan — so in-flight shuffle is
+            // n·bandsPerPass rows. Edges are generated per (band, bucket, salt)
+            // group exactly as in one shot, so after the distinct the edge SET
+            // is identical (LshSpec).
+            (0 until nb by bp).map { s =>
+              starEdges(b.filter(col("band") >= s && col("band") < math.min(s + bp, nb)))
+            }.reduce(_ union _).distinct()
+        }
+      }
+      val verified = named("verified") {
+        if (cfg.verify)
+          VerifyPairs.verifyJaccard(candidates, shingles, cfg.threshold)
+            .select(col("src"), col("dst"))
+        else candidates
+      }
+      // joined before components starts, so its wall holds no waiting
+      val extraEdges = simEdges.map(_()) ++ suffixEdges.map(_())
+      val components = named("components") {
+        ConnectedComponents.runAdaptive((Seq(verified) ++ extraEdges).reduce(_ unionByName _))
+      }
+      val assignments = named("assignments") {
+        ConnectedComponents.assignAll(
+          docs.select(col(cfg.idCol).cast("long").as("id")), components)
+      }
+      Result(shingles, candidates, verified, assignments)
+    } finally {
+      forks.foreach(_.await())
+      outputs.foreach(_.unpersist(blocking = false))
     }
-    val verified = named("verified") {
-      if (cfg.verify)
-        VerifyPairs.verifyJaccard(candidates, shingles, cfg.threshold)
-          .select(col("src"), col("dst"))
-      else candidates
-    }
-    val simEdges =
-      if (!simhash) None
-      else Some(named("simhash_edges") {
-        SimHash.verifiedEdges(shingles, cfg).select(col("src"), col("dst"))
-      })
-    val suffixEdges =
-      if (!suffix) None
-      else Some(named("suffix_edges") {
-        SuffixDedup.verifiedEdges(docs, cfg).select(col("src"), col("dst"))
-      })
-    val components = named("components") {
-      ConnectedComponents.runAdaptive(
-        (Seq(verified) ++ simEdges ++ suffixEdges).reduce(_ unionByName _))
-    }
-    val assignments = named("assignments") {
-      ConnectedComponents.assignAll(
-        docs.select(col(cfg.idCol).cast("long").as("id")), components)
-    }
-    outputs.foreach(_.unpersist(blocking = false))
-    Result(shingles, candidates, verified, assignments)
   }
 
   /** (id, component) for every doc in `docs`. */

@@ -64,10 +64,17 @@ object Ids {
     * ~3·10⁴ birthday collisions at 10¹² docs; distinct urls aliasing to one
     * id would silently merge documents through every downstream join).
     * Returns the number of ids carrying more than one distinct content
-    * hash; callers fail fast or re-key when it is non-zero. */
-  def idCollisions(docs: DataFrame, idCol: String, textCol: String): Long =
+    * hash; callers fail fast or re-key when it is non-zero.
+    *
+    * An id has two distinct non-null hashes exactly when its smallest and
+    * largest differ, and min/max combine map-side: one partial aggregate,
+    * where `countDistinct` would expand every row and aggregate twice.
+    * Null texts count for neither, as in `countDistinct`. */
+  def idCollisions(docs: DataFrame, idCol: String, textCol: String): Long = {
+    val h = md5(col(textCol))
     docs.groupBy(col(idCol))
-      .agg(countDistinct(md5(col(textCol))).as("nh"))
-      .where(col("nh") > 1)
+      .agg(min(h).as("lo"), max(h).as("hi"))
+      .where(col("lo") =!= col("hi"))
       .count()
+  }
 }

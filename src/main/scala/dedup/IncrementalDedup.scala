@@ -42,11 +42,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * and the verify side). [[buildFuzzyIndex]], [[crossPairs]] and
   * [[newDocsFuzzy]] take a [[Share]] that decides how those
   * multiply-read frames materialise. The default,
-  * [[lazily]], keeps them plans, as a library call that owns no cache
-  * should. A caller that wants each side computed once passes a
-  * [[Shared]]: it persists every shared frame and is their one owner,
-  * so the caller releases it once the probe's output is materialised
-  * (`dedup.Pipeline` releases it when the `ids` stage has committed).
+  * [[lazily]], keeps them plans and starts no thread, as a library call
+  * that owns no cache should. A caller that wants each side computed
+  * once passes a [[Shared]]: it persists every shared frame, starts
+  * computing it at once on its own thread, and is their one
+  * owner, so the caller releases it once the probe's output is
+  * materialised (`dedup.Pipeline` releases it when the `ids` stage has
+  * committed).
   */
 object IncrementalDedup {
 
@@ -57,18 +59,29 @@ object IncrementalDedup {
   /** Every shared frame stays a plan: each reader recomputes it. */
   val lazily: Share = identity
 
-  /** Persists each frame it is handed and holds it until [[release]],
-    * which unpersists them all; release is idempotent. */
+  /** Persists each frame it is handed and starts materialising it
+    * (persist + count) on its own thread ([[Fork]]), so the
+    * probe's independent pieces — the corpus index, the byte-new batch,
+    * the batch shingles and band keys — compute at the same time while
+    * the caller's thread goes on planning and building Bloom filters. A
+    * reader that needs a frame before its count is done waits for the
+    * cached blocks instead of computing them again.
+    *
+    * Call it only outside any SQL execution (see [[Fork]]). It holds every
+    * frame until [[release]], which first waits for all of those threads
+    * (a failed count only means the reader computes the frame itself) and
+    * then unpersists them all; release is idempotent. */
   final class Shared extends Share {
-    private val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    private val held = scala.collection.mutable.ArrayBuffer[(DataFrame, Fork[Long])]()
     def apply(df: DataFrame): DataFrame = {
       val d = df.persist(StorageLevel.MEMORY_AND_DISK)
-      held += d
+      held.synchronized(held += d -> Fork(d.count()))
       d
     }
     def release(): Unit = {
-      held.foreach(_.unpersist(blocking = false))
-      held.clear()
+      val all = held.synchronized { val a = held.toList; held.clear(); a }
+      all.foreach(_._2.await())
+      all.foreach(_._1.unpersist(blocking = false))
     }
   }
 
@@ -109,14 +122,17 @@ object IncrementalDedup {
     * side is scanned at index-build time and never re-shingled again. */
   case class FuzzyIndex(bands: DataFrame, shingles: DataFrame)
 
-  /** The index over `existing`; its shingle sets feed both the band keys
+  /** The index over `existing`. Its shingle sets feed both the band keys
     * and the verify side, so `share` decides whether they are computed
-    * once or once per reader. */
+    * once or once per reader; its band keys (the corpus MinHash, the
+    * probe's costliest part) go through `share` too, so a [[Shared]]
+    * starts computing them as soon as the index is built, ahead of the
+    * probe that reads them. */
   def buildFuzzyIndex(existing: DataFrame, cfg: DedupConfig,
       share: Share = lazily): FuzzyIndex = {
     import existing.sparkSession.implicits._
     val sh = share(Lsh.shingleSets(existing, cfg).toDF())
-    FuzzyIndex(Lsh.bandKeys(sh.as[DocShingles], cfg).toDF(), sh)
+    FuzzyIndex(share(Lsh.bandKeys(sh.as[DocShingles], cfg).toDF()), sh)
   }
 
   /** Persist the index: the expensive side of incremental fuzzy dedup is
@@ -266,7 +282,7 @@ object IncrementalDedup {
     * `share` decides how the batch shingles (read by the band keys and
     * the verify side), the batch band keys (read by the filter's count
     * and build and by the candidate join) and a built index's corpus
-    * shingles materialise. */
+    * shingles and band keys materialise. */
   def crossPairs(
       existing: DataFrame,
       batch: DataFrame,

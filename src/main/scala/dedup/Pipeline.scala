@@ -41,11 +41,33 @@ import org.apache.spark.sql.functions._
   * payload row is in `ids`, so the result is exactly the old anti-join's.
   *
   * `--existing` probe materialisation: the probe's multiply-read frames
-  * (byte-new batch, batch shingles and band keys, corpus shingles, the
-  * dropped-id set) are persisted by one [[IncrementalDedup.Shared]] owned
-  * by [[run]], so the `ids` stage, `--link-rank` and the `--by-lang`
-  * language list all read one evaluation of the probe; it is released
-  * once the (last) `ids` stage has committed.
+  * (corpus shingles and band keys, byte-new batch, batch shingles and
+  * band keys, the dropped-id set) are persisted by one
+  * [[IncrementalDedup.Shared]] owned by [[run]], so the `ids` stage,
+  * `--link-rank` and the `--by-lang` language list all read one
+  * evaluation of the probe; it is released once the (last) `ids` stage
+  * has committed.
+  *
+  * Stages that share no data dependency run at the same time, each on its
+  * own driver thread ([[Fork]]); the consumer that needs an output joins
+  * its thread:
+  *   - the probe: `Shared` starts computing each frame as soon as it is
+  *     shared, and the corpus index is shared first, so the corpus
+  *     shingling and MinHash overlap the exact probe and the batch-side
+  *     Bloom builds; `ids` reads the cached frames, and releasing the
+  *     probe joins every one of those threads;
+  *   - the collision audit reads only `ids` and runs alongside the
+  *     near-dup graph; it is joined before `kept` starts, so a collision
+  *     still fails the run before `kept` commits. The checkpoints it lets
+  *     commit meanwhile (`shingles` … `assignments`, `embeddings`,
+  *     `contain_drops`) do not depend on the audit: they are what a
+  *     `--no-collision-check` run of the same config computes;
+  *   - inside [[FuzzyDedup.run]], `suffix_edges` and `simhash_edges` run
+  *     alongside `bands → candidates → verified`, joined by `components`.
+  * A failure on a forked thread is thrown from [[run]] as it was thrown,
+  * and [[run]] neither returns nor throws while a forked thread still runs
+  * Spark jobs. Each manifest's lineage and the stage order in
+  * `SUMMARY.json` follow the graph, not thread timing (CheckpointStore).
   *
   * `--by-lang` runs the whole pipeline independently per language
   * partition (reference master_lang_split.py:130-148) under
@@ -438,27 +460,60 @@ object Pipeline {
     // corpus (shared LSH banding + exact-Jaccard verify) — exact first, so
     // the fuzzy candidate join only sees the byte-new survivors.
     // `share` materialises what the probe's readers read more than once.
+    // The corpus index is built first: with a `Shared` share its shingling
+    // and MinHash start on their own threads and overlap the exact probe's
+    // eager Bloom build below.
     val pages =
       if (args.existing.isEmpty) pages3
       else {
         val existingPages = spark.read.schema(Page.schema).parquet(args.existing)
+        val fuzzy =
+          if (!args.existingFuzzy) None
+          else {
+            val fCfg = args.cfg.copy(idCol = "__fid")
+            val corpus = existingPages.withColumn("__fid", xxhash64(col("url")))
+            Some((corpus, fCfg, IncrementalDedup.buildFuzzyIndex(corpus, fCfg, share)))
+          }
         val byteNew = share(IncrementalDedup.newDocs(existingPages, pages3, "url", "text"))
-        if (!args.existingFuzzy) byteNew
-        else {
-          val fCfg = args.cfg.copy(idCol = "__fid")
-          IncrementalDedup.newDocsFuzzy(
-            existingPages.withColumn("__fid", xxhash64(col("url"))),
-            byteNew.withColumn("__fid", xxhash64(col("url"))),
-            fCfg, pruneFpp = args.pruneFpp, share = share).drop("__fid")
+        fuzzy match {
+          case None => byteNew
+          case Some((corpus, fCfg, index)) =>
+            IncrementalDedup.newDocsFuzzy(corpus,
+              byteNew.withColumn("__fid", xxhash64(col("url"))), fCfg,
+              index = Some(index), pruneFpp = args.pruneFpp, share = share).drop("__fid")
         }
       }
     Prepared(pages3, pages)
   }
 
+  /** What one run produced: the kept and assignments frames, and the
+    * docs and kept row counts the committed manifests record. */
+  private case class Outcome(kept: DataFrame, assignments: DataFrame, docs: Long, keptRows: Long)
+
   /** Runs the checkpointed pipeline; returns (kept, assignments). */
   def run(spark: SparkSession, args: Args): (DataFrame, DataFrame) = {
-    // the probe's materialisation: filled by the first reader of `pages`,
-    // released once the last `ids` stage commits (or the run fails)
+    val o = execute(spark, args)
+    (o.kept, o.assignments)
+  }
+
+  /** Runs the pipeline and returns the one-line summary [[main]] prints.
+    * docs and kept come from the committed `assignments` and `kept`
+    * manifests (summed over the languages under `--by-lang`), so no job
+    * runs after `kept` commits unless an export or report flag asks. */
+  def summaryLine(spark: SparkSession, args: Args): String = {
+    val t0 = System.nanoTime()
+    val o = execute(spark, args)
+    val sec = (System.nanoTime() - t0) / 1e9
+    val (total, keptN) = (o.docs, o.keptRows)
+    f"docs=$total kept=$keptN removed=${total - keptN} " +
+      f"(${100.0 * (total - keptN) / math.max(1, total)}%.2f%%) wall=${sec}%.1fs " +
+      f"throughput=${total / math.max(sec, 1e-9)}%.0f docs/sec"
+  }
+
+  private def execute(spark: SparkSession, args: Args): Outcome = {
+    // the probe's materialisation: filled on its own threads from the
+    // moment each frame is shared, released once the last `ids` stage
+    // commits (or the run fails)
     val probe = new IncrementalDedup.Shared
     try {
       val prep = prepare(spark, args, probe)
@@ -488,8 +543,9 @@ object Pipeline {
             s"$fp|lang=$label", s"${args.output}/lang=$label",
             if (i == langs.length - 1) probe.release _ else () => ())
         }
-        (results.map(_._1).reduce(_ unionByName _),
-          results.map(_._2).reduce(_ unionByName _))
+        Outcome(results.map(_.kept).reduce(_ unionByName _),
+          results.map(_.assignments).reduce(_ unionByName _),
+          results.map(_.docs).sum, results.map(_.keptRows).sum)
       }
     } finally probe.release()
   }
@@ -514,14 +570,15 @@ object Pipeline {
     } catch { case _: Throwable => Hashes.xxh64Str(path) }
 
   /** One pipeline over `prep`; `idsCommitted` runs once the `ids` stage
-    * has committed, the last read of `prep.pages`. */
+    * has committed, the last read of `prep.pages`. Writes `SUMMARY.json`
+    * with the run's docs, kept and removed counts. */
   private def runOne(
       spark: SparkSession,
       args: Args,
       prep: Prepared,
       sourceFp: String,
       outRoot: String,
-      idsCommitted: () => Unit): (DataFrame, DataFrame) = {
+      idsCommitted: () => Unit): Outcome = {
     val cfg = args.cfg
     val store = new CheckpointStore(spark, outRoot, cfg.configHash +
       (if (args.simhash) "+sh" else "") + (if (args.suffix) "+sa" else "") +
@@ -580,17 +637,28 @@ object Pipeline {
     }
     idsCommitted()
 
-    if (args.collisionCheck) {
-      val collisions = Ids.idCollisions(docs, "id", "text")
-      require(collisions == 0L,
-        s"$collisions doc id(s) carry multiple distinct contents " +
-          "(xxhash64(url) collision or re-crawled url) — dedup would merge " +
-          "them silently; re-key or pass --no-collision-check to accept")
-    }
+    // the collision audit reads only `ids`: it runs on its own thread
+    // alongside the near-dup graph and is joined before `kept` starts
+    val audit =
+      if (!args.collisionCheck) None
+      else Some(Fork(Ids.idCollisions(docs, "id", "text")))
+    try runStages(spark, args, prep, store, docs, outRoot, audit)
+    finally audit.foreach(_.await())
+  }
 
+  /** The stages after `ids`, with the running collision `audit`. */
+  private def runStages(
+      spark: SparkSession,
+      args: Args,
+      prep: Prepared,
+      store: CheckpointStore,
+      docs: DataFrame,
+      outRoot: String,
+      audit: Option[Fork[Long]]): Outcome = {
+    val cfg = args.cfg
     // the near-dup stage graph, each stage a checkpoint under its own name
     val graph = FuzzyDedup.run(docs, cfg, exactJoin = args.exactJoin,
-      simhash = args.simhash, suffix = args.suffix, stage = name => store.stage(name))
+      simhash = args.simhash, suffix = args.suffix, stage = store.stages)
     val assignments = graph.assignments
 
     // `--soft-weights`: side artifact — retain-and-downweight alternative
@@ -645,6 +713,15 @@ object Pipeline {
           SSJoin.dropContained(toks, args.containT, args.containDfCap),
           Seq("id"), "left_anti")
       })
+
+    // a collision fails the run before `kept` commits
+    audit.foreach { a =>
+      val collisions = a.join()
+      require(collisions == 0L,
+        s"$collisions doc id(s) carry multiple distinct contents " +
+          "(xxhash64(url) collision or re-crawled url) — dedup would merge " +
+          "them silently; re-key or pass --no-collision-check to accept")
+    }
 
     // kept: the prepared payload (before the --existing probe) semi-joined
     // with the representatives (see the header) — every payload column
@@ -802,9 +879,11 @@ object Pipeline {
 
     // run-summary artifact: per-stage rows/bytes/wall + resumed flags in
     // lineage order, plus headline totals — <outRoot>/SUMMARY.json
-    store.writeRunSummary()
+    def rows(stage: String) = store.manifest(stage).get("rows").asInstanceOf[Long]
+    val (docsN, keptN) = (rows("assignments"), rows("kept"))
+    store.writeRunSummary(Map("docs" -> docsN, "kept" -> keptN, "removed" -> (docsN - keptN)))
 
-    (kept, assignments)
+    Outcome(kept, assignments, docsN, keptN)
   }
 
   def main(argv: Array[String]): Unit = {
@@ -832,16 +911,7 @@ object Pipeline {
       val docs = preparedPages(spark, args)
         .select(xxhash64(col("url")).as("id"), col("text"))
       println(Audit.render(Audit.explainPair(docs, x, y, args.cfg)))
-    } else {
-      val t0 = System.nanoTime()
-      val (kept, assignments) = run(spark, args)
-      val total = assignments.count()
-      val keptN = kept.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"docs=$total kept=$keptN removed=${total - keptN} " +
-        f"(${100.0 * (total - keptN) / math.max(1, total)}%.2f%%) wall=${sec}%.1fs " +
-        f"throughput=${total / math.max(sec, 1e-9)}%.0f docs/sec")
-    }
+    } else println(summaryLine(spark, args))
     spark.stop()
   }
 }

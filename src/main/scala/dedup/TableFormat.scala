@@ -3,7 +3,9 @@ package dedup
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.dedupbridge.asNullable
 import org.apache.spark.sql.functions.spark_partition_id
+import org.apache.spark.sql.types.StructType
 
 /** Physical table-format seam of [[CheckpointStore]].
   *
@@ -33,6 +35,11 @@ trait TableFormat {
     * callers see exactly the schema they committed. */
   def read(spark: SparkSession, path: String): DataFrame
 
+  /** [[read]] of a table just written from a frame with `schema`; a
+    * format that can take the schema as given skips inferring it. */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    read(spark, path)
+
   /** (partition label, row count) per data file WITHOUT a data scan —
     * the manifest-metadata row counts backing the store's per-partition
     * lineage/metrics rows. */
@@ -53,6 +60,11 @@ object ParquetFormat extends TableFormat {
 
   override def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop("__pid__")
+
+  /** Spark writes every column nullable, so that is the schema inference
+    * would find; giving it saves inference's one-task footer job. */
+  override def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(asNullable(schema)).parquet(path).drop("__pid__")
 
   override def fileRowCounts(
       files: Seq[FileStatus], conf: Configuration): Seq[(String, Long)] =

@@ -18,6 +18,11 @@ package object dedupbridge {
   /** The Catalyst expression backing a Column. */
   def columnExpr(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `schema` with every field nullable, recursively — what Spark's file
+    * sinks write and so what schema inference reads back
+    * (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Block until the listener bus has delivered all queued events —
     * needed before reading SparkListener-accumulated task metrics
     * (`listenerBus` is `private[spark]`). */

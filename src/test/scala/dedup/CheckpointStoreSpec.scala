@@ -435,4 +435,74 @@ class CheckpointStoreSpec extends AnyFunSuite {
     store.stage("y") { Seq(1).toDF("v") }
     assert(sc.getLocalProperty("spark.job.description") === null)
   }
+
+  test("read-back after a fresh commit starts no job: plain and chunked stages " +
+      "read with the schema just written") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("ckpt_readback").toString
+    val store = new CheckpointStore(spark, root, "cfg")
+    val df = (1 to 60).map(i => (i.toLong, Array(i, i + 1), s"t$i")).toDF("id", "arr", "text")
+    // jobs outside any SQL execution: what schema inference runs
+    val outside = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.sql.execution.id") == null)
+          outside.add(e.stageInfos.map(_.name).mkString(","))
+    }
+    sc.addSparkListener(listener)
+    val (plain, chunked) =
+      try (store.stage("plain")(df.repartition(3)), store.stage("chunked", chunkRows = Some(20L))(df))
+      finally {
+        org.apache.spark.sql.dedupbridge.drainListenerBus(sc, 10000L)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    assert(outside.isEmpty, s"jobs outside an SQL execution: ${outside.asScala.mkString("; ")}")
+    Seq("plain" -> plain, "chunked" -> chunked).foreach { case (name, got) =>
+      val inferred = spark.read.parquet(s"$root/$name/data").drop("__pid__")
+      assert(got.schema === inferred.schema, name)
+      assert(got.exceptAll(inferred).isEmpty && got.count() === 60L, name)
+    }
+    assert(!chunked.columns.contains("__pid__"))
+    assert(new java.io.File(s"$root/chunked/data/__pid__=0").isDirectory)
+  }
+
+  test("a nested stage's wall is not counted in the outer stage's wall") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ckpt_nested").toString
+    val store = new CheckpointStore(spark, root, "cfg")
+    store.stage("outer") {
+      store.stage("inner") { Thread.sleep(2000); Seq(1).toDF("x") }
+      Seq(2).toDF("x")
+    }
+    val inner = store.manifest("inner").get("wall_sec").asInstanceOf[Double]
+    val outer = store.manifest("outer").get("wall_sec").asInstanceOf[Double]
+    assert(inner >= 2.0, s"inner=$inner")
+    assert(outer < inner, s"outer=$outer counts inner=$inner")
+    assert(store.manifest("outer").get("start_ms").asInstanceOf[Long] <=
+      store.manifest("inner").get("start_ms").asInstanceOf[Long])
+  }
+
+  test("fork: a forked stage records its fork point's lineage and the join " +
+      "appends it, whatever the thread timing") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ckpt_fork").toString
+    val store = new CheckpointStore(spark, root, "cfg")
+    store.stage("a") { Seq(1).toDF("x") }
+    val b = store.fork(store.stage("b") { Thread.sleep(300); Seq(2).toDF("x") })
+    store.stage("c") { Seq(3).toDF("x") }
+    assert(b.join().count() === 1L)
+    store.stage("d") { Seq(4).toDF("x") }
+    def lineage(s: String) = store.manifest(s).get("lineage")
+    assert(lineage("b") === List("a"))
+    assert(lineage("c") === List("a"))
+    assert(lineage("d") === List("a", "c", "b"))
+    store.writeRunSummary()
+    val summary = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$root/SUMMARY.json"))
+    import scala.jdk.CollectionConverters._
+    assert(summary.get("stages").elements().asScala.map(_.get("stage").asText()).toList ===
+      List("a", "c", "b", "d"))
+  }
 }

@@ -727,4 +727,178 @@ class EndToEndSpec extends AnyFunSuite {
     assert(got.where(col("url") === "https://b.example/twice").count() === 1L)
     assert(spark.read.parquet(s"$dir/out/host_ranks").count() > 0L)
   }
+
+  /** One Spark job as a listener saw it: its description, SQL execution
+    * id, stage names (call sites) and start/end times (ms). */
+  private case class Job(id: Int, desc: String, exec: String, stages: Seq[String],
+      start: Long, end: Long) {
+    def overlaps(o: Job): Boolean = start < o.end && o.start < end
+  }
+
+  /** Runs `body` with a listener on; returns its value, the jobs that ran
+    * and the physical plan text of each SQL execution, by execution id. */
+  private def recorded[A](body: => A): (A, Seq[Job], Map[String, String]) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Job(e.jobId, e.properties.getProperty("spark.job.description"),
+          e.properties.getProperty("spark.sql.execution.id"), e.stageInfos.map(_.name),
+          e.time, Long.MaxValue))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.computeIfPresent(e.jobId, (_, j) => j.copy(end = e.time))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.put(x.executionId.toString, x.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    val out = try body finally {
+      org.apache.spark.sql.dedupbridge.drainListenerBus(sc, 60000L)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    (out, jobs.values.asScala.toSeq.sortBy(_.id), plans.asScala.toMap)
+  }
+
+  private def summaryJson(root: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(s"$root/SUMMARY.json"))
+
+  /** A `--simhash --suffix` CLI run recorded by a listener, plus a second
+    * run of the same fixture into another root. */
+  private lazy val forkedRuns = {
+    val roots = Seq("forked_a", "forked_b").map(java.nio.file.Files.createTempDirectory(_).toString)
+    def args(root: String) = Pipeline.parse(Array("--synth", "1500", "--output", root,
+      "--simhash", "--suffix", "--num-perm", "64", "--salt", "4"))
+    val (_, jobs, plans) = recorded(Pipeline.run(spark, args(roots.head)))
+    Pipeline.run(spark, args(roots(1)))
+    (roots, jobs, plans)
+  }
+
+  test("--simhash --suffix: a suffix_edges job runs while a bands, candidates or " +
+      "verified job runs") {
+    val (_, jobs, _) = forkedRuns
+    val suffix = jobs.filter(_.desc == "suffix_edges")
+    val chain = jobs.filter(j => Set("bands", "candidates", "verified")(j.desc))
+    assert(suffix.nonEmpty && chain.nonEmpty)
+    assert(suffix.exists(s => chain.exists(s.overlaps)),
+      s"no overlap:\n${jobs.map(j => s"${j.desc} ${j.start}-${j.end}").mkString("\n")}")
+  }
+
+  test("concurrent stages' jobs carry their own stage names as job descriptions") {
+    val (roots, jobs, plans) = forkedRuns
+    // the stage whose checkpoint each SQL execution writes (the plan text
+    // is in the UI's "formatted" explain mode)
+    val writes = plans.flatMap { case (exec, plan) =>
+      "Arguments: file:(\\S+)/([a-z_]+)/data,".r
+        .findFirstMatchIn(plan).filter(_.group(1).endsWith(roots.head)).map(exec -> _.group(2))
+    }
+    assert(Set("ids", "shingles", "bands", "candidates", "verified", "simhash_edges",
+      "suffix_edges", "components", "assignments", "kept").subsetOf(writes.values.toSet),
+      writes)
+    val written = jobs.filter(j => writes.contains(j.exec))
+    assert(written.nonEmpty)
+    written.foreach(j => assert(j.desc === writes(j.exec), j))
+    // the suffix and SimHash stages did overlap others, so this is not vacuous
+    assert(written.exists(j => j.desc == "suffix_edges" &&
+      written.exists(o => o.desc != "suffix_edges" && o.overlaps(j))))
+  }
+
+  test("--simhash --suffix: two runs give the same SUMMARY.json stage order and the " +
+      "same manifest lineage per stage") {
+    val (roots, _, _) = forkedRuns
+    import scala.jdk.CollectionConverters._
+    def order(root: String) =
+      summaryJson(root).get("stages").elements().asScala.map(_.get("stage").asText()).toList
+    val expected = List("ids", "shingles", "bands", "candidates", "verified",
+      "simhash_edges", "suffix_edges", "components", "assignments", "kept")
+    assert(order(roots.head) === expected)
+    assert(order(roots(1)) === expected)
+    def lineage(root: String, stage: String) =
+      new CheckpointStore(spark, root, "").manifest(stage).get("lineage")
+    expected.foreach(st => assert(lineage(roots.head, st) === lineage(roots(1), st), st))
+    assert(lineage(roots.head, "suffix_edges") === List("ids"))
+    assert(lineage(roots.head, "simhash_edges") === List("ids", "shingles"))
+    assert(lineage(roots.head, "components") === expected.take(7))
+    summaryJson(roots.head).get("stages").elements().asScala
+      .foreach(st => assert(st.get("start_ms").asLong() >= 0L, st))
+  }
+
+  test("--existing --existing-fuzzy: a corpus band-key job starts before the last " +
+      "batch-side Bloom job ends") {
+    val dir = incrementalFixture("probe_overlap")
+    val (_, jobs, plans) = recorded(Pipeline.run(spark, incrementalArgs(dir)))
+    val (batch, existing) = (s"$dir/batch", s"$dir/existing")
+    // executions that compute corpus band keys and read nothing of the batch
+    val corpusBandExecs = plans.collect {
+      case (exec, plan) if plan.contains("dedup.BandKey") && plan.contains(existing) &&
+        !plan.contains(batch) => exec
+    }.toSet
+    val corpusBands = jobs.filter(j => corpusBandExecs(j.exec))
+    val bloom = jobs.filter(_.stages.exists(_.contains("BloomPrune.scala")))
+    assert(corpusBands.nonEmpty, "no job computes the corpus band keys on its own")
+    assert(bloom.nonEmpty, "no batch-side Bloom job")
+    assert(corpusBands.map(_.start).min < bloom.map(_.end).max,
+      s"corpus band keys ${corpusBands.map(j => j.start -> j.end)} wait for " +
+        s"the Bloom build ${bloom.map(j => j.start -> j.end)}")
+  }
+
+  test("a forked stage's failure fails FuzzyDedup.run with that exception, and run " +
+      "waits for a forked stage before it throws") {
+    import org.apache.spark.sql.DataFrame
+    val docs = corpus.select("id", "text")
+    def forking(f: String => (=> DataFrame) => DataFrame): FuzzyDedup.Forking =
+      new FuzzyDedup.Forking {
+        def apply(name: String): (=> DataFrame) => DataFrame = f(name)
+        def fork[A](body: => A): Fork[A] = Fork(body)
+      }
+    val boom = new IllegalStateException("suffix_edges failed")
+    val failing = forking(name => compute =>
+      if (name == "suffix_edges") throw boom else FuzzyDedup.persisted(name)(compute))
+    val thrown = intercept[IllegalStateException](
+      FuzzyDedup.run(docs, cfg, suffix = true, stage = failing))
+    assert(thrown eq boom)
+    // the main chain fails while the forked stage still has jobs to run
+    val t0 = System.currentTimeMillis()
+    val slowFork = forking(name => compute =>
+      if (name == "bands") throw new IllegalStateException("bands failed")
+      else {
+        if (name == "suffix_edges") Thread.sleep(1500)
+        FuzzyDedup.persisted(name)(compute)
+      })
+    val ((e, thrownAt), jobs, _) = recorded {
+      val e = intercept[IllegalStateException](
+        FuzzyDedup.run(docs, cfg, suffix = true, stage = slowFork))
+      val at = System.currentTimeMillis()
+      Thread.sleep(500) // a job started after run threw would show here
+      (e, at)
+    }
+    assert(e.getMessage === "bands failed")
+    assert(jobs.exists(_.start >= t0 + 1500), "the forked stage ran no job")
+    assert(jobs.forall(_.end <= thrownAt), s"a job ran on after run threw: $jobs")
+  }
+
+  test("main's summary line comes from the manifests: no job starts after kept " +
+      "commits, and its counts are the data's") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("summary_line").toString
+    val args = Pipeline.parse(Array("--synth", "600", "--output", root,
+      "--num-perm", "64", "--salt", "4"))
+    val (line, jobs, _) = recorded(Pipeline.summaryLine(spark, args))
+    val afterKept = jobs.dropWhile(_.desc != "kept")
+    assert(afterKept.nonEmpty && afterKept.forall(_.desc == "kept"),
+      s"jobs after kept: ${afterKept.filter(_.desc != "kept")}")
+    val m = "docs=(\\d+) kept=(\\d+) removed=(\\d+) ".r.findFirstMatchIn(line).get
+    val docs = spark.read.parquet(s"$root/assignments/data").count()
+    val kept = spark.read.parquet(s"$root/kept/data").count()
+    val removed = spark.read.parquet(s"$root/assignments/data")
+      .where(col("id") =!= col("component")).count()
+    assert((m.group(1).toLong, m.group(2).toLong, m.group(3).toLong) === ((docs, kept, removed)))
+    assert(docs === 600L && removed > 0L)
+    val summary = summaryJson(root)
+    assert(Seq("docs", "kept", "removed").map(summary.get(_).asLong()) === Seq(docs, kept, removed))
+  }
 }

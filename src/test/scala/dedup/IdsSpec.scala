@@ -44,4 +44,22 @@ class IdsSpec extends AnyFunSuite {
     val collided = Seq((1L, "aa"), (1L, "bb"), (2L, "cc")).toDF("id", "text")
     assert(Ids.idCollisions(collided, "id", "text") === 1L)
   }
+
+  test("idCollisions: the min/max aggregate counts what countDistinct > 1 counts " +
+      "(3-way alias, null texts, an all-null id)") {
+    import spark.implicits._
+    val docs = Seq[(Long, String)](
+      (1L, "aa"), (1L, "bb"), (1L, "cc"), // 3-way alias
+      (2L, "dd"), (2L, null), (2L, "dd"), // one text plus a null: clean
+      (3L, null), (3L, null),             // every text null: clean
+      (4L, "ee"), (4L, null), (4L, "ff"), // alias around a null
+      (5L, "gg")).toDF("id", "text")
+    val old = docs.groupBy(col("id"))
+      .agg(countDistinct(md5(col("text"))).as("nh"))
+      .where(col("nh") > 1)
+      .count()
+    assert(old === 2L)
+    assert(Ids.idCollisions(docs, "id", "text") === old)
+    assert(Ids.idCollisions(docs.repartition(3), "id", "text") === old)
+  }
 }
