@@ -145,19 +145,14 @@ class CheckpointStore(
     * chunkMaxPartitions) partitions → `__pid__` partitionBy).
     *
     * Spark jobs started inside carry `name` as their `spark.job.description`
-    * (event log and listeners can then attribute them to the stage); the
-    * caller's description is restored afterwards and its job group is left
-    * alone. */
+    * ([[CheckpointStore.described]]), so the event log and listeners can
+    * attribute them to the stage. */
   def stage(
       name: String,
       chunkRows: Option[Long] = None,
-      chunkMaxPartitions: Int = 2048)(compute: => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val outer = sc.getLocalProperty(CheckpointStore.JobDescription)
-    sc.setLocalProperty(CheckpointStore.JobDescription, name)
-    try commitOrReuse(name, chunkRows, chunkMaxPartitions)(compute)
-    finally sc.setLocalProperty(CheckpointStore.JobDescription, outer)
-  }
+      chunkMaxPartitions: Int = 2048)(compute: => DataFrame): DataFrame =
+    CheckpointStore.described(spark, name)(
+      commitOrReuse(name, chunkRows, chunkMaxPartitions)(compute))
 
   /** Runs `body` on its own thread ([[Fork]]). Stages it commits
     * record the lineage of this fork point; joining the fork appends them
@@ -539,6 +534,18 @@ class CheckpointStore(
 object CheckpointStore {
   /** SparkContext local property naming the jobs a stage starts. */
   private val JobDescription = "spark.job.description"
+
+  /** Runs `body` with `name` as this thread's `spark.job.description`, so
+    * the Spark jobs it starts carry that name, and restores the caller's
+    * description afterwards; the job group is left alone. A [[Fork]]
+    * created inside inherits the name. */
+  def described[A](spark: SparkSession, name: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, name)
+    try body
+    finally sc.setLocalProperty(JobDescription, outer)
+  }
 
   /** Cheap source-identity fingerprint: xxh64 over the sorted
     * (path, length, mtime) listing — folded into the checkpoint key so a

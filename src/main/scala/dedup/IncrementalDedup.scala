@@ -60,7 +60,8 @@ object IncrementalDedup {
   val lazily: Share = identity
 
   /** Persists each frame it is handed and starts materialising it
-    * (persist + count) on its own thread ([[Fork]]), so the
+    * (persist + count) on its own thread ([[Fork]]), whose jobs carry
+    * the description `probe`, so the
     * probe's independent pieces — the corpus index, the byte-new batch,
     * the batch shingles and band keys — compute at the same time while
     * the caller's thread goes on planning and building Bloom filters. A
@@ -75,7 +76,8 @@ object IncrementalDedup {
     private val held = scala.collection.mutable.ArrayBuffer[(DataFrame, Fork[Long])]()
     def apply(df: DataFrame): DataFrame = {
       val d = df.persist(StorageLevel.MEMORY_AND_DISK)
-      held.synchronized(held += d -> Fork(d.count()))
+      held.synchronized(held += d -> Fork(
+        CheckpointStore.described(d.sparkSession, "probe")(d.count())))
       d
     }
     def release(): Unit = {

@@ -1,58 +1,43 @@
 package dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Opaque-binary (multimodal) column handling: the `html: binary` payload
-  * of the page table, and the general image/audio/video-as-bytes pattern a
-  * training-data pipeline needs.
+/** Image columns held as opaque bytes: header parsing, codec-free pixel
+  * decode and perceptual-hash near-dup edges.
   *
-  * The reference never parses HTML (inputs already carry extracted text —
-  * SURVEY.md §1). Three tiers here, by how real they are in this sandbox:
-  *   1. REAL byte-level parsing (no codec needed): magic sniffing
-  *      [[sniffMagic]], image dimensions from PNG/GIF/BMP/JPEG headers
-  *      [[imageDims]], WAV sample-rate/channels/duration [[wavMeta]].
-  *   2. REAL Spark plumbing: schema, typed mapPartitions batching,
-  *      null-safe metadata tables ([[describeBinary]], [[mediaMeta]]).
-  *   3. REAL pixel/sample decode for every format implementable without
-  *      media libraries: BMP ([[decodeBmp]]) and WAV PCM
-  *      ([[decodeWavPcm]]) are plain byte layouts; PNG ([[decodePng]])
-  *      is DEFLATE (the JDK ships Inflater) + five arithmetic scanline
-  *      filters; GIF ([[decodeGif]]) is tabular LZW. Encoders for all
-  *      four ([[encodeBmp]], [[encodePng]], [[encodeGif]], WAV in
-  *      fixtures) make the round-trips golden-testable.
-  *   4. STUB (clearly marked): [[decodeStub]]/[[sampleChunks]] for the
-  *      formats that genuinely need codec libraries this container
-  *      doesn't ship (JPEG DCT, MP3/FLAC/MP4/WebM streams); a production
-  *      deployment swaps these for codec calls with the same signatures.
+  *   1. Header parsing, no decode: [[imageDims]] reads width and height
+  *      from PNG, GIF, BMP, TIFF and JPEG headers; [[pngHeader]] and
+  *      [[tiffHeader]] build the matching fixture bytes.
+  *   2. Pixel decode for every format implementable without media
+  *      libraries: BMP ([[decodeBmp]]) is a plain byte layout; PNG
+  *      ([[decodePng]]) is DEFLATE (the JDK ships Inflater) plus five
+  *      scanline filters; GIF ([[decodeGif]]) is tabular LZW; TIFF
+  *      ([[decodeTiff]]) is LZW, Deflate or PackBits strips and tiles.
+  *      [[decodeImage]] dispatches to them. Encoders for all four
+  *      ([[encodeBmp]], [[encodePng]], [[encodeGif]], [[encodeTiff]])
+  *      make the round-trips golden-testable.
+  *   3. Near-dup detection: [[dHash]] fingerprints decoded pixels,
+  *      [[imageDHash]] does it over a binary column, and
+  *      [[imageNearDupEdges]] bands and verifies the fingerprints with
+  *      SimHash's pigeonhole machinery ([[fingerprintNearDupEdges]]).
   */
 object Multimodal {
 
-  /** Magic-byte content sniffing — pure byte inspection, no decoder. */
-  def sniffMagic(bytes: Array[Byte]): String = {
-    if (bytes == null || bytes.length < 4) "empty"
+  /** The image container `bytes` start with, by magic number: "png",
+    * "jpeg", "gif", "bmp", "tiff", or "" for anything else (null and
+    * blobs shorter than 4 bytes included). */
+  private def imageMagic(bytes: Array[Byte]): String = {
+    if (bytes == null || bytes.length < 4) ""
     else if (bytes(0) == 0x89.toByte && bytes(1) == 'P' && bytes(2) == 'N' && bytes(3) == 'G') "png"
     else if (bytes(0) == 0xFF.toByte && bytes(1) == 0xD8.toByte) "jpeg"
     else if (bytes(0) == 'G' && bytes(1) == 'I' && bytes(2) == 'F') "gif"
-    else if (bytes(0) == '%' && bytes(1) == 'P' && bytes(2) == 'D' && bytes(3) == 'F') "pdf"
-    else if (bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F') "riff"
-    else if (bytes(0) == 'f' && bytes(1) == 'L' && bytes(2) == 'a' && bytes(3) == 'C') "flac"
-    else if (bytes(0) == 'I' && bytes(1) == 'D' && bytes(2) == '3') "mp3" // ID3v2-tagged
-    else if (bytes(0) == 0xFF.toByte && (bytes(1) & 0xE0) == 0xE0 && bytes(1) != 0xFF.toByte) "mp3" // frame sync (FF FF would be a lost-sync fill byte)
     else if (bytes(0) == 'B' && bytes(1) == 'M' && bytes.length >= 26) "bmp"
-    else if (bytes.length >= 12 && bytes(4) == 'f' && bytes(5) == 't' &&
-             bytes(6) == 'y' && bytes(7) == 'p') "mp4" // ISO-BMFF (mp4/mov/m4a)
-    else if (bytes(0) == 0x1A.toByte && bytes(1) == 0x45.toByte &&
-             bytes(2) == 0xDF.toByte && bytes(3) == 0xA3.toByte) "webm" // EBML (webm/mkv)
     else if (bytes(0) == 'I' && bytes(1) == 'I' &&
              bytes(2) == 0x2A.toByte && bytes(3) == 0) "tiff" // little-endian
     else if (bytes(0) == 'M' && bytes(1) == 'M' &&
              bytes(2) == 0 && bytes(3) == 0x2A.toByte) "tiff" // big-endian
-    else {
-      val head = new String(bytes, 0, math.min(bytes.length, 64),
-        java.nio.charset.StandardCharsets.ISO_8859_1).toLowerCase
-      if (head.contains("<html") || head.contains("<!doctype")) "html" else "bin"
-    }
+    else ""
   }
 
   /** REAL image-dimension extraction by header parsing — pure byte
@@ -72,7 +57,7 @@ object Multimodal {
     def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
     def le16(i: Int) = (u8(i + 1) << 8) | u8(i)
     def le32(i: Int) = (u8(i + 3) << 24) | (u8(i + 2) << 16) | (u8(i + 1) << 8) | u8(i)
-    sniffMagic(bytes) match {
+    imageMagic(bytes) match {
       case "png" if bytes.length >= 24 && be32(12) == 0x49484452 => // "IHDR"
         Some((be32(16), be32(20)))
       case "gif" if bytes.length >= 10 =>
@@ -186,371 +171,6 @@ object Multimodal {
     b
   }
 
-  /** REAL WAV (RIFF) audio metadata by chunk-walk — no codec:
-    * (sampleRate, channels, bitsPerSample, durationMs). The fmt chunk
-    * carries the format fields; duration = data-chunk bytes / byteRate. */
-  def wavMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Long)] =
-    riffWalk(bytes).flatMap { w =>
-      if (w.rate <= 0 || w.channels <= 0 || w.dataDeclared < 0) None
-      else Some((w.rate, w.channels, w.bits,
-        if (w.byteRate > 0) w.dataDeclared * 1000L / w.byteRate else 0L))
-    }
-
-  /** The fmt/fact/data fields of one RIFF-WAVE chunk walk. `dataDeclared`
-    * is the data chunk's header size (duration math uses the claim even
-    * when the payload truncates); `dataLen` is clamped to the bytes
-    * actually present (decoders read only this). `samplesPerBlock` is 0
-    * unless a fmt extension (cbSize ≥ 2) declares one; `factSamples` is
-    * 0 when no fact chunk exists. */
-  private[dedup] final case class RiffWav(
-      fmt: Int, channels: Int, rate: Int, byteRate: Long, blockAlign: Int,
-      bits: Int, samplesPerBlock: Int, factSamples: Long,
-      dataOff: Int, dataDeclared: Long, dataLen: Int)
-
-  /** The ONE RIFF chunk walk behind [[wavMeta]], [[decodeWavPcm]] and
-    * [[decodeWavImaAdpcm]] — the unsigned-chunk-size wrap hazard (a
-    * corrupt size ≥ 2³¹ would step the cursor zero or negative →
-    * infinite loop / negative index inside a task) is handled in exactly
-    * one place: advance in Long, clamp to EOF. First data chunk wins.
-    * Returns None only for bytes that are not a RIFF-WAVE container at
-    * all; field validation belongs to each caller. */
-  private[dedup] def riffWalk(bytes: Array[Byte]): Option[RiffWav] = {
-    if (bytes == null || bytes.length < 44 || sniffMagic(bytes) != "riff") return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    def le16(i: Int) = (u8(i + 1) << 8) | u8(i)
-    def le32(i: Int) = ((u8(i + 3) << 24) | (u8(i + 2) << 16) | (u8(i + 1) << 8) | u8(i)).toLong & 0xFFFFFFFFL
-    def tag(i: Int) = new String(bytes, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    if (tag(8) != "WAVE") return None
-    var i = 12
-    var fmt = 0; var ch = 0; var rate = 0; var byteRate = 0L; var blockAlign = 0
-    var bits = 0; var spb = 0; var fact = 0L
-    var dataOff = -1; var dataDeclared = -1L; var dataLen = 0
-    while (i + 8 <= bytes.length) {
-      val id = tag(i); val size = le32(i + 4)
-      if (id == "fmt " && i + 24 <= bytes.length) {
-        fmt = le16(i + 8); ch = le16(i + 10); rate = le32(i + 12).toInt
-        byteRate = le32(i + 16); blockAlign = le16(i + 20); bits = le16(i + 22)
-        // fmt extension: cbSize at payload offset 16, samplesPerBlock at 18
-        // (the compressed-format field ADPCM wires carry)
-        if (size >= 20 && i + 28 <= bytes.length && le16(i + 24) >= 2)
-          spb = le16(i + 26)
-      } else if (id == "fact" && size >= 4 && i + 12 <= bytes.length) {
-        fact = le32(i + 8)
-      } else if (id == "data" && dataOff < 0) {
-        dataOff = i + 8
-        dataDeclared = size
-        dataLen = math.min(size, (bytes.length - dataOff).toLong).toInt
-      }
-      val next = i + 8L + size + (size & 1L)
-      i = if (next > bytes.length) bytes.length else next.toInt
-    }
-    Some(RiffWav(fmt, ch, rate, byteRate, blockAlign, bits, spb, fact,
-      dataOff, dataDeclared, dataLen))
-  }
-
-  /** REAL FLAC audio metadata — STREAMINFO block parse, no codec:
-    * (sampleRate, channels, bitsPerSample, durationMs). Layout per the
-    * FLAC format spec (RFC 9639 §8.2): after the "fLaC" marker and the
-    * 4-byte metadata-block header, STREAMINFO packs at byte offsets
-    * 18..25 (relative to file start): sample rate (20 bits), channels−1
-    * (3 bits), bits-per-sample−1 (5 bits), total samples (36 bits).
-    * Returns None for truncated bytes, a non-STREAMINFO first block, or
-    * rate 0 — never throws. */
-  def flacMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    if (bytes == null || bytes.length < 42 || sniffMagic(bytes) != "flac") return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    if ((u8(4) & 0x7F) != 0) return None // first block must be STREAMINFO (type 0)
-    val blockLen = (u8(5) << 16) | (u8(6) << 8) | u8(7)
-    if (blockLen < 34) return None
-    // bytes 18..20: rrrrrrrr rrrrrrrr rrrrcccb  (r=rate, c=channels-1, b=bps-1 hi)
-    val rate = (u8(18) << 12) | (u8(19) << 4) | (u8(20) >>> 4)
-    val channels = ((u8(20) >>> 1) & 0x7) + 1
-    val bps = (((u8(20) & 0x1) << 4) | (u8(21) >>> 4)) + 1
-    val totalSamples = ((u8(21) & 0xF).toLong << 32) | (u8(22).toLong << 24) |
-      (u8(23).toLong << 16) | (u8(24).toLong << 8) | u8(25).toLong
-    if (rate <= 0) None
-    else Some((rate, channels, bps, totalSamples * 1000L / rate))
-  }
-
-  /** Minimal FLAC header ("fLaC" + last-block STREAMINFO) for the given
-    * audio parameters — the fixture dual of [[flacMeta]]; the suite pins
-    * both sides against independent byte-offset goldens. */
-  def flacHeader(rate: Int, channels: Int, bps: Int, totalSamples: Long): Array[Byte] = {
-    val out = new Array[Byte](42)
-    out(0) = 'f'.toByte; out(1) = 'L'.toByte; out(2) = 'a'.toByte; out(3) = 'C'.toByte
-    out(4) = 0x80.toByte // last-metadata-block flag + type 0 (STREAMINFO)
-    out(7) = 34          // block length (bytes 5..7 big-endian)
-    out(18) = (rate >>> 12).toByte
-    out(19) = (rate >>> 4).toByte
-    out(20) = (((rate & 0xF) << 4) | (((channels - 1) & 0x7) << 1) | (((bps - 1) >>> 4) & 0x1)).toByte
-    out(21) = ((((bps - 1) & 0xF) << 4) | ((totalSamples >>> 32) & 0xF).toInt).toByte
-    out(22) = (totalSamples >>> 24).toByte
-    out(23) = (totalSamples >>> 16).toByte
-    out(24) = (totalSamples >>> 8).toByte
-    out(25) = totalSamples.toByte
-    out
-  }
-
-  private val Mp3BitrateV1L3 = // kbps, index 1..14 (0=free, 15=bad), MPEG1 Layer III
-    Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 0)
-  private val Mp3BitrateV2L3 = // MPEG2 / MPEG2.5 Layer III
-    Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160, 0)
-  private val Mp3RateV1 = Array(44100, 48000, 32000, 0)
-
-  /** REAL MP3 metadata — first-frame header parse, Layer III only (the
-    * web-crawl case): (sampleRate, channels, bitrateKbps, durationMsCbr).
-    * Walks past an ID3v2 tag (syncsafe size at bytes 6..9), then decodes
-    * the 4-byte frame header per the MPEG-1/2 audio spec: 11-bit sync,
-    * 2-bit version, 2-bit layer, 4-bit bitrate index, 2-bit sample-rate
-    * index, 2-bit channel mode. Duration is the CBR estimate
-    * (audioBytes·8 / bitrate) — VBR needs a Xing walk, out of scope.
-    * Returns None for non-Layer-III, free/bad bitrate, or truncation. */
-  def mp3Meta(bytes: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    if (bytes == null || sniffMagic(bytes) != "mp3") return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    var off = 0
-    if (bytes.length >= 10 && bytes(0) == 'I' && bytes(1) == 'D' && bytes(2) == '3')
-      off = 10 + ((u8(6) << 21) | (u8(7) << 14) | (u8(8) << 7) | u8(9)) // syncsafe
-    if (off + 4 > bytes.length) return None
-    if (u8(off) != 0xFF || (u8(off + 1) & 0xE0) != 0xE0) return None
-    val version = (u8(off + 1) >>> 3) & 0x3 // 0=2.5, 2=MPEG2, 3=MPEG1
-    val layer = (u8(off + 1) >>> 1) & 0x3   // 1=Layer III
-    if (layer != 1 || version == 1) return None
-    val brIdx = u8(off + 2) >>> 4
-    val srIdx = (u8(off + 2) >>> 2) & 0x3
-    if (brIdx == 0 || brIdx == 15 || srIdx == 3) return None
-    val bitrate = if (version == 3) Mp3BitrateV1L3(brIdx) else Mp3BitrateV2L3(brIdx)
-    val rate = version match {
-      case 3 => Mp3RateV1(srIdx)
-      case 2 => Mp3RateV1(srIdx) / 2
-      case _ => Mp3RateV1(srIdx) / 4
-    }
-    val channels = if (((u8(off + 3) >>> 6) & 0x3) == 3) 1 else 2
-    Some((rate, channels, bitrate, (bytes.length - off).toLong * 8L / bitrate))
-  }
-
-  /** Minimal MPEG1 Layer III frame header (+ `padBytes` of zero audio
-    * payload so the CBR duration estimate is testable) — fixture dual of
-    * [[mp3Meta]]. `brIdx`/`srIdx` index the public bitrate/sample-rate
-    * tables. */
-  def mp3Header(brIdx: Int, srIdx: Int, mono: Boolean, padBytes: Int): Array[Byte] = {
-    val out = new Array[Byte](4 + padBytes)
-    out(0) = 0xFF.toByte
-    out(1) = 0xFB.toByte // sync + MPEG1 + Layer III + no CRC
-    out(2) = ((brIdx << 4) | (srIdx << 2)).toByte
-    out(3) = (if (mono) 0xC0 else 0x00).toByte
-    out
-  }
-
-  /** REAL MP4 (ISO-BMFF) video metadata — box-walk, no codec:
-    * (durationMs, Option(width, height)). Layout per ISO/IEC 14496-12:
-    * boxes are [u32 size]["4cc" type][payload] (size 1 → 64-bit extended
-    * size at offset 8; size 0 → box runs to end). Duration comes from
-    * `moov`→`mvhd` (timescale u32 + duration u32/u64 by version); display
-    * dimensions from the first `moov`→`trak`→`tkhd` with nonzero 16.16
-    * fixed-point width/height (audio-only tracks carry 0×0). Returns None
-    * for truncation, a missing moov/mvhd, or timescale 0 — never throws. */
-  def mp4Meta(bytes: Array[Byte]): Option[(Long, Option[(Int, Int)])] = {
-    if (bytes == null || sniffMagic(bytes) != "mp4") return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    def be32(i: Int) = ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xFFFFFFFFL
-    def be64(i: Int) = (be32(i) << 32) | be32(i + 4)
-    def fourcc(i: Int) = new String(bytes, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    var durMs = -1L
-    var dims: Option[(Int, Int)] = None
-    // walk boxes in [from, until); handler gets (type, payloadStart, payloadEnd)
-    def walk(from: Int, until: Int)(f: (String, Int, Int) => Unit): Unit = {
-      var i = from
-      while (i + 8 <= until) {
-        val size0 = be32(i)
-        val tpe = fourcc(i + 4)
-        var payload = i + 8
-        val size =
-          if (size0 == 1L) { if (i + 16 > until) return; payload = i + 16; be64(i + 8) }
-          else if (size0 == 0L) (until - i).toLong // box extends to end
-          else size0
-        if (size < (payload - i).toLong || i + size > until) return // corrupt/truncated
-        f(tpe, payload, i + size.toInt)
-        i += size.toInt
-      }
-    }
-    walk(0, bytes.length) { (tpe, ms, me) =>
-      if (tpe == "moov") walk(ms, me) { (t2, ps, pe) =>
-        if (t2 == "mvhd") {
-          val v = u8(ps)
-          if (v == 1 && ps + 32 <= pe) { // v1: ts at +20 (u32), dur at +24 (u64)
-            val ts = be32(ps + 20)
-            if (ts > 0) durMs = be64(ps + 24) * 1000L / ts
-          } else if (v == 0 && ps + 20 <= pe) { // v0: ts at +12, dur at +16
-            val ts = be32(ps + 12)
-            if (ts > 0) durMs = be32(ps + 16) * 1000L / ts
-          }
-        } else if (t2 == "trak" && dims.isEmpty) walk(ps, pe) { (t3, ks, ke) =>
-          if (t3 == "tkhd" && dims.isEmpty) {
-            val off = if (u8(ks) == 1) ks + 88 else ks + 76 // v1 fields are wider
-            if (off + 8 <= ke) {
-              val w = (be32(off) >>> 16).toInt  // 16.16 fixed point
-              val h = (be32(off + 4) >>> 16).toInt
-              if (w > 0 && h > 0) dims = Some((w, h))
-            }
-          }
-        }
-      }
-    }
-    if (durMs < 0) None else Some((durMs, dims))
-  }
-
-  /** Minimal ISO-BMFF file (ftyp + moov{mvhd v0 timescale=1000, trak{tkhd
-    * with 16.16 dims}}) — fixture dual of [[mp4Meta]]; the suite pins both
-    * sides against independent byte-offset goldens. `w`/`h` 0 omits the
-    * trak (audio-only .m4a shape). */
-  def mp4Header(durationMs: Long, w: Int, h: Int): Array[Byte] = {
-    val withTrak = w > 0 && h > 0
-    val moovSize = 8 + 108 + (if (withTrak) 100 else 0)
-    val out = new Array[Byte](16 + moovSize)
-    def putBe32(off: Int, v: Long): Unit = {
-      out(off) = (v >>> 24).toByte; out(off + 1) = (v >>> 16).toByte
-      out(off + 2) = (v >>> 8).toByte; out(off + 3) = v.toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      System.arraycopy(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII), 0, out, off, 4)
-    putBe32(0, 16); putTag(4, "ftyp"); putTag(8, "isom"); putBe32(12, 0)
-    val moov = 16
-    putBe32(moov, moovSize); putTag(moov + 4, "moov")
-    val mvhd = moov + 8
-    putBe32(mvhd, 108); putTag(mvhd + 4, "mvhd") // v0: 8 hdr + 100 payload
-    putBe32(mvhd + 8 + 12, 1000L)       // timescale = 1000 → duration IS ms
-    putBe32(mvhd + 8 + 16, durationMs)  // duration (u32, v0)
-    if (withTrak) {
-      val trak = mvhd + 108
-      putBe32(trak, 100); putTag(trak + 4, "trak")
-      val tkhd = trak + 8
-      putBe32(tkhd, 92); putTag(tkhd + 4, "tkhd") // v0: 8 hdr + 84 payload
-      putBe32(tkhd + 8 + 76, w.toLong << 16) // 16.16 fixed
-      putBe32(tkhd + 8 + 80, h.toLong << 16)
-    }
-    out
-  }
-
-  /** REAL WebM/Matroska (EBML) video metadata — element-walk, no codec:
-    * (durationMs, Option(width, height)). Layout per RFC 8794 (EBML) +
-    * the public Matroska element registry: varint IDs/sizes; duration =
-    * Segment→Info Duration (float, in TimestampScale units, default scale
-    * 1,000,000 ns = 1 ms/unit); dimensions = Segment→Tracks→TrackEntry→
-    * Video PixelWidth/PixelHeight (uints). Handles unknown-size (all-ones
-    * vint) Segments as running to end-of-buffer. Returns None on
-    * truncation or a missing Duration — never throws. */
-  def webmMeta(bytes: Array[Byte]): Option[(Long, Option[(Int, Int)])] = {
-    if (bytes == null || sniffMagic(bytes) != "webm") return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    // EBML varint length = 1 + leading zero bits of the first byte
-    def vintLen(i: Int): Int = {
-      val b = u8(i)
-      if (b == 0) -1 else Integer.numberOfLeadingZeros(b) - 23 // 32-8=24 bits offset
-    }
-    // element ID: stored bytes verbatim (marker kept), as unsigned value
-    def readId(i: Int): (Long, Int) = {
-      val n = vintLen(i)
-      if (n < 1 || i + n > bytes.length) return (-1L, 0)
-      var v = 0L; var k = 0
-      while (k < n) { v = (v << 8) | u8(i + k); k += 1 }
-      (v, n)
-    }
-    // element size: marker bit stripped; all-value-bits-ones = unknown (-1)
-    def readSize(i: Int): (Long, Int) = {
-      val n = vintLen(i)
-      if (n < 1 || i + n > bytes.length) return (-2L, 0)
-      var v = (u8(i) & (0xFF >>> n)).toLong
-      var k = 1
-      while (k < n) { v = (v << 8) | u8(i + k); k += 1 }
-      val allOnes = (1L << (7 * n)) - 1
-      (if (v == allOnes) -1L else v, n)
-    }
-    def readUint(from: Int, until: Int): Long = {
-      var v = 0L; var i = from
-      while (i < until) { v = (v << 8) | u8(i); i += 1 }
-      v
-    }
-    def readFloat(from: Int, until: Int): Double = (until - from) match {
-      case 4 => java.lang.Float.intBitsToFloat(readUint(from, until).toInt).toDouble
-      case 8 => java.lang.Double.longBitsToDouble(readUint(from, until))
-      case _ => Double.NaN
-    }
-    var tsScaleNs = 1000000L // Matroska default: 1 ms per timestamp unit
-    var durUnits = Double.NaN
-    var pw = 0L; var ph = 0L
-    def walk(from: Int, until: Int)(f: (Long, Int, Int) => Unit): Unit = {
-      var i = from
-      while (i < until) {
-        val (id, idLen) = readId(i)
-        if (idLen == 0) return
-        val (size, szLen) = readSize(i + idLen)
-        if (szLen == 0) return
-        val ps = i + idLen + szLen
-        // bounds check in LONG arithmetic before any truncation: a
-        // malformed 64-bit size must not wrap negative via toInt (which
-        // would stall the walk on one offset forever)
-        if (size < -1L || (size != -1L && size > (until - ps).toLong)) return
-        val pe = if (size == -1L) until else ps + size.toInt
-        if (pe <= i) return // zero forward progress: corrupt stream
-        f(id, ps, pe)
-        i = pe
-      }
-    }
-    walk(0, bytes.length) { (id0, ss, se) =>
-      if (id0 == 0x18538067L) walk(ss, se) { (id1, is, ie) => // Segment
-        if (id1 == 0x1549A966L) walk(is, ie) { (id2, ps, pe) => // Info
-          if (id2 == 0x2AD7B1L) tsScaleNs = readUint(ps, pe)
-          else if (id2 == 0x4489L) durUnits = readFloat(ps, pe)
-        } else if (id1 == 0x1654AE6BL) walk(is, ie) { (id2, es, ee) => // Tracks
-          if (id2 == 0xAEL) walk(es, ee) { (id3, vs, ve) => // TrackEntry
-            if (id3 == 0xE0L) walk(vs, ve) { (id4, ps, pe) => // Video
-              if (id4 == 0xB0L) { if (pw == 0) pw = readUint(ps, pe) }
-              else if (id4 == 0xBAL) { if (ph == 0) ph = readUint(ps, pe) }
-            }
-          }
-        }
-      }
-    }
-    if (durUnits.isNaN || tsScaleNs <= 0) None
-    else Some((math.round(durUnits * tsScaleNs / 1e6),
-      if (pw > 0 && ph > 0) Some((pw.toInt, ph.toInt)) else None))
-  }
-
-  /** Minimal WebM (EBML header + Segment{Info{TimestampScale, Duration
-    * f32}, Tracks{TrackEntry{Video{PixelWidth, PixelHeight}}}}) — fixture
-    * dual of [[webmMeta]]. `w`/`h` 0 omits the Tracks branch. */
-  def webmHeader(durationMs: Long, w: Int, h: Int): Array[Byte] = {
-    val buf = scala.collection.mutable.ArrayBuffer[Byte]()
-    def id(v: Long, n: Int): Unit = { var k = n - 1; while (k >= 0) { buf += (v >>> (8 * k)).toByte; k -= 1 } }
-    def size1(v: Int): Unit = buf += (0x80 | v).toByte // 1-byte vint size
-    def uintBytes(v: Long): Array[Byte] = {
-      var n = 1; while (n < 8 && (v >>> (8 * n)) != 0) n += 1
-      Array.tabulate(n)(k => (v >>> (8 * (n - 1 - k))).toByte)
-    }
-    id(0x1A45DFA3L, 4); size1(0) // EBML header, empty (sniff needs the magic only)
-    val withVideo = w > 0 && h > 0
-    val pwB = uintBytes(w.toLong); val phB = uintBytes(h.toLong)
-    val videoLen = 2 + pwB.length + 2 + phB.length        // B0.., BA..
-    val entryLen = 2 + videoLen                            // E0 [sz] video
-    val tracksLen = 2 + entryLen                           // AE [sz] entry
-    val infoLen = 3 + 1 + 3 + 2 + 1 + 4 // 2AD7B1 sz(1) val(3) | 4489 sz(1) f32
-    val segLen = (4 + 1 + infoLen) + (if (withVideo) 4 + 1 + tracksLen else 0)
-    id(0x18538067L, 4); size1(segLen)   // Segment
-    id(0x1549A966L, 4); size1(infoLen)  // Info
-    id(0x2AD7B1L, 3); size1(3); id(1000000L, 3) // TimestampScale = 1e6 ns
-    id(0x4489L, 2); size1(4)            // Duration (float32, units = ms)
-    id(java.lang.Float.floatToIntBits(durationMs.toFloat).toLong & 0xFFFFFFFFL, 4)
-    if (withVideo) {
-      id(0x1654AE6BL, 4); size1(tracksLen) // Tracks
-      id(0xAEL, 1); size1(entryLen)        // TrackEntry
-      id(0xE0L, 1); size1(videoLen)        // Video
-      id(0xB0L, 1); size1(pwB.length); buf ++= pwB
-      id(0xBAL, 1); size1(phB.length); buf ++= phB
-    }
-    buf.toArray
-  }
-
   // ------------------------------------------------------ real decoders
   /** REAL uncompressed-BMP pixel decode — BI_RGB 24-bit (the plain byte
     * layout, no codec needed; spec: 14-byte file header with the pixel
@@ -560,7 +180,7 @@ object Multimodal {
     * flipped; BGR byte order converted to RGB; 4-byte row padding
     * stripped). None for compressed/paletted/truncated bytes. */
   def decodeBmp(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (bytes == null || bytes.length < 54 || sniffMagic(bytes) != "bmp") return None
+    if (bytes == null || bytes.length < 54 || imageMagic(bytes) != "bmp") return None
     def u8(i: Int) = bytes(i) & 0xFF
     def le16(i: Int) = (u8(i + 1) << 8) | u8(i)
     def le32(i: Int) = (u8(i + 3) << 24) | (u8(i + 2) << 16) | (u8(i + 1) << 8) | u8(i)
@@ -577,8 +197,7 @@ object Multimodal {
     // ALL size arithmetic in Long: w*3 wraps Int for w ≥ ~715M and a
     // wrapped-negative rowBytes would defeat the bounds check below, then
     // crash the task on a negative array size — corrupt blobs must decode
-    // to None, never throw (the null-safety contract of imageDHash /
-    // describeBinary)
+    // to None, never throw (the null-safety contract of imageDHash)
     val rowBytesL = (w.toLong * 3 + 3) & ~3L // rows pad to 4-byte boundaries
     if (off < 54 || off.toLong + rowBytesL * h > bytes.length) return None
     val rowBytes = rowBytesL.toInt // ≤ bytes.length after the check above
@@ -598,332 +217,6 @@ object Multimodal {
       row += 1
     }
     Some((w, h, out))
-  }
-
-  /** CCITT G.711 μ-law expansion to 16-bit-range linear PCM — the public
-    * reference decode formula (sign|exponent|mantissa byte, transmitted
-    * complemented; bias 0x84): the telephony codec WAV carries as format
-    * tag 7. Pure integer arithmetic, SQL-replayable. */
-  private[dedup] def ulawExpand(b: Int): Int = {
-    val u = ~b & 0xFF
-    var t = ((u & 0xF) << 3) + 0x84
-    t <<= (u & 0x70) >> 4
-    if ((u & 0x80) != 0) 0x84 - t else t - 0x84
-  }
-
-  /** CCITT G.711 A-law expansion (format tag 6): even bits inverted on
-    * the wire (XOR 0x55), segments 0/1 linear then doubling, sign bit
-    * SET means positive. Pure integer arithmetic. */
-  private[dedup] def alawExpand(b: Int): Int = {
-    val a = b ^ 0x55
-    var t = (a & 0xF) << 4
-    val seg = (a & 0x70) >> 4
-    if (seg == 0) t += 8
-    else if (seg == 1) t += 0x108
-    else { t += 0x108; t <<= seg - 1 }
-    if ((a & 0x80) != 0) t else -t
-  }
-
-  /** REAL WAV sample decode — integer PCM (format 1: 8-bit unsigned or
-    * 16/24/32-bit signed little-endian) plus the two G.711 telephony
-    * codecs (format 6 A-law, format 7 μ-law — one byte per sample,
-    * expanded by the public ITU formulas above), interleaved channels,
-    * each sample normalized to [-1, 1]. No media library anywhere.
-    * Returns (sampleRate, channels, samples). None for float PCM, ADPCM,
-    * odd bit widths, or truncated chunks. */
-  def decodeWavPcm(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] = {
-    val w = riffWalk(bytes).getOrElse(return None)
-    val fmt = w.fmt; val rate = w.rate; val ch = w.channels; val bits = w.bits
-    val dataOff = w.dataOff; val dataLen = w.dataLen
-    if ((fmt != 1 && fmt != 6 && fmt != 7) || rate <= 0 || ch <= 0 || dataOff < 0)
-      return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    if (fmt != 1) { // G.711: always one byte per sample
-      if (bits != 8) return None
-      val out = new Array[Float](dataLen)
-      var s = 0
-      while (s < dataLen) {
-        val e = u8(dataOff + s)
-        out(s) = (if (fmt == 7) ulawExpand(e) else alawExpand(e)) / 32768f
-        s += 1
-      }
-      return Some((rate, ch, out))
-    }
-    if (bits != 8 && bits != 16 && bits != 24 && bits != 32) return None
-    val bytesPer = bits / 8
-    val n = dataLen / bytesPer
-    val out = new Array[Float](n)
-    var s = 0
-    while (s < n) {
-      val p = dataOff + s * bytesPer
-      out(s) = bits match {
-        case 8 => (u8(p) - 128) / 128f // 8-bit WAV is unsigned
-        case 16 => ((u8(p + 1) << 8) | u8(p)).toShort / 32768f
-        case 24 =>
-          (((u8(p + 2) << 16) | (u8(p + 1) << 8) | u8(p)) << 8 >> 8) / 8388608f
-        case _ =>
-          ((u8(p + 3) << 24) | (u8(p + 2) << 16) | (u8(p + 1) << 8) | u8(p)) / 2147483648f
-      }
-      s += 1
-    }
-    Some((rate, ch, out))
-  }
-
-  /** IMA/DVI ADPCM step-size table (IMA ADPCM reference algorithm,
-    * "Recommended Practices for Enhancing Digital Audio Compatibility",
-    * IMA Digital Audio Focus Group 1992 — the table every decoder ships
-    * verbatim). 89 entries, ~1.1× geometric growth. */
-  private val imaStep: Array[Int] = Array(
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767)
-
-  /** Step-index adaptation per 4-bit code (same IMA reference). */
-  private val imaIndexAdjust: Array[Int] =
-    Array(-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8)
-
-  /** One IMA ADPCM decode step: returns the new predictor, mutating
-    * nothing — callers thread (predictor, index) explicitly. */
-  @inline private def imaDecodeStep(nibble: Int, predictor: Int, step: Int): Int = {
-    var diff = step >> 3
-    if ((nibble & 4) != 0) diff += step
-    if ((nibble & 2) != 0) diff += step >> 1
-    if ((nibble & 1) != 0) diff += step >> 2
-    val p = if ((nibble & 8) != 0) predictor - diff else predictor + diff
-    if (p > 32767) 32767 else if (p < -32768) -32768 else p
-  }
-
-  /** REAL IMA ADPCM WAV decode (format tag 0x11 — the 4-bits-per-sample
-    * telephony/game-audio codec). Block layout per channel: a 4-byte
-    * header (initial 16-bit predictor, step index, reserved), then the
-    * channels' nibble data interleaved in 4-byte groups, LOW nibble
-    * first. Pure integer state machine — no codec library. Returns
-    * (sampleRate, channels, samples interleaved, normalized to [-1,1]);
-    * None for anything malformed (never throws). */
-  def decodeWavImaAdpcm(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] = {
-    val w = riffWalk(bytes).getOrElse(return None)
-    val rate = w.rate; val ch = w.channels; val blockAlign = w.blockAlign
-    val dataOff = w.dataOff; val dataLen = w.dataLen
-    def u8(i: Int) = bytes(i) & 0xFF
-    if (w.fmt != 0x11 || rate <= 0 || ch <= 0 || ch > 8 || dataOff < 0) return None
-    if (blockAlign < 4 * ch || (blockAlign - 4 * ch) % (4 * ch) != 0) return None
-    // the fmt extension's samplesPerBlock governs when it is consistent
-    // with the wire (≤ what the block geometry can carry): a final block's
-    // trailing nibbles beyond it are PADDING, not audio
-    val derived = (blockAlign - 4 * ch) * 2 / ch + 1
-    val samplesPerBlock =
-      if (w.samplesPerBlock >= 1 && w.samplesPerBlock <= derived) w.samplesPerBlock
-      else derived
-    val nBlocks = dataLen / blockAlign
-    if (nBlocks <= 0 || nBlocks.toLong * samplesPerBlock * ch > (1L << 26)) return None
-    // the fact chunk declares total per-channel samples — trim the padded
-    // final block to it when plausible
-    val totalPerCh =
-      if (w.factSamples > 0 && w.factSamples <= nBlocks.toLong * samplesPerBlock)
-        w.factSamples.toInt
-      else nBlocks * samplesPerBlock
-    val out = new Array[Float](totalPerCh * ch)
-    val pred = new Array[Int](ch); val idx = new Array[Int](ch)
-    var b = 0
-    while (b < nBlocks) {
-      val base = dataOff + b * blockAlign
-      val outBase = b * samplesPerBlock * ch
-      var c = 0
-      while (c < ch) { // per-channel 4-byte block header
-        val h = base + c * 4
-        pred(c) = ((u8(h + 1) << 8) | u8(h)).toShort.toInt
-        idx(c) = math.min(88, math.max(0, u8(h + 2)))
-        if (outBase + c < out.length)
-          out(outBase + c) = pred(c) / 32768f // header predictor IS sample 0
-        c += 1
-      }
-      // nibble data: 4-byte groups per channel, round-robin across channels
-      val dataStart = base + 4 * ch
-      val groupsPerChannel = (blockAlign - 4 * ch) / (4 * ch)
-      var g = 0
-      while (g < groupsPerChannel) {
-        c = 0
-        while (c < ch) {
-          val off = dataStart + (g * ch + c) * 4
-          var k = 0
-          while (k < 8) { // 8 nibbles per 4-byte group, low nibble first
-            val byte = u8(off + (k >> 1))
-            val nib = if ((k & 1) == 0) byte & 0x0F else (byte >> 4) & 0x0F
-            pred(c) = imaDecodeStep(nib, pred(c), imaStep(idx(c)))
-            idx(c) = math.min(88, math.max(0, idx(c) + imaIndexAdjust(nib)))
-            val s = 1 + g * 8 + k // sample index within block (0 = header)
-            val oi = outBase + s * ch + c // fact-trimmed final block: skip pad
-            if (s < samplesPerBlock && oi < out.length) out(oi) = pred(c) / 32768f
-            k += 1
-          }
-          c += 1
-        }
-        g += 1
-      }
-      b += 1
-    }
-    Some((rate, ch, out))
-  }
-
-  /** IMA ADPCM WAV ENCODER (mono) — the fixture/export twin of
-    * [[decodeWavImaAdpcm]], same role as [[encodeWavG711]]: quantizes each
-    * delta against the adaptive step (sign + 3 magnitude bits), then runs
-    * the DECODER's update so encoder and decoder predictors stay locked
-    * (the standard IMA closed loop). `blockSamples` must be 1 + a
-    * multiple of 8. */
-  def encodeWavImaAdpcm(sampleRate: Int, samples: Array[Short],
-                        blockSamples: Int = 505): Array[Byte] = {
-    require(blockSamples > 1 && (blockSamples - 1) % 8 == 0,
-      s"blockSamples must be 1+8k, got $blockSamples")
-    val blockAlign = 4 + (blockSamples - 1) / 2
-    val nBlocks = (samples.length + blockSamples - 1) / blockSamples
-    val data = new Array[Byte](nBlocks * blockAlign)
-    var pred = 0; var idx = 0
-    var b = 0
-    while (b < nBlocks) {
-      val base = b * blockAlign
-      val s0 = b * blockSamples
-      pred = if (s0 < samples.length) samples(s0).toInt else 0
-      data(base) = (pred & 0xFF).toByte
-      data(base + 1) = ((pred >> 8) & 0xFF).toByte
-      data(base + 2) = idx.toByte
-      var k = 0
-      while (k < blockSamples - 1) {
-        val si = s0 + 1 + k
-        val sample = if (si < samples.length) samples(si).toInt else pred
-        val step = imaStep(idx)
-        var delta = sample - pred
-        var nib = 0
-        if (delta < 0) { nib = 8; delta = -delta }
-        if (delta >= step) { nib |= 4; delta -= step }
-        if (delta >= (step >> 1)) { nib |= 2; delta -= step >> 1 }
-        if (delta >= (step >> 2)) { nib |= 1 }
-        pred = imaDecodeStep(nib, pred, step)
-        idx = math.min(88, math.max(0, idx + imaIndexAdjust(nib)))
-        val off = base + 4 + (k >> 1)
-        if ((k & 1) == 0) data(off) = (data(off) & 0xF0 | nib).toByte
-        else data(off) = (data(off) & 0x0F | (nib << 4)).toByte
-        k += 1
-      }
-      b += 1
-    }
-    // RIFF wrapper: fmt tag 0x11, 4 bits/sample, cbSize=2 + samplesPerBlock
-    val out = new Array[Byte](60 + data.length)
-    def putLe32(i: Int, v: Int): Unit = {
-      out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-      out(i + 2) = (v >>> 16).toByte; out(i + 3) = (v >>> 24).toByte
-    }
-    def putLe16(i: Int, v: Int): Unit = {
-      out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-    }
-    def tag(i: Int, s: String): Unit =
-      System.arraycopy(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII), 0, out, i, 4)
-    tag(0, "RIFF"); putLe32(4, out.length - 8); tag(8, "WAVE")
-    tag(12, "fmt "); putLe32(16, 20)
-    putLe16(20, 0x11); putLe16(22, 1); putLe32(24, sampleRate)
-    putLe32(28, sampleRate * blockAlign / blockSamples) // avg byte rate
-    putLe16(32, blockAlign); putLe16(34, 4)
-    putLe16(36, 2); putLe16(38, blockSamples) // cbSize, samplesPerBlock
-    tag(40, "fact"); putLe32(44, 4) // fact chunk: total samples (informative)
-    // fact payload lives at 48..51; data chunk header follows
-    putLe32(48, samples.length)
-    tag(52, "data"); putLe32(56, data.length)
-    System.arraycopy(data, 0, out, 60, data.length)
-    out
-  }
-
-  /** 16-dim image features from REAL decoded pixels: 12-bin luminance
-    * histogram (Rec.601 luma, normalized), mean R/G/B in [0,1], and
-    * aspect ratio w/h. Deterministic, codec-free. */
-  private[dedup] def imageFeatures(w: Int, h: Int, rgb: Array[Byte]): Array[Float] = {
-    val f = new Array[Float](16)
-    val nPix = w * h
-    if (nPix == 0) return f
-    var i = 0
-    var sr = 0.0; var sg = 0.0; var sb = 0.0
-    while (i < nPix) {
-      val r = rgb(i * 3) & 0xFF
-      val g = rgb(i * 3 + 1) & 0xFF
-      val b = rgb(i * 3 + 2) & 0xFF
-      sr += r; sg += g; sb += b
-      val luma = (299 * r + 587 * g + 114 * b) / 1000 // Rec.601, integer
-      f(math.min(11, luma * 12 / 256)) += 1f
-      i += 1
-    }
-    var j = 0
-    while (j < 12) { f(j) /= nPix; j += 1 }
-    f(12) = (sr / nPix / 255.0).toFloat
-    f(13) = (sg / nPix / 255.0).toFloat
-    f(14) = (sb / nPix / 255.0).toFloat
-    f(15) = w.toFloat / h
-    f
-  }
-
-  /** 16-dim audio features from REAL decoded PCM: 12-bin |amplitude|
-    * histogram (normalized), RMS, zero-crossing rate, mean, peak. */
-  private[dedup] def audioFeatures(samples: Array[Float]): Array[Float] = {
-    val f = new Array[Float](16)
-    val n = samples.length
-    if (n == 0) return f
-    var i = 0
-    var sum = 0.0; var sq = 0.0; var peak = 0f; var zc = 0
-    while (i < n) {
-      val s = samples(i)
-      val a = math.abs(s)
-      f(math.min(11, (a * 12).toInt)) += 1f
-      sum += s; sq += s.toDouble * s
-      if (a > peak) peak = a
-      if (i > 0 && (samples(i - 1) >= 0) != (s >= 0)) zc += 1
-      i += 1
-    }
-    var j = 0
-    while (j < 12) { f(j) /= n; j += 1 }
-    f(12) = math.sqrt(sq / n).toFloat
-    f(13) = zc.toFloat / n
-    f(14) = (sum / n).toFloat
-    f(15) = peak
-    f
-  }
-
-  /** Decode + feature-extract with REAL decoders wherever the format is
-    * implementable without media libraries (BMP's plain byte layout,
-    * PNG via the JDK's Inflater, GIF via LZW, TIFF, WAV integer PCM and
-    * IMA ADPCM); everything else falls back
-    * to [[decodeStub]]. The 16-float output contract is uniform, so the
-    * Spark-side plumbing (schema, batching, partitioning) is identical
-    * whichever path a blob takes. */
-  def decodeFeatures(bytes: Array[Byte]): Array[Float] =
-    decodeImage(bytes) match {
-      case Some((w, h, rgb)) => imageFeatures(w, h, rgb)
-      case None =>
-        decodeAudio(bytes) match {
-          case Some((_, _, samples)) => audioFeatures(samples)
-          case None => decodeStub(bytes)
-        }
-    }
-
-  /** STUB decode + feature-extract for the formats that genuinely need a
-    * codec (JPEG, FLAC, MP3/MP4/WebM streams — no media libraries
-    * here): a deterministic 16-dim byte-histogram
-    * "embedding". Batch shape, schema and partitioning are the real
-    * contract; only the math inside is fake, and since round 4 it is the
-    * FALLBACK of [[decodeFeatures]], not the whole story — BMP, PNG, GIF
-    * and TIFF pixels and WAV samples decode for real. */
-  def decodeStub(bytes: Array[Byte]): Array[Float] = {
-    val hist = new Array[Float](16)
-    if (bytes == null || bytes.isEmpty) return hist
-    var i = 0
-    while (i < bytes.length) {
-      hist((bytes(i) & 0xF0) >>> 4) += 1f
-      i += 1
-    }
-    var j = 0
-    while (j < 16) { hist(j) /= bytes.length; j += 1 }
-    hist
   }
 
   /** 24-bit BMP encoder (bottom-up, BI_RGB) — the inverse of
@@ -970,7 +263,7 @@ object Multimodal {
     * interlaced (Adam7), 16-bit, sub-byte palette depths, bad CRC-length
     * structure, or any inflate/bounds malformation — never throws. */
   def decodePng(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
-    if (bytes == null || bytes.length < 45 || sniffMagic(bytes) != "png") return None
+    if (bytes == null || bytes.length < 45 || imageMagic(bytes) != "png") return None
     def u8(i: Int) = bytes(i) & 0xFF
     def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
     // IHDR is mandated first (spec §5.6); signature is 8 bytes
@@ -1187,7 +480,7 @@ object Multimodal {
     * screen are all handled; output is the FRAME's (w, h, rgb-top-down).
     * None for truncated/malformed streams — never throws. */
   def decodeGif(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
-    if (bytes == null || bytes.length < 14 || sniffMagic(bytes) != "gif") return None
+    if (bytes == null || bytes.length < 14 || imageMagic(bytes) != "gif") return None
     def u8(i: Int) = bytes(i) & 0xFF
     def le16(i: Int) = (u8(i + 1) << 8) | u8(i)
     var i = 6
@@ -1411,10 +704,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Decode ANY supported image container to (w, h, rgb-top-down): the
-    * codec-free BMP layout plus the compressed formats whose
-    * compression is implementable without media libraries (PNG via the
-    * JDK's Inflater, GIF via LZW, TIFF via LZW/Deflate/PackBits). */
   /** PackBits run-length decoding (TIFF 6.0 §9, the Apple RLE scheme):
     * control byte n in 0..127 → copy n+1 literals; n in -127..-1 → repeat
     * next byte 1-n times; -128 → no-op. None when output overruns
@@ -1548,7 +837,7 @@ object Multimodal {
     * — never throws. Raster capped at 256 MiB like the other
     * decoders. */
   def decodeTiff(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
-    if (bytes == null || bytes.length < 8 || sniffMagic(bytes) != "tiff") return None
+    if (bytes == null || bytes.length < 8 || imageMagic(bytes) != "tiff") return None
     val le = bytes(0) == 'I'
     def u8(i: Int) = bytes(i) & 0xFF
     def u16(i: Int) = if (le) (u8(i + 1) << 8) | u8(i) else (u8(i) << 8) | u8(i + 1)
@@ -1820,6 +1109,10 @@ object Multimodal {
     out
   }
 
+  /** Decode ANY supported image container to (w, h, rgb-top-down): the
+    * codec-free BMP layout plus the compressed formats whose
+    * compression is implementable without media libraries (PNG via the
+    * JDK's Inflater, GIF via LZW, TIFF via LZW/Deflate/PackBits). */
   def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] =
     decodeBmp(bytes).orElse(decodePng(bytes)).orElse(decodeGif(bytes))
       .orElse(decodeTiff(bytes))
@@ -1885,9 +1178,8 @@ object Multimodal {
 
   /** Binary image column → (id, w, h, dhash) fingerprints, one typed
     * mapPartitions pass (decode once per blob). Undecodable blobs and
-    * sub-9×8 images yield null dims/hash — kept, never a task failure
-    * (same null-safety contract as [[mediaMeta]]). Decodes BMP, PNG and
-    * GIF ([[decodeImage]]); a production deployment widens the dispatch
+    * sub-9×8 images yield null dims/hash — kept, never a task failure.
+    * Decodes BMP, PNG, GIF and TIFF ([[decodeImage]]); a production deployment widens the dispatch
     * to JPEG — the hash and everything downstream are format-agnostic. */
   def imageDHash(df: DataFrame, idCol: String, binCol: String): DataFrame = {
     val spark = df.sparkSession
@@ -1907,7 +1199,7 @@ object Multimodal {
   }
 
   /** Near-dup edges over ANY precomputed 64-bit perceptual fingerprint
-    * column (image dHash, audio energy hash, …): the SAME pigeonhole
+    * column (image dHash, …): the SAME pigeonhole
     * block-banding + salted grouping + exact Hamming verify as SimHash
     * text dedup — recall 1.0 for hamming ≤ blocks−1 by pigeonhole,
     * bucketed and salted so it scales like every other banded stage.
@@ -1928,200 +1220,4 @@ object Multimodal {
     * [[fingerprintNearDupEdges]]. */
   def imageNearDupEdges(hashes: DataFrame, cfg: DedupConfig): DataFrame =
     fingerprintNearDupEdges(hashes, "dhash", cfg)
-
-  /** Canonical 16-bit mono PCM WAV encoder — the inverse of
-    * [[decodeWavPcm]] for the one layout the sandbox can verify
-    * end-to-end, used to materialize synthetic audio columns whose
-    * samples are exactly known (fixtures and oracle rows). Samples are
-    * clamped to the signed-16-bit range. */
-  /** G.711 WAV writer (format tag 6 = A-law, 7 = μ-law; one byte per
-    * sample) for formula-provenance fixtures and the q_g711_decode oracle
-    * row — the encoded bytes ARE the payload (no compressor involved, so
-    * a DuckDB oracle can synthesize the identical wire from arithmetic). */
-  def encodeWavG711(sampleRate: Int, encoded: Array[Byte], alaw: Boolean): Array[Byte] = {
-    require(sampleRate > 0 && encoded != null, "rate > 0, bytes non-null")
-    val out = new Array[Byte](44 + encoded.length)
-    def putLe16(i: Int, v: Int): Unit = {
-      out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-    }
-    def putLe32(i: Int, v: Int): Unit = {
-      putLe16(i, v); putLe16(i + 2, v >>> 16)
-    }
-    def tag(i: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-        .copyToArray(out, i)
-    tag(0, "RIFF"); putLe32(4, out.length - 8); tag(8, "WAVE")
-    tag(12, "fmt "); putLe32(16, 16)
-    putLe16(20, if (alaw) 6 else 7)
-    putLe16(22, 1) // mono
-    putLe32(24, sampleRate)
-    putLe32(28, sampleRate) // byte rate: 1 byte/sample
-    putLe16(32, 1) // block align
-    putLe16(34, 8) // bits per sample
-    tag(36, "data"); putLe32(40, encoded.length)
-    encoded.copyToArray(out, 44)
-    out
-  }
-
-  def encodeWavPcm16(sampleRate: Int, samples: Array[Int]): Array[Byte] = {
-    require(sampleRate > 0 && samples != null, "rate > 0, samples non-null")
-    val out = new Array[Byte](44 + samples.length * 2)
-    def putLe16(i: Int, v: Int): Unit = {
-      out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-    }
-    def putLe32(i: Int, v: Int): Unit = {
-      putLe16(i, v); putLe16(i + 2, v >>> 16)
-    }
-    def tag(i: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-        .copyToArray(out, i)
-    tag(0, "RIFF"); putLe32(4, out.length - 8); tag(8, "WAVE")
-    tag(12, "fmt "); putLe32(16, 16)
-    putLe16(20, 1) // PCM
-    putLe16(22, 1) // mono
-    putLe32(24, sampleRate)
-    putLe32(28, sampleRate * 2) // byte rate
-    putLe16(32, 2) // block align
-    putLe16(34, 16) // bits per sample
-    tag(36, "data"); putLe32(40, samples.length * 2)
-    var i = 0
-    while (i < samples.length) {
-      putLe16(44 + i * 2, math.max(-32768, math.min(32767, samples(i))))
-      i += 1
-    }
-    out
-  }
-
-  /** Audio energy-difference hash: the dHash idea on the time axis — 65
-    * equal frames over the sample stream, one bit per adjacent-frame
-    * energy comparison, 64 bits. Recompressed or amplitude-rescaled
-    * copies keep most comparisons (scaling by c > 0 scales every frame
-    * mean by ~c), so near-identical audio lands within a small Hamming
-    * distance and [[fingerprintNearDupEdges]] gives audio near-dup dedup.
-    *
-    * INTEGER-EXACT by construction (SQL-replayable, no float anywhere):
-    *   - amplitude a(t) = |s(t)| of the 16-bit PCM sample (decoded floats
-    *     are s/32768 exactly, so |f|·32768 rounds back losslessly);
-    *   - sample t belongs to frame k = ⌊t·65/n⌋ (n ≥ 65 ⇒ every frame
-    *     non-empty because the frame index advances by ≤ 1 per sample);
-    *   - e(k) = floor-mean of a(t) over frame k;
-    *   - bit k = set iff e(k) > e(k+1).
-    * Returns None for n < 65 (an empty frame would divide by zero). */
-  def audioEnergyHash(samples: Array[Float]): Option[Long] = {
-    val n = if (samples == null) 0 else samples.length
-    if (n < 65) return None
-    val sum = new Array[Long](65)
-    val cnt = new Array[Long](65)
-    var t = 0
-    while (t < n) {
-      val k = (t.toLong * 65 / n).toInt
-      sum(k) += math.round(math.abs(samples(t)) * 32768f)
-      cnt(k) += 1
-      t += 1
-    }
-    var hash = 0L
-    var k = 0
-    while (k < 64) {
-      if (sum(k) / cnt(k) > sum(k + 1) / cnt(k + 1)) hash |= 1L << k
-      k += 1
-    }
-    Some(hash)
-  }
-
-  /** Decode ANY supported audio container to (rate, channels, normalized
-    * interleaved samples): WAV integer PCM (plain byte layout) or WAV
-    * IMA ADPCM. The audio twin of [[decodeImage]]. */
-  def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-    decodeWavPcm(bytes).orElse(decodeWavImaAdpcm(bytes))
-
-  /** Binary audio column → (id, sample_rate, n_samples, afp) fingerprints,
-    * one typed mapPartitions pass (decode once per blob). Undecodable
-    * blobs and sub-65-sample clips yield null rate/count/hash — kept,
-    * never a task failure (same null-safety contract as [[mediaMeta]]).
-    * Decodes WAV PCM and IMA ADPCM ([[decodeAudio]]); the hash and everything
-    * downstream are format-agnostic. */
-  def audioFingerprint(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id"), col(binCol).as("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bin) =>
-          decodeAudio(bin) match {
-            case Some((rate, _, samples)) =>
-              (id, Some(rate), Some(samples.length.toLong),
-                audioEnergyHash(samples))
-            case None => (id, None, None, None)
-          }
-        }
-      }
-      .toDF("id", "sample_rate", "n_samples", "afp")
-  }
-
-  /** Audio near-dup edges: [[audioFingerprint]] output through
-    * [[fingerprintNearDupEdges]]. */
-  def audioNearDupEdges(hashes: DataFrame, cfg: DedupConfig): DataFrame =
-    fingerprintNearDupEdges(hashes, "afp", cfg)
-
-  /** STUB frame-sampler: every `stride`-th fixed-size chunk of a media
-    * blob (stands in for video frame extraction; bounds output size the
-    * way a real sampler bounds frames). */
-  def sampleChunks(bytes: Array[Byte], chunk: Int, stride: Int): Seq[Array[Byte]] = {
-    if (bytes == null || bytes.length < chunk) Seq.empty
-    else (0 to (bytes.length - chunk) by (chunk * stride))
-      .map(off => java.util.Arrays.copyOfRange(bytes, off, off + chunk))
-  }
-
-  /** Per-row binary metadata + features ([[decodeFeatures]]: real decode
-    * for BMP/WAV-PCM, stub elsewhere), as one typed mapPartitions pass
-    * (one decode per blob; no per-column recompute). */
-  def describeBinary(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id"), col(binCol).as("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bin) =>
-          val n = if (bin == null) 0L else bin.length.toLong
-          (id, n, sniffMagic(bin), decodeFeatures(bin))
-        }
-      }
-      .toDF("id", "n_bytes", "magic", "features")
-  }
-
-  /** Typed media-metadata table from an opaque binary column — REAL header
-    * parsing (imageDims / wavMeta), one pass, null-safe: non-media or
-    * truncated blobs yield null metadata columns, never a task failure. */
-  def mediaMeta(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id"), col(binCol).as("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bin) =>
-          val n = if (bin == null) 0L else bin.length.toLong
-          val kind = sniffMagic(bin)
-          val img = imageDims(bin)
-          // one audio/video parse per blob, format-dispatched by the magic
-          val au = kind match {
-            case "riff" => wavMeta(bin).map(m => (m._1, m._2, m._4))
-            case "flac" => flacMeta(bin).map(m => (m._1, m._2, m._4))
-            case "mp3"  => mp3Meta(bin).map(m => (m._1, m._2, m._4))
-            case _      => None
-          }
-          val vid = kind match {
-            case "mp4"  => mp4Meta(bin)
-            case "webm" => webmMeta(bin)
-            case _      => None
-          }
-          val dims = img.orElse(vid.flatMap(_._2))
-          (id, n, kind,
-            dims.map(_._1), dims.map(_._2),
-            au.map(_._1), au.map(_._2),
-            au.map(_._3).orElse(vid.map(_._1)))
-        }
-      }
-      .toDF("id", "n_bytes", "magic", "width", "height",
-        "sample_rate", "channels", "duration_ms")
-  }
 }

@@ -68,6 +68,9 @@ import org.apache.spark.sql.functions._
   * and [[run]] neither returns nor throws while a forked thread still runs
   * Spark jobs. Each manifest's lineage and the stage order in
   * `SUMMARY.json` follow the graph, not thread timing (CheckpointStore).
+  * Every job carries a `spark.job.description`: its stage's name, or
+  * `prepare` (source prep and the `--by-lang` language list), `probe`
+  * (the shared probe frames) or `audit` (the collision audit).
   *
   * `--by-lang` runs the whole pipeline independently per language
   * partition (reference master_lang_split.py:130-148) under
@@ -95,6 +98,9 @@ import org.apache.spark.sql.functions._
   *     [--exact-join] [--contain T] [--contain-df-cap N]
   *     [--synth N]  (generate a deterministic synthetic corpus instead of
   *                   reading --input)
+  *
+  * `--input` and `--existing` are parquet page tables read with
+  * [[Sources.pages]] (the declared `Page.schema`, never inferred).
   */
 object Pipeline {
 
@@ -304,7 +310,7 @@ object Pipeline {
     if (args.synth > 0) Synth.pages(spark, args.synth, args.cfg.seed).toDF()
     else if (args.inputWarc.nonEmpty) Warc.pages(spark, args.inputWarc)
     else if (args.inputWet.nonEmpty) Warc.wetPages(spark, args.inputWet)
-    else spark.read.schema(Page.schema).parquet(args.input)
+    else Sources.pages(spark, args.input)
 
   private def sourceFingerprint(spark: SparkSession, args: Args): String =
     if (args.synth > 0) s"synth${args.synth}s${args.cfg.seed}"
@@ -466,7 +472,7 @@ object Pipeline {
     val pages =
       if (args.existing.isEmpty) pages3
       else {
-        val existingPages = spark.read.schema(Page.schema).parquet(args.existing)
+        val existingPages = Sources.pages(spark, args.existing)
         val fuzzy =
           if (!args.existingFuzzy) None
           else {
@@ -516,7 +522,7 @@ object Pipeline {
     // commits (or the run fails)
     val probe = new IncrementalDedup.Shared
     try {
-      val prep = prepare(spark, args, probe)
+      val prep = CheckpointStore.described(spark, "prepare")(prepare(spark, args, probe))
       val pages = prep.pages
       // `--link-rank N`: side artifact — host-level integer PageRank over the
       // crawl's own link graph (url + html columns), N iterations, written
@@ -534,8 +540,9 @@ object Pipeline {
         // own __null__ bucket via a null-safe predicate — they must neither
         // NPE the driver-side sort nor silently drop out of kept/assignments
         // (ADVICE r2); the payload lang column itself stays untouched.
-        val langs = pages.select(col("lang")).distinct()
-          .collect().map(r => Option(r.getString(0))).sortBy(_.getOrElse(""))
+        val langs = CheckpointStore.described(spark, "prepare")(
+          pages.select(col("lang")).distinct().collect())
+          .map(r => Option(r.getString(0))).sortBy(_.getOrElse(""))
         val results = langs.zipWithIndex.map { case (lOpt, i) =>
           val label = lOpt.getOrElse("__null__")
           val pred = lOpt.map(col("lang") === _).getOrElse(col("lang").isNull)
@@ -641,7 +648,8 @@ object Pipeline {
     // alongside the near-dup graph and is joined before `kept` starts
     val audit =
       if (!args.collisionCheck) None
-      else Some(Fork(Ids.idCollisions(docs, "id", "text")))
+      else Some(Fork(CheckpointStore.described(spark, "audit")(
+        Ids.idCollisions(docs, "id", "text"))))
     try runStages(spark, args, prep, store, docs, outRoot, audit)
     finally audit.foreach(_.await())
   }

@@ -98,13 +98,6 @@ object ScalingBench {
     val gcMs = new java.util.concurrent.atomic.AtomicLong
     val fetchWaitMs = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong
-    // per-stage attribution: stageId -> (runMs, cpuNs, gcMs, tasks)
-    val byStage = new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
-    val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      stageNames.put(e.stageInfo.stageId,
-        e.stageInfo.name.takeWhile(_ != '\n').take(60))
     override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       if (m != null) {
@@ -113,28 +106,14 @@ object ScalingBench {
         gcMs.addAndGet(m.jvmGCTime)
         fetchWaitMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
         tasks.incrementAndGet()
-        val a = byStage.computeIfAbsent(e.stageId, _ => new Array[Long](4))
-        a.synchronized {
-          a(0) += m.executorRunTime; a(1) += m.executorCpuTime
-          a(2) += m.jvmGCTime; a(3) += 1
-        }
       }
-    }
-    def stageReport: String = {
-      import scala.jdk.CollectionConverters._
-      byStage.asScala.toSeq.sortBy(-_._2(0)).take(10).map { case (sid, a) =>
-        val nm = Option(stageNames.get(sid)).getOrElse("?")
-        f"stage $sid%3d run ${a(0) / 1e3}%8.1f s  cpu ${a(1) / 1e9}%8.1f s  " +
-          f"gc ${a(2) / 1e3}%6.1f s  tasks ${a(3)}%4d  $nm"
-      }.mkString("\n")
     }
   }
 
   case class RunStats(
       sec: Double, n: Long, removed: Long, gcSec: Double, cpuSec: Double,
       taskRunSec: Double, taskCpuSec: Double, taskGcSec: Double,
-      fetchWaitSec: Double, tasks: Long, stageReport: String,
-      stealPct: Double)
+      fetchWaitSec: Double, tasks: Long, stealPct: Double)
 
   private def runOnce(cores: Int, input: String, cfg: DedupConfig): RunStats = {
     val spark = session(cores, s"scaling-$cores")
@@ -170,7 +149,7 @@ object ScalingBench {
       val stealPct = HostCanary.stealPct(stat0, HostCanary.procStat)
       RunStats(sec, n, removed, (gcMillis - gc0) / 1e3, (cpuNanos - cpu0) / 1e9,
         agg.runMs.get / 1e3, agg.cpuNs.get / 1e9, agg.gcMs.get / 1e3,
-        agg.fetchWaitMs.get / 1e3, agg.tasks.get, agg.stageReport, stealPct)
+        agg.fetchWaitMs.get / 1e3, agg.tasks.get, stealPct)
     } finally {
       spark.stop()
       fresh()
@@ -186,7 +165,7 @@ object ScalingBench {
     // materialize the corpus once, untimed, at full parallelism. Ids are the
     // CLI's xxhash64(url): star-hub election depends on the id values, so
     // only the CLI's ids give the CLI's `removed` on the same pages.
-    val input = sys.env.getOrElse("SPARK_GRAFT_CORPUS_ROOT", "/dev/shm") + s"/scaling_pages_$nDocs"
+    val input = s"/dev/shm/scaling_pages_$nDocs"
     val prep = session(coresB, "scaling-prep")
     if (!new java.io.File(s"$input/_SUCCESS").exists())
       Synth.corpus(prep, nDocs, cfg.seed).select(xxhash64(col("url")).as("id"), col("text"))
@@ -198,8 +177,6 @@ object ScalingBench {
     // honest analogue of two separate spark-submit jobs; a wrapper combines
     if (coresA == coresB) {
       val r = runOnce(coresA, input, cfg)
-      if (sys.env.contains("SPARK_GRAFT_STAGE_REPORT"))
-        System.err.println(s"[stages cores=$coresA]\n${r.stageReport}")
       println(f"""{"docs":$nDocs,"removed":${r.removed},"cores":$coresA,"sec":${r.sec}%.2f,""" +
         f""""gcSec":${r.gcSec}%.2f,"cpuSec":${r.cpuSec}%.1f,""" +
         f""""taskRunSec":${r.taskRunSec}%.1f,"taskCpuSec":${r.taskCpuSec}%.1f,""" +

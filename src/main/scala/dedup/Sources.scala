@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
 object Sources {
 
   /** Parquet page table: schema-enforced scan; column pruning + predicate
-    * pushdown verified in PlanSpec. `maxFiles` mirrors the reference's
+    * pushdown verified in PlanSpec. `dedup.Pipeline` reads `--input` and
+    * `--existing` through it. `maxFiles` mirrors the reference's
     * driver-side cap (exact_spark.py:62,100-111: sorted file list, capped). */
   def pages(spark: SparkSession, path: String, maxFiles: Option[Int] = None): DataFrame =
     maxFiles match {
@@ -36,159 +37,6 @@ object Sources {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** ORC page table: same declared-schema contract as [[pages]] (Spark's
-    * native vectorized ORC reader gives the same pruning/pushdown story as
-    * parquet — PlanSpec asserts PushedFilters reach the scan). */
-  def pagesOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Page.schema).orc(path)
-
-  /** CSV page table. CSV cannot carry the opaque `html: binary` payload,
-    * so the declared schema is the Page schema minus `html` (restored as a
-    * typed null column — downstream operators see the full contract).
-    * multiLine + quote-escape handles embedded newlines in `text`; a
-    * corrupt-record column surfaces malformed rows instead of dropping
-    * them (the [[pagesJsonl]] rule). */
-  def pagesCsv(spark: SparkSession, path: String): DataFrame = {
-    val csvSchema = org.apache.spark.sql.types.StructType(
-      Page.schema.fields.filterNot(_.name == "html"))
-      .add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    spark.read
-      .schema(csvSchema)
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("escape", "\"")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .csv(path)
-      .withColumn("html", lit(null).cast("binary"))
-      .select("url", "warc_ts", "html", "text", "lang", "_corrupt_record")
-  }
-
-  /** Avro page table. Spark's `format("avro")` lives in the separate
-    * spark-avro module, but the Avro CORE library ships with Spark itself
-    * — so this reads Avro Object Container Files directly with
-    * `DataFileStream` + `GenericDatumReader` in a per-file mapPartitions
-    * pass (the same sanctioned imperative-source shape as [[Warc.pages]]:
-    * streamed, one record in memory at a time, schema projected by NAME
-    * onto the Page contract). Field mapping is tolerant of the common
-    * wire spellings: `url`/`text`/`lang` as string or Avro `Utf8`,
-    * `html` as bytes or fixed, `warc_ts` as ISO-8601 string or
-    * epoch millis/micros long (Avro's two standard timestamp logical
-    * types). Missing fields land as typed nulls. Malformed FILES are
-    * skipped (corrupt container header); a malformed RECORD ends that
-    * file's stream early — never a task failure. */
-  def pagesAvro(spark: SparkSession, path: String, minPartitions: Int = 0): DataFrame = {
-    import spark.implicits._
-    val mp = if (minPartitions > 0) minPartitions
-             else spark.sparkContext.defaultParallelism
-    spark.sparkContext.binaryFiles(path, mp)
-      .flatMap { case (_, pds) =>
-        // STREAMED, like Warc.pages: one record in memory at a time — a
-        // multi-GB container must not buffer into a task-local list. The
-        // raw stream is closed on every path (corrupt header included).
-        val rawIn = try pds.open() catch { case _: Exception => null }
-        val reader: org.apache.avro.file.DataFileStream[org.apache.avro.generic.GenericRecord] =
-          if (rawIn == null) null
-          else try {
-            new org.apache.avro.file.DataFileStream[org.apache.avro.generic.GenericRecord](
-              rawIn,
-              new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
-          } catch { // not an Avro container: skip the FILE, release the handle
-            case _: Exception =>
-              try rawIn.close() catch { case _: Exception => }
-              null
-          }
-        if (reader == null) Iterator.empty
-        else {
-          val schema = reader.getSchema
-            def has(f: String) = schema.getField(f) != null
-            def str(r: org.apache.avro.generic.GenericRecord, f: String): String =
-              if (!has(f) || r.get(f) == null) null else r.get(f).toString
-            def bin(r: org.apache.avro.generic.GenericRecord, f: String): Array[Byte] =
-              if (!has(f)) null else r.get(f) match {
-                case null => null
-                case bb: java.nio.ByteBuffer =>
-                  val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a); a
-                case fx: org.apache.avro.generic.GenericFixed => fx.bytes()
-                case _ => null
-              }
-            def ts(r: org.apache.avro.generic.GenericRecord, f: String): java.sql.Timestamp =
-              if (!has(f)) null else r.get(f) match {
-                case null => null
-                case l: java.lang.Long =>
-                  // timestamp-millis vs -micros per the logical type of the
-                  // LONG branch — the branch this runtime value came from.
-                  // Unions may carry other annotated branches (string dates
-                  // etc.); taking "whichever logical type appears last"
-                  // would let an unrelated branch misparse every long.
-                  // (Avro unions cannot repeat a primitive type, so there
-                  // is at most one long branch.)
-                  def longLogical(s: org.apache.avro.Schema): String = s.getType match {
-                    case org.apache.avro.Schema.Type.LONG =>
-                      if (s.getLogicalType != null) s.getLogicalType.getName else null
-                    case org.apache.avro.Schema.Type.UNION =>
-                      var name: String = null
-                      val it = s.getTypes.iterator()
-                      while (it.hasNext) {
-                        val t = it.next()
-                        if (t.getType == org.apache.avro.Schema.Type.LONG)
-                          name = if (t.getLogicalType != null) t.getLogicalType.getName else null
-                      }
-                      name
-                    case _ => null
-                  }
-                  // Unannotated longs: hand-rolled writers commonly emit
-                  // epoch-MICROS without a logical type. |v| > 1e14 as
-                  // millis would be past year 5138 — read it as micros;
-                  // plausible magnitudes keep the Avro spec default (millis).
-                  val lt = longLogical(schema.getField(f).schema()) match {
-                    case null =>
-                      if (l > 100000000000000L || l < -100000000000000L)
-                        "timestamp-micros"
-                      else "timestamp-millis"
-                    case n => n
-                  }
-                  if (lt == "timestamp-micros")
-                    java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-                      l / 1000000L, (l % 1000000L) * 1000L))
-                  else new java.sql.Timestamp(l)
-                case other =>
-                  try java.sql.Timestamp.from(java.time.Instant.parse(other.toString))
-                  catch { case _: Exception => null }
-              }
-          new Iterator[Page] {
-            private var nextPage: Page = _
-            private var closed = false
-            private def closeQuietly(): Unit = if (!closed) {
-              closed = true
-              try reader.close() catch { case _: Exception => } // closes rawIn too
-            }
-            private def advance(): Unit =
-              if (nextPage == null && !closed) {
-                try {
-                  if (reader.hasNext) {
-                    val r = reader.next()
-                    nextPage = Page(str(r, "url"), ts(r, "warc_ts"), bin(r, "html"),
-                      str(r, "text"), str(r, "lang"))
-                  } else closeQuietly()
-                } catch { // malformed record: keep the prefix, end this file
-                  case _: Exception => closeQuietly()
-                }
-              }
-            override def hasNext: Boolean = { advance(); nextPage != null }
-            override def next(): Page = {
-              advance()
-              if (nextPage == null) throw new NoSuchElementException
-              val p = nextPage; nextPage = null; p
-            }
-          }
-        }
-      }
-      .toDS()
-      .toDF()
-  }
-
   /** Text-file fallback (S3, fuzzy_spark.py:279-281): one line = one doc;
     * url is synthesized from the content hash (stable across reruns). */
   def pagesText(spark: SparkSession, path: String): DataFrame =
@@ -199,49 +47,4 @@ object Sources {
         lit(null).cast("binary").as("html"),
         col("value").as("text"),
         lit(null).cast("string").as("lang"))
-
-  /** Bucketed (co-located) sink: write `df` as an EXTERNAL bucketed table
-    * — parquet under `path`, hash-bucketed and sorted by `key` into
-    * `buckets` files per partition, registered in the catalog so the
-    * bucketing metadata survives for later reads.
-    *
-    * This is the 100-TB join-amortization primitive: two tables bucketed
-    * the same way (same key, same bucket count) equi-join on that key
-    * with ZERO Exchange on either side (asserted in PlanSpec) — the 100-TB
-    * shuffle is paid ONCE at write time, then every downstream dedup
-    * round, incremental join or audit query against the corpus is
-    * shuffle-free on that key. The kept-corpus <-> assignments <->
-    * signature-index family all join on doc id, so a corpus stored this
-    * way amortizes its biggest cost across every future run.
-    *
-    * Spark requires bucketed writes to go through the catalog
-    * (`saveAsTable`); with `path` set the table is external — data
-    * outlives the catalog entry and `recoverBucketedTable` re-registers
-    * it in a fresh session (the resume story for bucketed corpora). */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-      key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .format("parquet")
-      .option("path", path)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-
-  /** Re-register an external bucketed table written by [[writeBucketed]]
-    * in the current session's catalog (idempotent), and return it. A
-    * plain `spark.read.parquet(path)` of the same files would WORK but
-    * lose the bucketing metadata — and with it the shuffle-free join. */
-  def recoverBucketedTable(spark: SparkSession, table: String, path: String,
-      key: String, buckets: Int): DataFrame = {
-    if (!spark.catalog.tableExists(table)) {
-      val schema = spark.read.parquet(path).schema
-      val cols = schema.map(f =>
-        s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-      spark.sql(
-        s"""CREATE TABLE `$table` ($cols) USING parquet
-           |LOCATION '$path'
-           |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $buckets BUCKETS""".stripMargin)
-    }
-    spark.table(table)
-  }
 }

@@ -846,6 +846,17 @@ class EndToEndSpec extends AnyFunSuite {
         s"the Bloom build ${bloom.map(j => j.start -> j.end)}")
   }
 
+  test("--existing --existing-fuzzy: every job carries a description, the shared " +
+      "probe frames' as probe and the collision audit's as audit") {
+    val dir = incrementalFixture("probe_described")
+    val (_, jobs, _) = recorded(Pipeline.run(spark, incrementalArgs(dir)))
+    assert(jobs.nonEmpty)
+    val bare = jobs.filter(_.desc == null)
+    assert(bare.isEmpty, s"jobs without a description:\n${bare.mkString("\n")}")
+    assert(jobs.exists(_.desc == "probe"), jobs.map(_.desc).distinct)
+    assert(jobs.exists(_.desc == "audit"), jobs.map(_.desc).distinct)
+  }
+
   test("a forked stage's failure fails FuzzyDedup.run with that exception, and run " +
       "waits for a forked stage before it throws") {
     import org.apache.spark.sql.DataFrame

@@ -37,150 +37,6 @@ class SourcesSpec extends AnyFunSuite {
     df.unpersist()
   }
 
-  test("pagesOrc: schema-enforced ORC roundtrip") {
-    val dir = Files.createTempDirectory("orc").toString
-    Synth.pages(spark, 40L).toDF().write.mode("overwrite").orc(dir)
-    val back = Sources.pagesOrc(spark, dir)
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
-      Page.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(back.count() === 40L)
-    // payload survives byte-identically (the text-extraction invariant)
-    import org.apache.spark.sql.functions._
-    val a = Synth.pages(spark, 40L).toDF()
-      .select(col("url"), col("text")).collect().map(r => (r.getString(0), r.getString(1))).sorted
-    val b = back.select(col("url"), col("text")).collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(a.toSeq === b.toSeq)
-  }
-
-  test("pagesAvro: container files via the Avro core lib — strings, bytes, " +
-      "both timestamp logical types, missing fields, corrupt file skipped") {
-    import org.apache.avro.{Schema, SchemaBuilder}
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    import org.apache.avro.file.DataFileWriter
-    val dir = Files.createTempDirectory("avro")
-    // file 1: full schema, timestamp-micros logical type, binary html
-    val s1: Schema = SchemaBuilder.record("page").fields()
-      .optionalString("url")
-      .name("warc_ts").`type`(org.apache.avro.LogicalTypes.timestampMicros()
-        .addToSchema(Schema.create(Schema.Type.LONG))).noDefault()
-      .optionalBytes("html")
-      .optionalString("text")
-      .optionalString("lang")
-      .endRecord()
-    val w1 = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](s1))
-    w1.create(s1, dir.resolve("p1.avro").toFile)
-    val r1 = new GenericData.Record(s1)
-    r1.put("url", "https://a/1")
-    r1.put("warc_ts", 1709633130000000L) // 2024-03-05T10:05:30Z in micros
-    r1.put("html", java.nio.ByteBuffer.wrap("<p>hi</p>".getBytes("UTF-8")))
-    r1.put("text", "hello from avro")
-    r1.put("lang", "en")
-    w1.append(r1)
-    val r2 = new GenericData.Record(s1)
-    r2.put("url", "https://a/2"); r2.put("warc_ts", 0L)
-    w1.append(r2) // nulls for html/text/lang
-    w1.close()
-    // file 2: partial schema (no html/lang), ISO-string timestamp
-    val s2: Schema = SchemaBuilder.record("page").fields()
-      .optionalString("url").optionalString("warc_ts").optionalString("text")
-      .endRecord()
-    val w2 = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](s2))
-    w2.create(s2, dir.resolve("p2.avro").toFile)
-    val r3 = new GenericData.Record(s2)
-    r3.put("url", "https://b/1"); r3.put("warc_ts", "2024-06-01T00:00:00Z")
-    r3.put("text", "string-timestamp row")
-    w2.append(r3); w2.close()
-    // file 3: not avro at all — skipped, not thrown
-    Files.write(dir.resolve("junk.avro"), "Obj_not_really".getBytes)
-    val df = Sources.pagesAvro(spark, dir.toString)
-    assert(df.schema.map(f => (f.name, f.dataType)) ===
-      Page.schema.map(f => (f.name, f.dataType)))
-    val rows = df.collect().map(r => r.getString(0) -> r).toMap
-    assert(rows.keySet === Set("https://a/1", "https://a/2", "https://b/1"))
-    assert(new String(rows("https://a/1").getAs[Array[Byte]]("html"), "UTF-8") === "<p>hi</p>")
-    assert(rows("https://a/1").getAs[java.sql.Timestamp]("warc_ts").toInstant
-      === java.time.Instant.parse("2024-03-05T10:05:30Z"))
-    assert(rows("https://a/1").getAs[String]("text") === "hello from avro")
-    assert(rows("https://a/2").getAs[String]("text") === null)
-    assert(rows("https://b/1").getAs[java.sql.Timestamp]("warc_ts").toInstant
-      === java.time.Instant.parse("2024-06-01T00:00:00Z"))
-    assert(rows("https://b/1").getAs[Array[Byte]]("html") === null)
-  }
-
-  test("pagesAvro: union logical type resolves from the LONG branch; " +
-      "unannotated micros-magnitude longs heuristically parsed") {
-    import org.apache.avro.Schema
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    import org.apache.avro.file.DataFileWriter
-    val dir = Files.createTempDirectory("avrots")
-    def strOpt = Schema.createUnion(java.util.Arrays.asList(
-      Schema.create(Schema.Type.NULL), Schema.create(Schema.Type.STRING)))
-    def field(n: String, s: Schema) = new Schema.Field(n, s, null,
-      Schema.Field.NULL_DEFAULT_VALUE)
-
-    // file 1: warc_ts = union [null, BARE long, string(uuid)] — an
-    // unrelated annotated branch. The old resolver took "whichever
-    // logical type appears last in the union" (uuid here), falling back
-    // to millis: a hand-rolled writer's epoch-micros long misparsed
-    // ~1000x into the future. The long branch is unannotated, so the
-    // magnitude heuristic must kick in per value.
-    val uuidStr = org.apache.avro.LogicalTypes.uuid()
-      .addToSchema(Schema.create(Schema.Type.STRING))
-    val u1 = Schema.createUnion(java.util.Arrays.asList(
-      Schema.create(Schema.Type.NULL), Schema.create(Schema.Type.LONG), uuidStr))
-    val s1 = Schema.createRecord("page", null, "t", false)
-    s1.setFields(java.util.Arrays.asList(
-      field("url", strOpt), field("warc_ts", u1), field("text", strOpt)))
-    val w1 = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](s1))
-    w1.create(s1, dir.resolve("u1.avro").toFile)
-    val r1 = new GenericData.Record(s1)
-    r1.put("url", "https://u/micros"); r1.put("warc_ts", 1709633130000000L)
-    w1.append(r1)
-    val r2 = new GenericData.Record(s1)
-    r2.put("url", "https://u/millis"); r2.put("warc_ts", 1709633130000L)
-    w1.append(r2); w1.close()
-
-    // file 2: warc_ts = union [null, long(timestamp-micros)] — the branch
-    // annotation must win even at small magnitudes (50s after epoch)
-    val tsMicros = org.apache.avro.LogicalTypes.timestampMicros()
-      .addToSchema(Schema.create(Schema.Type.LONG))
-    val u2 = Schema.createUnion(java.util.Arrays.asList(
-      Schema.create(Schema.Type.NULL), tsMicros))
-    val s2 = Schema.createRecord("page", null, "t", false)
-    s2.setFields(java.util.Arrays.asList(
-      field("url", strOpt), field("warc_ts", u2), field("text", strOpt)))
-    val w2 = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](s2))
-    w2.create(s2, dir.resolve("u2.avro").toFile)
-    val r3 = new GenericData.Record(s2)
-    r3.put("url", "https://u/annotated"); r3.put("warc_ts", 50000000L)
-    w2.append(r3); w2.close()
-
-    val rows = Sources.pagesAvro(spark, dir.toString).collect()
-      .map(r => r.getString(0) -> r.getAs[java.sql.Timestamp]("warc_ts").toInstant).toMap
-    assert(rows("https://u/micros") === java.time.Instant.parse("2024-03-05T10:05:30Z"))
-    assert(rows("https://u/millis") === java.time.Instant.parse("2024-03-05T10:05:30Z"))
-    assert(rows("https://u/annotated") === java.time.Instant.parse("1970-01-01T00:00:50Z"))
-  }
-
-  test("pagesCsv: quoted multiline text, typed null html, corrupt-record surfacing") {
-    val dir = Files.createTempDirectory("csv")
-    val f = dir.resolve("pages.csv")
-    Files.writeString(f,
-      "url,warc_ts,text,lang\n" +
-        "https://a/1,2024-01-02 03:04:05,\"line one\nline two\",en\n" +
-        "https://a/2,not-a-timestamp,plain text,de\n")
-    import org.apache.spark.sql.functions._
-    val df = Sources.pagesCsv(spark, f.toString).cache()
-    assert(df.schema.fieldNames.take(5).toSeq === Page.schema.fieldNames.toSeq)
-    assert(df.schema("html").dataType === org.apache.spark.sql.types.BinaryType)
-    val good = df.where(col("_corrupt_record").isNull).collect()
-    assert(good.length === 1)
-    assert(good.head.getAs[String]("text") === "line one\nline two")
-    assert(good.head.getAs[java.sql.Timestamp]("warc_ts") !== null)
-    assert(df.where(col("_corrupt_record").isNotNull).count() === 1L) // bad timestamp row
-    df.unpersist()
-  }
-
   test("pagesText: one line = one doc with stable content-hash url") {
     val dir = Files.createTempDirectory("txt")
     val f = dir.resolve("docs.txt")
@@ -192,45 +48,5 @@ class SourcesSpec extends AnyFunSuite {
       .select("url").collect().map(_.getString(0)).sorted
     assert(urls1.length === 2)
     assert(urls1.toSeq === urls2.toSeq)
-  }
-
-  test("writeBucketed + recoverBucketedTable: data round-trips, bucketing " +
-      "metadata survives catalog loss, co-located join is exchange-free") {
-    import spark.implicits._
-    val dirA = Files.createTempDirectory("bktA").toString
-    val dirB = Files.createTempDirectory("bktB").toString
-    val a = (0L until 500L).map(i => (i, s"text $i")).toDF("id", "text")
-    val b = (0L until 500L by 2).map(i => (i, i * 10)).toDF("id", "score")
-    Sources.writeBucketed(a, "bkt_a", dirA, "id", 4)
-    Sources.writeBucketed(b, "bkt_b", dirB, "id", 4)
-    // at this toy size the planner prefers a broadcast join (which also
-    // avoids shuffling, but proves nothing about bucketing) — disable it
-    // so the plan must choose between Exchange+SMJ and the bucketed scan
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "id")
-      assert(joined.count() === 250L)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("ShuffleExchange"),
-        s"bucketed-by-id join must not shuffle either side:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"bucketed scan used:\n$plan")
-      // catalog loss (new session / resume): re-register from files only
-      spark.sql("DROP TABLE bkt_b")
-      val recovered = Sources.recoverBucketedTable(spark, "bkt_b", dirB, "id", 4)
-      assert(recovered.count() === 250L)
-      val joined2 = spark.table("bkt_a").join(recovered, "id")
-      assert(joined2.count() === 250L)
-      val plan2 = joined2.queryExecution.executedPlan.toString
-      assert(!plan2.contains("ShuffleExchange") && plan2.contains("Bucketed: true"),
-        s"recovered table keeps the shuffle-free join:\n$plan2")
-      // idempotent when the table already exists
-      assert(Sources.recoverBucketedTable(spark, "bkt_b", dirB, "id", 4)
-        .count() === 250L)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bkt_a")
-      spark.sql("DROP TABLE IF EXISTS bkt_b")
-    }
   }
 }
