@@ -300,37 +300,6 @@ class CheckpointStore(
     outStream.close()
   }
 
-  /** Iceberg-style snapshot listing: one row per committed stage under
-    * this root — (stage, snapshot_id, config_hash, rows, files, bytes,
-    * wall_sec, lineage) — the ops/audit surface ("which stages exist,
-    * how big, how long, derived from what"). Driver-side O(#stages)
-    * manifest reads, no data scan. */
-  def stageReport(): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val rootPath = new Path(root)
-    val names =
-      if (!fs.exists(rootPath)) Seq.empty[String]
-      else fs.listStatus(rootPath).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(n => fs.exists(manifestPath(n)))
-        .sorted
-    val rows = names.flatMap { n =>
-      readManifest(n).map { node =>
-        (node.get("stage").asText(),
-          node.get("snapshot_id").asText(),
-          node.get("config_hash").asText(),
-          node.get("rows").asLong(),
-          if (node.has("files")) node.get("files").asLong() else -1L,
-          manifestBytes(node),
-          node.get("wall_sec").asDouble(),
-          node.get("lineage").elements().asScala.map(_.asText()).toSeq)
-      }
-    }
-    rows.toDF("stage", "snapshot_id", "config_hash", "rows", "files",
-      "bytes", "wall_sec", "lineage")
-  }
-
   /** Write `<root>/SUMMARY.json`: this RUN's lineage in graph order (the
     * calling thread's lineage, then any stage no join brought into it) —
     * per stage (rows, bytes, wall_sec, start_ms, snapshot id, sequence,

@@ -68,9 +68,10 @@ import org.apache.spark.sql.functions._
   * and [[run]] neither returns nor throws while a forked thread still runs
   * Spark jobs. Each manifest's lineage and the stage order in
   * `SUMMARY.json` follow the graph, not thread timing (CheckpointStore).
-  * Every job carries a `spark.job.description`: its stage's name, or
-  * `prepare` (source prep and the `--by-lang` language list), `probe`
-  * (the shared probe frames) or `audit` (the collision audit).
+  * Every job carries a `spark.job.description`: its stage's name,
+  * `prepare` (source prep, the `--by-lang` language list), `probe` (the
+  * `--existing` probe), `audit` (the collision audit) or the side artifact
+  * it writes (`link_rank`, `soft_weights`, `export`, `cdc_report`).
   *
   * `--by-lang` runs the whole pipeline independently per language
   * partition (reference master_lang_split.py:130-148) under
@@ -468,10 +469,11 @@ object Pipeline {
     // `share` materialises what the probe's readers read more than once.
     // The corpus index is built first: with a `Shared` share its shingling
     // and MinHash start on their own threads and overlap the exact probe's
-    // eager Bloom build below.
+    // eager Bloom build below. The Bloom builds run on this thread, so the
+    // branch carries the `probe` description itself.
     val pages =
       if (args.existing.isEmpty) pages3
-      else {
+      else CheckpointStore.described(spark, "probe") {
         val existingPages = Sources.pages(spark, args.existing)
         val fuzzy =
           if (!args.existingFuzzy) None
@@ -528,7 +530,7 @@ object Pipeline {
       // crawl's own link graph (url + html columns), N iterations, written
       // under the output root for downstream quality weighting. Small
       // (O(hosts)) and deterministic; overwritten per run, not checkpointed.
-      if (args.linkRank > 0) {
+      if (args.linkRank > 0) CheckpointStore.described(spark, "link_rank") {
         LinkGraph.pageRankInt(LinkGraph.hostEdges(pages), args.linkRank)
           .write.mode("overwrite").parquet(s"${args.output}/host_ranks")
       }
@@ -674,7 +676,7 @@ object Pipeline {
     // FuzzyDedup.softWeights) lands beside the checkpoint chain; the
     // kept/removal flow is unchanged, so a consumer can choose hard
     // removal (kept) or weighted retention (ids + soft_weights) per use.
-    if (args.softWeights) {
+    if (args.softWeights) CheckpointStore.described(spark, "soft_weights") {
       FuzzyDedup.softWeights(assignments)
         .write.mode("overwrite").parquet(s"$outRoot/soft_weights")
     }
@@ -851,7 +853,7 @@ object Pipeline {
     // jsonl.gz, ORC, CSV) beside the parquet checkpoint — the checkpoint
     // chain itself stays parquet (the resume contract). Binary html is
     // base64 in json, dropped for csv (csv cannot carry binary).
-    if (args.exportFormat.nonEmpty) {
+    if (args.exportFormat.nonEmpty) CheckpointStore.described(spark, "export") {
       val out = s"$outRoot/export"
       args.exportFormat match {
         case "jsonl" => kept.write.mode("overwrite").json(out)
@@ -872,7 +874,7 @@ object Pipeline {
     // answers "what would a chunk store save on what ships" beside the
     // document-level accounting. Written to <outRoot>/cdc_report; the
     // one-line rollup goes to stdout with the run summary.
-    if (args.cdcMaskBits > 0) {
+    if (args.cdcMaskBits > 0) CheckpointStore.described(spark, "cdc_report") {
       val blobs = kept.select(col("id"),
         encode(coalesce(col("text"), lit("")), "UTF-8").as("bin"))
       val report = Cdc.chunkStats(blobs, "id", "bin", args.cdcMaskBits)

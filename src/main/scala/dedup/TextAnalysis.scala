@@ -43,21 +43,6 @@ object TextAnalysis {
       .withColumn("is_short", (tokenCountWs(t) < lit(5)).cast("int"))
   }
 
-  /** Composite quality score in [0,1] (heuristic; not oracle-compared):
-    * rewards mid-length docs, penalizes low token diversity and digit
-    * soup — the length/punct/stopword-ratio family of filters. */
-  def qualityScore(df: DataFrame, textCol: String): DataFrame = {
-    val q = qualityFeatures(df, textCol)
-    q.withColumn("quality",
-      round(
-        least(col("n_tokens").cast("double") / 50.0, lit(1.0)) * 0.4 +
-          when(col("n_tokens") > 0,
-            col("n_distinct_tokens").cast("double") / col("n_tokens")).otherwise(0.0) * 0.4 +
-          when(col("n_chars2") > 0,
-            lit(1.0) - col("n_digits").cast("double") / col("n_chars2")).otherwise(0.0) * 0.2,
-        6))
-  }
-
   /** Gopher-style document quality gate (Rae et al. 2021 §A1.1 rules, the
     * standard pre-dedup filter of webtext pipelines; C4 uses the same
     * family). Pure Catalyst — codegen'd, pushdown-friendly — and every

@@ -30,10 +30,6 @@ object TextNorm {
   def tokenize(text: String): Array[String] =
     NonWord.split(text.toLowerCase(Locale.ROOT), -1)
 
-  /** Token count as the min-length filter sees it (reference
-    * fuzzy_spark2.py:150-178 counts ALL split results, empties included). */
-  def tokenCount(text: String): Int = tokenize(text).length
-
   /** Word n-gram shingle strings. Empty iterator if fewer than `minLength`
     * tokens; a single whole-sequence shingle if fewer than `n` tokens. */
   def wordShingles(tokens: Array[String], n: Int, minLength: Int): Iterator[String] = {

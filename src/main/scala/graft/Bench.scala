@@ -134,8 +134,9 @@ object Bench {
     // one untimed warmup pass (same data): codegen compilation + JIT of
     // the hot loops otherwise lands in the first timed run of each query —
     // measured 2-7× inflation at this toy scale (a production job runs
-    // each plan for hours; steady state is the honest number). Same
-    // protocol as ScalingBench's untimed warmup slice.
+    // each plan for hours; steady state is the honest number). The
+    // micro-suite times warm plans; the CLI scaling gate
+    // (tools/run_scaling.sh) times cold ones, JIT included.
     val names = headline.filter(n => only.isEmpty || only(n))
     names.foreach { name =>
       try qmap(name)(spark, sfDir).count()

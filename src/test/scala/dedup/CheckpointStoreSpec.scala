@@ -76,25 +76,6 @@ class CheckpointStoreSpec extends AnyFunSuite {
     assert(reads > readsBefore2, "time travel not through seam")
   }
 
-  test("stageReport: one snapshot row per committed stage, bytes/lineage populated") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("rpt").toString
-    val store = new CheckpointStore(spark, root, "cfgR")
-    store.stage("alpha") { (1 to 50).toDF("x") }
-    store.stage("beta") { (1 to 7).toDF("y") } // lineage: alpha committed first
-    val rep = store.stageReport().collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(rep.keySet === Set("alpha", "beta"))
-    assert(rep("alpha").getLong(3) === 50L && rep("beta").getLong(3) === 7L)
-    assert(rep("alpha").getLong(5) > 0L, "bytes must come from the manifest file sizes")
-    assert(rep("beta").getSeq[String](7) === Seq("alpha"))
-    assert(rep("alpha").getString(2) === "cfgR")
-    // empty root: empty report, no throw
-    val empty = new CheckpointStore(spark,
-      Files.createTempDirectory("rpt2").toString, "x")
-    assert(empty.stageReport().count() === 0L)
-  }
-
   test("--export-format jsonl.gz: interchange copy beside the parquet checkpoints") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("exp").toString

@@ -849,12 +849,19 @@ class EndToEndSpec extends AnyFunSuite {
   test("--existing --existing-fuzzy: every job carries a description, the shared " +
       "probe frames' as probe and the collision audit's as audit") {
     val dir = incrementalFixture("probe_described")
-    val (_, jobs, _) = recorded(Pipeline.run(spark, incrementalArgs(dir)))
+    // the side artifacts' writes run outside every stage too
+    val (_, jobs, _) = recorded(Pipeline.run(spark, incrementalArgs(dir,
+      "--link-rank", "1", "--soft-weights", "--export-format", "jsonl", "--cdc-report", "6")))
     assert(jobs.nonEmpty)
     val bare = jobs.filter(_.desc == null)
     assert(bare.isEmpty, s"jobs without a description:\n${bare.mkString("\n")}")
     assert(jobs.exists(_.desc == "probe"), jobs.map(_.desc).distinct)
     assert(jobs.exists(_.desc == "audit"), jobs.map(_.desc).distinct)
+    // the eager Bloom builds run on the caller's thread, inside source prep
+    val probeCode = jobs.filter(_.stages.exists(n =>
+      n.contains("BloomPrune.scala") || n.contains("IncrementalDedup.scala")))
+    assert(probeCode.nonEmpty && probeCode.forall(_.desc == "probe"),
+      s"probe jobs not described as probe:\n${probeCode.mkString("\n")}")
   }
 
   test("a forked stage's failure fails FuzzyDedup.run with that exception, and run " +

@@ -9,18 +9,10 @@ import scala.jdk.CollectionConverters._
   * traced driver (`perfbench/trace/Trace.scala`, compiled against
   * `src/main`). A file reaches another when, with comments and string
   * literals stripped, it names one of the other file's top-level objects,
-  * classes or traits. The files no root reaches must equal the allowlist,
-  * so a subsystem no entry point uses cannot be added or left behind
-  * unnoticed.
+  * classes or traits. No file may be left unreached, so a subsystem no
+  * entry point uses cannot be added or left behind unnoticed.
   */
 class ReachabilitySpec extends AnyFunSuite {
-
-  /** Unreached files that are known and scheduled for deletion. */
-  private val allowlist = Set(
-    // the image half of Multimodal (codecs, dHash and its near-dup edges);
-    // the next deletion step of ROADMAP direction 2 removes it and empties
-    // this list
-    "Multimodal.scala")
 
   private def isIdent(c: Char) = Character.isLetterOrDigit(c) || c == '_'
 
@@ -121,8 +113,9 @@ class ReachabilitySpec extends AnyFunSuite {
     (files.keySet -- seen).map(_.getFileName.toString)
   }
 
+  // the allowlist is gone; the title keeps its wording so the test's id stays
   test("every main source file is reached from an entry point, except the allowlist") {
-    assert(unreached() === allowlist)
+    assert(unreached() === Set.empty[String])
   }
 
   test("strip drops comments and literals but keeps interpolated code") {

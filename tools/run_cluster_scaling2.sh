@@ -4,13 +4,16 @@
 # e.g. "1000000 2 1 1 4 out.jsonl" = 1 executor×1c vs 4 executors×1c,
 #      "1000000 2 4 4 16 out.jsonl" = 1 executor×4c vs 4 executors×4c.
 # Executor count = total_cores / exec_cores; each executor is its own JVM
-# (own heap, shuffle server) — the real multi-executor topology.
-# SPARK_GRAFT_SHUFFLE_PARTITIONS pins the partition count so both levels
-# run the IDENTICAL physical plan; only the executor count differs.
+# (own heap, shuffle server) — the real multi-executor topology. Each run
+# is the dedup.Pipeline CLI on `--synth <docs>` with a fresh, empty
+# --output, one JSON line per run (see tools/scaling_run.sh).
+# SPARK_GRAFT_CPUS (default 16) pins the shuffle partition count so both
+# levels run the IDENTICAL physical plan; only the executor count differs.
 set -u
 DOCS=$1; REPS=$2; EXEC_CORES=$3; CORES_A=$4; CORES_B=$5; OUT=$6
 : "${SPARK_HOME:?set SPARK_HOME to the Spark distribution}"
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+. "$ROOT/tools/scaling_run.sh"
 JAR="$ROOT/target/scala-2.13/dedupspark_2.13-0.1.0.jar"
 MASTER=spark://localhost:7077
 
@@ -44,11 +47,10 @@ EXEC_JVM_OPTS="-XX:ParallelGCThreads=$((EXEC_CORES + 1)) -XX:ConcGCThreads=1 -XX
 run() { # total_cores
   local CORES=$1
   echo "== executors $((CORES / EXEC_CORES))x${EXEC_CORES}c $(date +%H:%M:%S) ==" >> "$OUT"
-  SPARK_GRAFT_MASTER=$MASTER \
-  SPARK_GRAFT_SHUFFLE_PARTITIONS=${SPARK_GRAFT_SHUFFLE_PARTITIONS:-16} \
+  scaling_run "$DOCS" "$CORES" "$OUT" env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
   "$SPARK_HOME/bin/spark-submit" \
     --master "$MASTER" \
-    --class dedup.ScalingBench \
+    --class dedup.Pipeline \
     --driver-memory 8g \
     --conf spark.executor.cores="$EXEC_CORES" \
     --conf spark.executor.memory=12g \
@@ -60,11 +62,11 @@ run() { # total_cores
     --conf spark.cores.max="$CORES" \
     --conf spark.ui.enabled=false \
     --conf spark.sql.session.timeZone=UTC \
-    "$JAR" "$DOCS" "$CORES" "$CORES" 2>/dev/null | grep -E "^\{" >> "$OUT"
+    "$JAR"
 }
 
 for i in $(seq 1 "$REPS"); do
-  run "$CORES_A"
-  run "$CORES_B"
+  run "$CORES_A" || exit 1
+  run "$CORES_B" || exit 1
 done
 echo "== done $(date +%H:%M:%S) ==" >> "$OUT"
